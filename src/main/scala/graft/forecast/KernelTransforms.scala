@@ -66,10 +66,12 @@ private[graft] object KernelTransforms {
     case _                       => None
   }
 
-  /** Twins for a whole chain (fit order), or None if any stage lacks one. */
+  /** Twins for a whole chain (fit order), or None if any stage lacks one
+    * or the chain opens with a standard scaler ([[LocalScaler.sumMomentsFirst]]).
+    */
   def chainOf(ts: Seq[TargetTransform]): Option[Seq[KernelTransform]] = {
     val ks = ts.map(kernelOf)
-    if (ks.forall(_.isDefined)) Some(ks.flatten) else None
+    if (ks.forall(_.isDefined) && !LocalScaler.sumMomentsFirst(ts)) Some(ks.flatten) else None
   }
 
   private final class DiffKernel(ds: Seq[Int]) extends KernelTransform {

@@ -328,35 +328,47 @@ private[graft] object LocalLoop {
   private def advancedDsType(p: PanelFrame): DataType =
     p.df.select(p.freq.advance(p.ds, lit(1)).as("__t")).schema.head.dataType
 
-  /** Kernel input layout: hash-partition by id, series contiguous and
-    * ascending within each partition. At one task per core, hash placement
-    * leaves partitions carrying several times the mean series count and the
-    * stage waits on that straggler (r13: bench_predict_h14 wall ≈ 2× CPU/32
-    * at 32 partitions); oversplitting to `kernelTaskFactor` × the session's
-    * shuffle partitions (default 4×) bounds the imbalance. The oversplit is
-    * SIZE-GATED: it only engages while each split task still holds at least
-    * `kernelMinPartitionBytes` (default 8 MB) of input — below that floor
-    * the extra tasks are pure scheduling + shuffle-block overhead (measured
-    * at sf0.1/32 cores: a flat 4× split regressed the interval-CV family
-    * 0.6-0.75×, restored by the gate), while at scale the per-task input is
-    * far above it and the straggler bound is what matters. Both knobs are
-    * conf-scoped; the base multiplies whatever partitioning the session (or
-    * AQE) chose, not a local constant. Per-series results are
-    * partitioning-independent, so values are unchanged (ForecastSpec's
-    * fused-vs-driver bit-identity pins this).
+  /** Kernel oversplit ceiling, as a multiple of the shuffle partitions. */
+  private val KernelTaskFactor = 4
+  /** Input bytes each oversplit kernel task must still hold. */
+  private val KernelMinPartitionBytes = 8L << 20
+
+  /** Kernel task count for a panel of `sizeInBytes` (None = the estimate
+    * failed) over `base` shuffle partitions. At one task per core, hash
+    * placement leaves partitions carrying several times the mean series
+    * count and the stage waits on that straggler (r13: bench_predict_h14
+    * wall ≈ 2× CPU/32 at 32 partitions); oversplitting up to
+    * [[KernelTaskFactor]] × base bounds the imbalance. The oversplit is
+    * SIZE-GATED: it only engages while each task still holds
+    * [[KernelMinPartitionBytes]] of input — below that floor the extra tasks
+    * are pure scheduling + shuffle-block overhead (measured at sf0.1/32
+    * cores: a flat 4× split regressed the interval-CV family 0.6-0.75×).
+    * The gate fails CLOSED: an estimate at or above `unknownAt` (Catalyst's
+    * defaultSizeInBytes, what it reports when it cannot size a plan) or a
+    * failed estimate keeps `base`.
+    */
+  private[forecast] def kernelTasks(base: Int, sizeInBytes: Option[BigInt],
+                                    unknownAt: BigInt): Int =
+    sizeInBytes.filter(_ < unknownAt) match {
+      case Some(bytes) =>
+        val cap = math.min(base.toLong * KernelTaskFactor, Int.MaxValue.toLong).toInt
+        val bySize = (bytes / KernelMinPartitionBytes).min(BigInt(Int.MaxValue)).toInt
+        math.max(base, math.min(cap, bySize))
+      case None => base
+    }
+
+  /** Kernel input layout: hash-partition by id into [[kernelTasks]]
+    * partitions, series contiguous and ascending within each partition. The
+    * base is whatever partitioning the session (or AQE) chose, not a local
+    * constant. Per-series results are partitioning-independent, so values
+    * are unchanged (ForecastSpec's fused-vs-driver bit-identity pins this).
     */
   private def kernelPartitioned(df: DataFrame, p: PanelFrame): DataFrame = {
     val conf = df.sparkSession.conf
-    def intConf(k: String, d: Int): Int =
-      try conf.get(k, d.toString).toInt catch {
-        case _: NumberFormatException => d // e.g. shuffle.partitions = "auto"
-      }
-    val factor = math.max(1, intConf("spark.graft.kernelTaskFactor", 4))
-    val base = math.max(1, intConf("spark.sql.shuffle.partitions", 200))
-    val minBytes = math.max(1L,
-      try conf.get("spark.graft.kernelMinPartitionBytes",
-        (8L << 20).toString).toLong
-      catch { case _: NumberFormatException => 8L << 20 })
+    val base = math.max(1,
+      try conf.get("spark.sql.shuffle.partitions", "200").toInt catch {
+        case _: NumberFormatException => 200 // e.g. shuffle.partitions = "auto"
+      })
     // catalyst size estimate of the PANEL, not the assembled kernel input
     // (pinned panels are a single LogicalRDD node with measured block
     // sizes — optimizing that plan is trivial, while the input's
@@ -364,17 +376,15 @@ private[graft] object LocalLoop {
     // kernel call and its join estimates inflate); the input is the panel
     // ± a few rows per series, well inside the gate's 4× band. No action
     // runs.
-    val cap = math.min(base.toLong * factor, Int.MaxValue.toLong).toInt
-    val bySize =
-      try (p.df.queryExecution.optimizedPlan.stats.sizeInBytes / minBytes)
-        .min(BigInt(Int.MaxValue)).toInt
-      catch { case scala.util.control.NonFatal(_) => cap }
-    val n = math.max(base, math.min(cap, bySize))
-    df.repartition(n, p.id).sortWithinPartitions(p.id, p.ds)
+    val bytes =
+      try Some(p.df.queryExecution.optimizedPlan.stats.sizeInBytes)
+      catch { case scala.util.control.NonFatal(_) => None }
+    val unknownAt = BigInt(org.apache.spark.sql.internal.SQLConf.get.defaultSizeInBytes)
+    df.repartition(kernelTasks(base, bytes, unknownAt), p.id).sortWithinPartitions(p.id, p.ds)
   }
 
   /** Kernels in featureNames order: lags, transforms by ascending lag —
-    * the features_order_ contract shared by run and runCV.
+    * the features_order_ contract every kernel's [[FeatureRow]] follows.
     */
   private def compiledEvals(spec: FeatureSpec): Seq[Eval] =
     spec.lags.sorted.map(l => compile(l, Lag()).get) ++
@@ -397,35 +407,198 @@ private[graft] object LocalLoop {
   private[graft] def dateKernel(name: String): Option[LocalDate => Int] =
     dateFeature(name)
 
-  /** Can this fitted pipeline's predict run fused? */
-  def supported(conf: MLForecast, p: PanelFrame,
-                trained: Seq[(String, TrainedModel)], dynCols: Seq[String],
-                localFitOk: Boolean = false): Boolean = {
+  // ---- The route rule: fused kernel or driver lockstep loop -------------
+  //
+  // Every predict / CV / interval call site asks these functions, and runCV
+  // requires the same per-model plan, so no caller can admit a pipeline the
+  // kernel would reject.
+
+  /** Spec/panel half of the rule: the kernels can group, featurize, date
+    * and advance this panel. The rollout, which has no driver twin, asks
+    * only this; the routed calls also honor [[enabled]].
+    */
+  private def compiles(conf: MLForecast, p: PanelFrame): Boolean = {
     val dsType = p.df.schema(p.timeCol).dataType
-    val allFeatures = conf.featureCols ++ dynCols
     // the kernels group sorted rows into series via universal equality on
     // the id value; BinaryType ids surface as fresh Array[Byte] per row
     // (reference equality — every row would become its own series), so
     // binary ids route to the driver loop, whose joins/windows compare
     // binary by value
-    p.df.schema(p.idCol).dataType != org.apache.spark.sql.types.BinaryType &&
-    conf.spec.allTransforms.forall { case (l, t) =>
-      t.pooling.isLocal && compile(l, t).isDefined
-    } &&
+    p.df.schema(p.idCol).dataType != BinaryType &&
+      conf.spec.allTransforms.forall { case (l, t) =>
+        t.pooling.isLocal && compile(l, t).isDefined
+      } &&
       conf.spec.customDateFeatures.isEmpty &&
       (conf.spec.dateFeatures.isEmpty ||
         (dsType == DateType && conf.spec.dateFeatures.forall(dateFeature(_).isDefined))) &&
-      advancer(conf.freq, dsType).isDefined &&
-      // a model without an executor-local scorer can still fuse when its
-      // forecast is a per-series constant (seriesLevels joins onto the
-      // panel); the CV loop never consumes seriesLevels, so there a model
-      // must carry a scorer or be refittable per series (localFitter) —
-      // seriesLevels-only models fall back to the driver CV loop
-      trained.forall { case (n, tm) => tm.scorer(allFeatures).isDefined ||
-        (if (localFitOk)
-          conf.models.exists(m => m.name == n &&
-            m.localFitter(allFeatures).isDefined)
-        else tm.seriesLevels.isDefined) }
+      advancer(conf.freq, dsType).isDefined
+  }
+
+  /** The user's switch: `fusedPredict = false` keeps every routed call,
+    * and interval CV's shared union-of-offsets backtest, on the original
+    * per-window driver path.
+    */
+  def enabled(conf: MLForecast): Boolean = conf.fusedPredict
+
+  private def routable(conf: MLForecast, p: PanelFrame): Boolean =
+    enabled(conf) && conf.directHorizons.isEmpty && compiles(conf, p)
+
+  /** Per-model half of the CV rule — the plan [[runCV]] executes. Per
+    * model: Some(false) = serve from the driver-trained scorer, which stays
+    * valid under the refit schedule (refit = false, or a dataFree model);
+    * Some(true) = refit in-task through its localFitter; None = neither.
+    */
+  private def refitPlan(conf: MLForecast, trained: Seq[(String, TrainedModel)],
+                        allFeatures: Seq[String], refit: Boolean): Seq[Option[Boolean]] =
+    trained.map { case (n, tm) =>
+      val m = conf.models.find(_.name == n)
+      if (tm.scorer(allFeatures).isDefined && (!refit || m.exists(_.dataFree))) Some(false)
+      else if (m.exists(_.localFitter(allFeatures).isDefined)) Some(true)
+      else None
+    }
+
+  /** The CV rule over a refit plan. In-kernel refit featurizes each
+    * window's training slice per series, so it needs that slice bounded
+    * (an inputSize cap or a bounded spec; otherwise it is quadratic in
+    * series length) and cannot run under a transform chain (it would have
+    * to label in transformed space). A chain refits per cutoff over the
+    * whole prefix, so it cannot honor an inputSize cap.
+    */
+  private def cvAdmits(conf: MLForecast, plan: Seq[Option[Boolean]],
+                       chain: Seq[KernelTransforms.KernelTransform],
+                       inputSize: Option[Int]): Boolean =
+    plan.forall(_.isDefined) && (chain.isEmpty || inputSize.isEmpty) &&
+      (!plan.contains(Some(true)) ||
+        (chain.isEmpty && (inputSize.isDefined || conf.spec.updateSamplesBound.isDefined)))
+
+  /** Predict route: true = [[run]]. Each model must carry a scorer or a
+    * per-series constant (seriesLevels); a callback fuses only through its
+    * scalar after-hook (its contract: beforePredict is the identity).
+    */
+  def fusesPredict(conf: MLForecast, p: PanelFrame, trained: Seq[(String, TrainedModel)],
+                   dynCols: Seq[String], callback: Option[PredictCallback]): Boolean =
+    callback.forall(_.afterScalar.isDefined) && routable(conf, p) &&
+      trained.forall { case (_, tm) =>
+        tm.scorer(conf.featureCols ++ dynCols).isDefined || tm.seriesLevels.isDefined }
+
+  /** CV route: Some((trained, chain)) = [[runCV]] with that target
+    * transform chain (Nil without transforms); None = driver windows. The
+    * spec half is checked first, so `trained` — possibly a window fit — is
+    * built only when it can matter. CV callbacks hook the per-step loop,
+    * which the kernel does not expose.
+    */
+  def cvRoute(conf: MLForecast, p: PanelFrame, dynCols: Seq[String], refit: Boolean,
+              inputSize: Option[Int], callback: Option[PredictCallback] = None)(
+      trained: => Seq[(String, TrainedModel)])
+      : Option[(Seq[(String, TrainedModel)], Seq[KernelTransforms.KernelTransform])] =
+    for {
+      chain <- KernelTransforms.chainOf(conf.targetTransforms)
+      if callback.isEmpty && routable(conf, p)
+      t = trained
+      if t.nonEmpty &&
+        cvAdmits(conf, refitPlan(conf, t, conf.featureCols ++ dynCols, refit), chain, inputSize)
+    } yield (t, chain)
+
+  /** In-sample rollout precondition: the kernels compile and every model
+    * serves from its frozen scorer (the rollout never refits).
+    */
+  def rolloutSupported(conf: MLForecast, p: PanelFrame,
+                       trained: Seq[(String, TrainedModel)], dynCols: Seq[String]): Boolean =
+    compiles(conf, p) &&
+      refitPlan(conf, trained, conf.featureCols ++ dynCols, refit = false).forall(_.contains(false))
+
+  /** The kernels' missing convention: NaN for a null double. */
+  private def doubleAt(r: Row, i: Int): Double = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
+
+  /** The sorted kernel input of one partition, one id's contiguous run of
+    * rows at a time.
+    */
+  private def seriesRuns(rows: Iterator[Row], iId: Int): Iterator[ArrayBuffer[Row]] = {
+    val src = rows.buffered
+    new Iterator[ArrayBuffer[Row]] {
+      def hasNext: Boolean = src.hasNext
+      def next(): ArrayBuffer[Row] = {
+        val id = src.head.get(iId)
+        val run = new ArrayBuffer[Row]()
+        while (src.hasNext && src.head.get(iId) == id) run += src.next()
+        run
+      }
+    }
+  }
+
+  /** One scorer input row in featureNames order — window kernels, date
+    * features, statics, exog — shared by every kernel so their layouts
+    * cannot drift apart.
+    */
+  private final class FeatureRow(spec: FeatureSpec, nStatic: Int, nDyn: Int,
+                                 nFeatures: Int) extends Serializable {
+    private val windowEvals: Array[Eval] = compiledEvals(spec).toArray
+    private val dateEvals: Array[LocalDate => Int] =
+      spec.dateFeatures.map(n => dateFeature(n).get).toArray
+    private val size = windowEvals.length + dateEvals.length + nStatic + nDyn
+    require(size == nFeatures, s"feature layout mismatch: $size vs $nFeatures")
+
+    /** Features of the position after `view`'s end, dated `ds`, with that
+      * position's exog values `dyn` (null = all missing). With `dropNa`,
+      * null when the row fails MLForecast.dropNa: a window feature or an
+      * exog value is missing.
+      */
+    def apply(view: View, ds: Any, statics: Array[Double], dyn: Array[Double],
+              dropNa: Boolean = false): Array[Double] = {
+      val arr = new Array[Double](size)
+      var k = 0
+      while (k < windowEvals.length) {
+        val x = windowEvals(k)(view)
+        if (x == null) { if (dropNa) return null; arr(k) = Double.NaN }
+        else arr(k) = x.doubleValue
+        k += 1
+      }
+      if (dateEvals.nonEmpty) {
+        val ld = ds.asInstanceOf[java.sql.Date].toLocalDate
+        dateEvals.foreach { ev => arr(k) = ev(ld).toDouble; k += 1 }
+      }
+      statics.foreach { s => arr(k) = s; k += 1 }
+      var j = 0
+      while (j < nDyn) {
+        arr(k) = if (dyn == null) Double.NaN else dyn(j)
+        if (dropNa && arr(k).isNaN) return null
+        k += 1; j += 1
+      }
+      arr
+    }
+  }
+
+  /** Column positions of the CV and rollout kernels' input rows. */
+  private final case class SeriesLayout(iId: Int, iDs: Int, iY: Int,
+                                        iStatics: Array[Int], iDyn: Array[Int])
+
+  /** One series' buffered input rows, decoded once: dates, the target
+    * (NaN = null) and its null mask, statics and per-row exog.
+    */
+  private final class Series(rows: ArrayBuffer[Row], l: SeriesLayout) {
+    val n: Int = rows.length
+    val id: Any = rows.head.get(l.iId)
+    val ds: Array[Any] = rows.map(_.get(l.iDs)).toArray
+    val yNull: Array[Boolean] = rows.map(_.isNullAt(l.iY)).toArray
+    val hist: Array[Double] = rows.map(doubleAt(_, l.iY)).toArray
+    val statics: Array[Double] = l.iStatics.map(doubleAt(rows.head, _))
+    private val exogRows: Array[Array[Double]] =
+      if (l.iDyn.isEmpty) null else rows.map(r => l.iDyn.map(doubleAt(r, _))).toArray
+    /** Row i's exog values; null (FeatureRow reads none) without exog. */
+    def exog(i: Int): Array[Double] = if (exogRows == null) null else exogRows(i)
+  }
+
+  /** The CV and rollout kernels' input: every panel row as (id, ds, __y,
+    * statics, exog) in doubles, kernel-partitioned, and its layout.
+    */
+  private def historyInput(p: PanelFrame, statics: Seq[String],
+                           dynCols: Seq[String]): (DataFrame, SeriesLayout) = {
+    val sel = Seq(p.id, p.ds, p.y.cast(DoubleType).as("__y")) ++
+      (statics ++ dynCols).map(c => col(s"`$c`").cast(DoubleType).as(c))
+    val sorted = kernelPartitioned(p.df.select(sel: _*), p)
+    val s = sorted.schema
+    (sorted, SeriesLayout(s.fieldIndex(p.idCol), s.fieldIndex(p.timeCol),
+      s.fieldIndex("__y"), statics.map(s.fieldIndex).toArray, dynCols.map(s.fieldIndex).toArray))
   }
 
   /** Run the fused loop. Returns (id, ds, <model preds...>) — identical to
@@ -447,16 +620,7 @@ private[graft] object LocalLoop {
       tm.scorer(allFeatures).getOrElse(null) }
     require(scorers.zip(levelModels).forall { case (s, l) =>
       s != null || l.isDefined }, "model is neither scorable nor level-backed")
-
-    val windowEvals: Seq[Eval] = compiledEvals(spec)
-    val dateEvals: Seq[LocalDate => Int] = spec.dateFeatures.map(n => dateFeature(n).get)
-    val nWin = windowEvals.size
-    val nDate = dateEvals.size
-    val nStatic = statics.size
-    val nDyn = dynCols.size
-    val nFeat = nWin + nDate + nStatic + nDyn
-    require(nFeat == allFeatures.size, s"feature layout mismatch: $nFeat vs ${allFeatures.size}")
-
+    val features = new FeatureRow(spec, statics.size, dynCols.size, allFeatures.size)
     val advance = advancer(conf.freq, p.df.schema(timeCol).dataType).get
     val trimN = spec.updateSamplesBound.map(_ + 1).getOrElse(Int.MaxValue)
 
@@ -502,90 +666,45 @@ private[graft] object LocalLoop {
       case (None, _) => -1
     }.toArray
 
-    val outDsType = advancedDsType(p)
     val outSchema = StructType(
       StructField(idCol, inSchema(iId).dataType, nullable = true) +:
-        StructField(timeCol, outDsType, nullable = true) +:
+        StructField(timeCol, advancedDsType(p), nullable = true) +:
         names.map(n => StructField(n, DoubleType, nullable = true)))
 
     val nModels = scorers.size
     val afterFn: Double => Double = after.orNull
-    val out = sorted.mapPartitions { iter =>
-      val src = iter.buffered
-      new Iterator[Row] {
-        private var pending: Iterator[Row] = Iterator.empty
-        // loop: a series can emit zero rows (e.g. exog-only ids), so advance
-        // until something is pending or the input is drained
-        def hasNext: Boolean = {
-          while (!pending.hasNext && src.hasNext) pending = runSeries()
-          pending.hasNext
-        }
-        def next(): Row = { if (!hasNext) Iterator.empty.next(); pending.next() }
-        private def runSeries(): Iterator[Row] = {
-          val id = src.head.get(iId)
-          val histRows = new ArrayBuffer[Row]()
-          val futRows = new ArrayBuffer[Row]()
-          while (src.hasNext && src.head.get(iId) == id) {
-            val r = src.next()
-            if (r.getBoolean(iFut)) futRows += r else histRows += r
-          }
-          if (histRows.isEmpty) return Iterator.empty
-          val staticVals = iStatics.map { i =>
-            val r = histRows.head
-            if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
-          }
+    sorted.mapPartitions { iter =>
+      // a series can emit zero rows (exog-only ids)
+      seriesRuns(iter, iId).flatMap { series =>
+        val (futRows, histRows) = series.partition(_.getBoolean(iFut))
+        if (histRows.isEmpty) Iterator.empty
+        else {
+          val first = histRows.head
+          val staticVals = iStatics.map(doubleAt(first, _))
           // level-backed models: one constant per series (null = no level)
           val levelVals: Array[java.lang.Double] = iLevel.map { i =>
-            if (i < 0 || histRows.head.isNullAt(i)) null
-            else java.lang.Double.valueOf(histRows.head.getDouble(i))
+            if (i < 0 || first.isNullAt(i)) null
+            else java.lang.Double.valueOf(first.getDouble(i))
           }
           val lastDs = histRows.last.get(iDs)
-          val tail = if (histRows.length > trimN) histRows.takeRight(trimN) else histRows
-          val hist = new Array[Double](tail.length)
-          var i = 0
-          while (i < tail.length) {
-            hist(i) = if (tail(i).isNullAt(iY)) Double.NaN else tail(i).getDouble(iY)
-            i += 1
-          }
+          val hist = histRows.takeRight(trimN).map(doubleAt(_, iY)).toArray
           val exogByDs: Map[Any, Array[Double]] =
-            futRows.iterator.map { r =>
-              r.get(iDs) -> iDyn.map(j => if (r.isNullAt(j)) Double.NaN else r.getDouble(j))
-            }.toMap
+            futRows.iterator.map(r => r.get(iDs) -> iDyn.map(doubleAt(r, _))).toMap
 
           val appended = Array.fill(nModels)(new ArrayBuffer[Double](h))
-          val rows = new ArrayBuffer[Row](h)
+          val out = new ArrayBuffer[Row](h)
           var step = 1
           while (step <= h) {
             val stepDs = advance(lastDs, step)
-            val exog = if (nDyn == 0) null else exogByDs.getOrElse(stepDs, null)
+            val exog = exogByDs.getOrElse(stepDs, null)
             val vals = new Array[Any](2 + nModels)
-            vals(0) = id
+            vals(0) = first.get(iId)
             vals(1) = stepDs
             var mi = 0
             while (mi < nModels) {
               var pred: java.lang.Double =
                 if (iLevel(mi) >= 0) levelVals(mi) // per-series constant
-                else {
-                  val view = new View(hist, appended(mi))
-                  val arr = new Array[Double](nFeat)
-                  var k = 0
-                  windowEvals.foreach { ev =>
-                    val x = ev(view)
-                    arr(k) = if (x == null) Double.NaN else x.doubleValue
-                    k += 1
-                  }
-                  if (nDate > 0) {
-                    val ld = stepDs.asInstanceOf[java.sql.Date].toLocalDate
-                    dateEvals.foreach { ev => arr(k) = ev(ld).toDouble; k += 1 }
-                  }
-                  staticVals.foreach { s => arr(k) = s; k += 1 }
-                  var j = 0
-                  while (j < nDyn) {
-                    arr(k) = if (exog == null) Double.NaN else exog(j)
-                    k += 1; j += 1
-                  }
-                  scorers(mi)(arr)
-                }
+                else scorers(mi)(features(new View(hist, appended(mi)), stepDs, staticVals, exog))
               // after-predict hook (scalar twin of the driver loop's
               // DataFrame hook): transforms the value that feeds back AND
               // the value reported, like the reference's _update_y
@@ -595,14 +714,13 @@ private[graft] object LocalLoop {
               appended(mi) += (if (pred == null) Double.NaN else pred.doubleValue)
               mi += 1
             }
-            rows += new org.apache.spark.sql.catalyst.expressions.GenericRow(vals)
+            out += new org.apache.spark.sql.catalyst.expressions.GenericRow(vals)
             step += 1
           }
-          rows.iterator
+          out.iterator
         }
       }
     }(Encoders.row(outSchema))
-    out
   }
 
   /** Fused sliding-window cross validation: every (window × step × model) for
@@ -631,33 +749,26 @@ private[graft] object LocalLoop {
             tfms: Seq[KernelTransforms.KernelTransform] = Nil): DataFrame = {
     import p.{idCol, timeCol}
     val spec = conf.spec
-    val statics = conf.staticFeatures
     val allFeatures = conf.featureCols ++ dynCols
     val names = trained.map(_._1)
-    // Per model: the driver-trained scorer stays valid across windows only
-    // when refit never changes it (refit=false, or a dataFree model); every
-    // other model must expose a localFitter so the kernel can refit it on
-    // the schedule — `supported(localFitOk = true)` guarantees one exists.
+    // the route rule's per-model plan (cvRoute admits exactly these)
+    val plan = refitPlan(conf, trained, allFeatures, refit)
+    plan.zip(names).foreach { case (pl, n) =>
+      require(pl.isDefined, s"model $n has neither a frozen scorer nor a localFitter")
+    }
+    require(cvAdmits(conf, plan, tfms, inputSize),
+      "runCV refits in-kernel only over a bounded slice without a transform " +
+        "chain, and runs a chain only without an inputSize cap")
     val scorers: Array[Array[Double] => java.lang.Double] =
       trained.map { case (_, tm) => tm.scorer(allFeatures).orNull }.toArray
+    val useLocal: Array[Boolean] = plan.map(_.get).toArray
     val localFits: Array[ForecastModel.LocalFit] = trained.map { case (n, _) =>
       conf.models.find(_.name == n).flatMap(_.localFitter(allFeatures)).orNull
-    }.toArray
-    val useLocal: Array[Boolean] = trained.indices.map { mi =>
-      val frozenOk = scorers(mi) != null &&
-        (!refit || conf.models.find(_.name == trained(mi)._1).exists(_.dataFree))
-      if (!frozenOk) require(localFits(mi) != null,
-        s"model ${trained(mi)._1} has neither a frozen scorer nor a localFitter")
-      !frozenOk
     }.toArray
     val anyLocal = useLocal.exists(identity)
     // target-transform kernels (r13): the chain re-fits per (series, cutoff)
     // inside the task and predictions invert back to the original space
-    // before emission. In-kernel REFIT under transforms would have to
-    // featurize/label in transformed space — not built; the callers that
-    // pass tfms guarantee all-data-free models (frozen scorers).
-    require(tfms.isEmpty || !anyLocal,
-      "runCV target-transform kernels require frozen (data-free) models")
+    // before emission
     val tfmArr = tfms.toArray
     // refit schedule (the driver path's SHARED fitWindow — one definition,
     // see MLForecastCV.fitWindow): window i refits iff it IS its own fit
@@ -666,15 +777,7 @@ private[graft] object LocalLoop {
       MLForecastCV.fitWindow(i, refit, refitEvery) == i
     }.toArray
 
-    val windowEvals: Array[Eval] = compiledEvals(spec).toArray
-    val dateEvals: Seq[LocalDate => Int] = spec.dateFeatures.map(n => dateFeature(n).get)
-    val nWin = windowEvals.size
-    val nDate = dateEvals.size
-    val nStatic = statics.size
-    val nDyn = dynCols.size
-    val nFeat = nWin + nDate + nStatic + nDyn
-    require(nFeat == allFeatures.size, s"feature layout mismatch: $nFeat vs ${allFeatures.size}")
-
+    val features = new FeatureRow(spec, conf.staticFeatures.size, dynCols.size, allFeatures.size)
     val advance = advancer(conf.freq, p.df.schema(timeCol).dataType).get
     val trimN = spec.updateSamplesBound.map(_ + 1).getOrElse(Int.MaxValue)
     // `trimN` bounds what the kernels NEED; `inputSize` bounds what they may
@@ -684,219 +787,141 @@ private[graft] object LocalLoop {
 
     // One input relation: the raw panel with statics and exog columns carried
     // (exog for a window's future steps are this panel's own held-out rows).
-    val histSel = Seq(p.id, p.ds, p.y.cast(DoubleType).as("__y")) ++
-      statics.map(c => col(s"`$c`").cast(DoubleType).as(c)) ++
-      dynCols.map(c => col(s"`$c`").cast(DoubleType).as(c))
-    val sorted = kernelPartitioned(p.df.select(histSel: _*), p)
-
-    val inSchema = sorted.schema
-    val iId = inSchema.fieldIndex(idCol)
-    val iDs = inSchema.fieldIndex(timeCol)
-    val iY = inSchema.fieldIndex("__y")
-    val iStatics = statics.map(inSchema.fieldIndex).toArray
-    val iDyn = dynCols.map(inSchema.fieldIndex).toArray
-
+    val (sorted, layout) = historyInput(p, conf.staticFeatures, dynCols)
     val outSchema = StructType(
-      StructField(idCol, inSchema(iId).dataType, nullable = true) +:
-        StructField(timeCol, inSchema(iDs).dataType, nullable = true) +:
+      StructField(idCol, sorted.schema(layout.iId).dataType, nullable = true) +:
+        StructField(timeCol, sorted.schema(layout.iDs).dataType, nullable = true) +:
         StructField("cutoff", advancedDsType(p), nullable = true) +:
         StructField(p.targetCol, DoubleType, nullable = true) +:
         names.map(n => StructField(n, DoubleType, nullable = true)))
 
     val nModels = scorers.size
+    val nDyn = dynCols.size
     val offsetArr = offsets.toArray
     def cmp(a: Any, b: Any): Int = a.asInstanceOf[Comparable[Any]].compareTo(b)
 
     sorted.mapPartitions { iter =>
-      val src = iter.buffered
-      new Iterator[Row] {
-        private var pending: Iterator[Row] = Iterator.empty
-        def hasNext: Boolean = {
-          while (!pending.hasNext && src.hasNext) pending = runSeries()
-          pending.hasNext
-        }
-        def next(): Row = { if (!hasNext) Iterator.empty.next(); pending.next() }
-        private def runSeries(): Iterator[Row] = {
-          val id = src.head.get(iId)
-          val rowsBuf = new ArrayBuffer[Row]()
-          while (src.hasNext && src.head.get(iId) == id) rowsBuf += src.next()
-          val n = rowsBuf.length
-          val staticVals = iStatics.map { i =>
-            val r = rowsBuf.head
-            if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
-          }
-          val dsArr = new Array[Any](n)
-          val hist = new Array[Double](n)
-          val yNull = new Array[Boolean](n)
-          var i = 0
-          while (i < n) {
-            val r = rowsBuf(i)
-            dsArr(i) = r.get(iDs)
-            yNull(i) = r.isNullAt(iY)
-            hist(i) = if (yNull(i)) Double.NaN else r.getDouble(iY)
-            i += 1
-          }
-          val idxByDs: Map[Any, Int] = dsArr.zipWithIndex.toMap
-          val lastDs = dsArr(n - 1)
-          // scorers this series is currently predicting with: driver-trained
-          // entries stay fixed; localFit entries are (re)fit on the refit
-          // schedule and frozen in between — refitAt(0) is always true, so
-          // every local entry is fit before its first use
-          val curScorers = scorers.clone()
-          val noApp = new ArrayBuffer[Double](0)
+      seriesRuns(iter, layout.iId).flatMap { rows =>
+        val s = new Series(rows, layout)
+        val idxByDs: Map[Any, Int] = s.ds.zipWithIndex.toMap
+        val lastDs = s.ds(s.n - 1)
+        // scorers this series is currently predicting with: driver-trained
+        // entries stay fixed; localFit entries are (re)fit on the refit
+        // schedule and frozen in between — refitAt(0) is always true, so
+        // every local entry is fit before its first use
+        val curScorers = scorers.clone()
+        val noApp = new ArrayBuffer[Double](0)
 
-          val outRows = new ArrayBuffer[Row]()
-          var wi = 0
-          while (wi < offsetArr.length) {
-            val offset = offsetArr(wi)
-            val cutoffDs = advance(lastDs, -offset)
-            // forecast origin: last row at or before the cutoff (mirrors the
-            // driver path's ds <= cutoff train filter)
-            var originIdx = n - 1
-            while (originIdx >= 0 && cmp(dsArr(originIdx), cutoffDs) > 0) originIdx -= 1
-            if (anyLocal && refitAt(wi)) {
-              // In-kernel refit: featurize this window's training slice the
-              // way the driver does (features over the inputSize-capped
-              // slice; a row survives iff every window feature, every exog
-              // value and the label are present — MLForecast.dropNa's list)
-              // and hand the surviving rows to each model's localFitter.
-              val sliceStart = inputSize.fold(0)(sz => math.max(0, originIdx + 1 - sz))
-              val featBuf = new ArrayBuffer[Array[Double]]()
-              val labBuf = new ArrayBuffer[Double]()
-              var pIdx = sliceStart
-              while (pIdx <= originIdx) {
-                var ok = !hist(pIdx).isNaN
-                val arr = if (ok) new Array[Double](nFeat) else null
-                if (ok) {
-                  val view = new View(hist, sliceStart, pIdx, noApp)
-                  var k = 0
-                  while (k < nWin && ok) {
-                    val x = windowEvals(k)(view)
-                    if (x == null) ok = false else arr(k) = x.doubleValue
-                    k += 1
-                  }
-                  if (ok && nDate > 0) {
-                    val ld = dsArr(pIdx).asInstanceOf[java.sql.Date].toLocalDate
-                    dateEvals.foreach { ev => arr(k) = ev(ld).toDouble; k += 1 }
-                  } else k = nWin + nDate
-                  if (ok) { staticVals.foreach { s => arr(k) = s; k += 1 } }
-                  else k = nWin + nDate + nStatic
-                  var j = 0
-                  while (j < nDyn && ok) {
-                    val r = rowsBuf(pIdx)
-                    if (r.isNullAt(iDyn(j))) ok = false
-                    else {
-                      val v = r.getDouble(iDyn(j))
-                      if (v.isNaN) ok = false else arr(k) = v
-                    }
-                    k += 1; j += 1
-                  }
-                }
-                if (ok) { featBuf += arr; labBuf += hist(pIdx) }
-                pIdx += 1
+        val outRows = new ArrayBuffer[Row]()
+        var wi = 0
+        while (wi < offsetArr.length) {
+          val offset = offsetArr(wi)
+          val cutoffDs = advance(lastDs, -offset)
+          // forecast origin: last row at or before the cutoff (mirrors the
+          // driver path's ds <= cutoff train filter)
+          var originIdx = s.n - 1
+          while (originIdx >= 0 && cmp(s.ds(originIdx), cutoffDs) > 0) originIdx -= 1
+          if (anyLocal && refitAt(wi)) {
+            // In-kernel refit: featurize this window's training slice the
+            // way the driver does (features over the inputSize-capped
+            // slice; a row survives iff every window feature, every exog
+            // value and the label are present — MLForecast.dropNa's list)
+            // and hand the surviving rows to each model's localFitter.
+            val sliceStart = inputSize.fold(0)(sz => math.max(0, originIdx + 1 - sz))
+            val featBuf = new ArrayBuffer[Array[Double]]()
+            val labBuf = new ArrayBuffer[Double]()
+            var pIdx = sliceStart
+            while (pIdx <= originIdx) {
+              if (!s.hist(pIdx).isNaN) {
+                val arr = features(new View(s.hist, sliceStart, pIdx, noApp), s.ds(pIdx),
+                  s.statics, s.exog(pIdx), dropNa = true)
+                if (arr != null) { featBuf += arr; labBuf += s.hist(pIdx) }
               }
-              val fRows = featBuf.toArray
-              val lRows = labBuf.toArray
-              var fi = 0
-              while (fi < nModels) {
-                if (useLocal(fi)) curScorers(fi) = localFits(fi)(fRows, lRows)
-                fi += 1
-              }
+              pIdx += 1
             }
-            if (originIdx >= 0) {
-              val originDs = dsArr(originIdx)
-              val boundDs = advance(lastDs, h - offset)
-              val lo = math.max(0, originIdx + 1 - seeCap)
-              val hiExcl = originIdx + 1
-              // r13 transform kernels: re-fit the chain on this window's
-              // prefix (the driver warmup's per-cutoff transform refit);
-              // features and the recursion run in TRANSFORMED space, and
-              // each emission inverts back through per-model sequential
-              // inverse state (each model's predictions form their own
-              // phase cumsums)
-              val (workHist, inverters) =
-                if (tfmArr.isEmpty) (hist, null)
-                else {
-                  var cur = hist
-                  val chain = tfmArr.map { kt =>
-                    val f = kt.fit(cur, hiExcl); cur = f.transformed; f
-                  }
-                  val invChain = chain.reverse
-                  (cur, Array.fill(nModels)(invChain.map(_.newInverter())))
-                }
-              val appended = Array.fill(nModels)(new ArrayBuffer[Double](h))
-              var step = 1
-              while (step <= h) {
-                val stepDs = advance(originDs, step)
-                val afterCutoff = cmp(stepDs, cutoffDs) > 0
-                val stepIdx = idxByDs.getOrElse(stepDs, -1)
-                // exog visibility = the driver's X_df (rows > cutoff only)
-                val exogRow =
-                  if (nDyn == 0 || !afterCutoff || stepIdx < 0) null
-                  else rowsBuf(stepIdx)
-                val preds = new Array[java.lang.Double](nModels)
-                var mi = 0
-                while (mi < nModels) {
-                  val view = new View(workHist, lo, hiExcl, appended(mi))
-                  val arr = new Array[Double](nFeat)
-                  var k = 0
-                  windowEvals.foreach { ev =>
-                    val x = ev(view)
-                    arr(k) = if (x == null) Double.NaN else x.doubleValue
-                    k += 1
-                  }
-                  if (nDate > 0) {
-                    val ld = stepDs.asInstanceOf[java.sql.Date].toLocalDate
-                    dateEvals.foreach { ev => arr(k) = ev(ld).toDouble; k += 1 }
-                  }
-                  staticVals.foreach { s => arr(k) = s; k += 1 }
-                  var j = 0
-                  while (j < nDyn) {
-                    arr(k) =
-                      if (exogRow == null || exogRow.isNullAt(iDyn(j))) Double.NaN
-                      else exogRow.getDouble(iDyn(j))
-                    k += 1; j += 1
-                  }
-                  val sc = curScorers(mi)
-                  val pred = if (sc == null) null else sc(arr)
-                  // the TRANSFORMED prediction feeds the recursion; the
-                  // emitted value inverts to original space (the inverse is
-                  // stepped EVERY step — its cumsum state advances whether
-                  // or not the step emits a row, like the driver's inverse
-                  // over the full h-step prediction frame)
-                  appended(mi) += (if (pred == null) Double.NaN else pred.doubleValue)
-                  preds(mi) =
-                    if (tfmArr.isEmpty) pred
-                    else {
-                      var x = if (pred == null) Double.NaN else pred.doubleValue
-                      val chain = inverters(mi)
-                      var ci = 0
-                      while (ci < chain.length) {
-                        x = chain(ci).invert(step - 1, x); ci += 1
-                      }
-                      if (x.isNaN) null else java.lang.Double.valueOf(x)
-                    }
-                  mi += 1
-                }
-                // emit = the driver's inner actuals join: a panel row exists
-                // at this step and falls in (cutoff, cutoff + h]
-                if (afterCutoff && stepIdx >= 0 && cmp(stepDs, boundDs) <= 0) {
-                  val vals = new Array[Any](4 + nModels)
-                  vals(0) = id
-                  vals(1) = dsArr(stepIdx)
-                  vals(2) = cutoffDs
-                  vals(3) = if (yNull(stepIdx)) null else java.lang.Double.valueOf(hist(stepIdx))
-                  mi = 0
-                  while (mi < nModels) { vals(4 + mi) = preds(mi); mi += 1 }
-                  outRows += new org.apache.spark.sql.catalyst.expressions.GenericRow(vals)
-                }
-                step += 1
-              }
+            val fRows = featBuf.toArray
+            val lRows = labBuf.toArray
+            var fi = 0
+            while (fi < nModels) {
+              if (useLocal(fi)) curScorers(fi) = localFits(fi)(fRows, lRows)
+              fi += 1
             }
-            wi += 1
           }
-          outRows.iterator
+          if (originIdx >= 0) {
+            val originDs = s.ds(originIdx)
+            val boundDs = advance(lastDs, h - offset)
+            val lo = math.max(0, originIdx + 1 - seeCap)
+            val hiExcl = originIdx + 1
+            // r13 transform kernels: re-fit the chain on this window's
+            // prefix (the driver warmup's per-cutoff transform refit);
+            // features and the recursion run in TRANSFORMED space, and
+            // each emission inverts back through per-model sequential
+            // inverse state (each model's predictions form their own
+            // phase cumsums)
+            val (workHist, inverters) =
+              if (tfmArr.isEmpty) (s.hist, null)
+              else {
+                var cur = s.hist
+                val chain = tfmArr.map { kt =>
+                  val f = kt.fit(cur, hiExcl); cur = f.transformed; f
+                }
+                val invChain = chain.reverse
+                (cur, Array.fill(nModels)(invChain.map(_.newInverter())))
+              }
+            val appended = Array.fill(nModels)(new ArrayBuffer[Double](h))
+            var step = 1
+            while (step <= h) {
+              val stepDs = advance(originDs, step)
+              val afterCutoff = cmp(stepDs, cutoffDs) > 0
+              val stepIdx = idxByDs.getOrElse(stepDs, -1)
+              // exog visibility = the driver's X_df (rows > cutoff only)
+              val exog =
+                if (nDyn == 0 || !afterCutoff || stepIdx < 0) null else s.exog(stepIdx)
+              val preds = new Array[java.lang.Double](nModels)
+              var mi = 0
+              while (mi < nModels) {
+                val sc = curScorers(mi)
+                val pred =
+                  if (sc == null) null
+                  else sc(features(new View(workHist, lo, hiExcl, appended(mi)), stepDs,
+                    s.statics, exog))
+                // the TRANSFORMED prediction feeds the recursion; the
+                // emitted value inverts to original space (the inverse is
+                // stepped EVERY step — its cumsum state advances whether
+                // or not the step emits a row, like the driver's inverse
+                // over the full h-step prediction frame)
+                appended(mi) += (if (pred == null) Double.NaN else pred.doubleValue)
+                preds(mi) =
+                  if (tfmArr.isEmpty) pred
+                  else {
+                    var x = if (pred == null) Double.NaN else pred.doubleValue
+                    val chain = inverters(mi)
+                    var ci = 0
+                    while (ci < chain.length) {
+                      x = chain(ci).invert(step - 1, x); ci += 1
+                    }
+                    if (x.isNaN) null else java.lang.Double.valueOf(x)
+                  }
+                mi += 1
+              }
+              // emit = the driver's inner actuals join: a panel row exists
+              // at this step and falls in (cutoff, cutoff + h]
+              if (afterCutoff && stepIdx >= 0 && cmp(stepDs, boundDs) <= 0) {
+                val vals = new Array[Any](4 + nModels)
+                vals(0) = s.id
+                vals(1) = s.ds(stepIdx)
+                vals(2) = cutoffDs
+                vals(3) = if (s.yNull(stepIdx)) null else java.lang.Double.valueOf(s.hist(stepIdx))
+                mi = 0
+                while (mi < nModels) { vals(4 + mi) = preds(mi); mi += 1 }
+                outRows += new org.apache.spark.sql.catalyst.expressions.GenericRow(vals)
+              }
+              step += 1
+            }
+          }
+          wi += 1
         }
+        outRows.iterator
       }
     }(Encoders.row(outSchema))
   }
@@ -915,147 +940,65 @@ private[graft] object LocalLoop {
     * TimeSeries per series on the driver (and warns "can be slow"), this is
     * one mapPartitions pass over the (id, ds)-sorted panel: all origins ×
     * steps × models per series run inside the task. Same restriction as the
-    * reference: local transforms only (enforced by `supported`).
+    * reference: local transforms only (enforced by `rolloutSupported`).
     */
   def runFittedRollout(p: PanelFrame, conf: MLForecast,
                        trained: Seq[(String, TrainedModel)],
                        dynCols: Seq[String], h: Int): DataFrame = {
     import p.{idCol, timeCol}
-    val spec = conf.spec
-    val statics = conf.staticFeatures
     val allFeatures = conf.featureCols ++ dynCols
     val names = trained.map(_._1)
     val scorers: Array[Array[Double] => java.lang.Double] =
       trained.map { case (_, tm) => tm.scorer(allFeatures).get }.toArray
-
-    val windowEvals: Array[Eval] = compiledEvals(spec).toArray
-    val dateEvals: Seq[LocalDate => Int] = spec.dateFeatures.map(n => dateFeature(n).get)
-    val nWin = windowEvals.length
-    val nDate = dateEvals.size
-    val nStatic = statics.size
-    val nDyn = dynCols.size
-    val nFeat = nWin + nDate + nStatic + nDyn
-    require(nFeat == allFeatures.size, s"feature layout mismatch: $nFeat vs ${allFeatures.size}")
-
-    val histSel = Seq(p.id, p.ds, p.y.cast(DoubleType).as("__y")) ++
-      statics.map(c => col(s"`$c`").cast(DoubleType).as(c)) ++
-      dynCols.map(c => col(s"`$c`").cast(DoubleType).as(c))
-    val sorted = kernelPartitioned(p.df.select(histSel: _*), p)
-
-    val inSchema = sorted.schema
-    val iId = inSchema.fieldIndex(idCol)
-    val iDs = inSchema.fieldIndex(timeCol)
-    val iY = inSchema.fieldIndex("__y")
-    val iStatics = statics.map(inSchema.fieldIndex).toArray
-    val iDyn = dynCols.map(inSchema.fieldIndex).toArray
-
+    val features = new FeatureRow(conf.spec, conf.staticFeatures.size, dynCols.size,
+      allFeatures.size)
+    val (sorted, layout) = historyInput(p, conf.staticFeatures, dynCols)
     val outSchema = StructType(
-      StructField(idCol, inSchema(iId).dataType, nullable = true) +:
-        StructField(timeCol, inSchema(iDs).dataType, nullable = true) +:
+      StructField(idCol, sorted.schema(layout.iId).dataType, nullable = true) +:
+        StructField(timeCol, sorted.schema(layout.iDs).dataType, nullable = true) +:
         StructField(p.targetCol, DoubleType, nullable = true) +:
         names.map(n => StructField(n, DoubleType, nullable = true)))
     val nModels = scorers.length
 
     sorted.mapPartitions { iter =>
-      val src = iter.buffered
-      new Iterator[Row] {
-        private var pending: Iterator[Row] = Iterator.empty
-        def hasNext: Boolean = {
-          while (!pending.hasNext && src.hasNext) pending = runSeries()
-          pending.hasNext
-        }
-        def next(): Row = { if (!hasNext) Iterator.empty.next(); pending.next() }
-        private def runSeries(): Iterator[Row] = {
-          val id = src.head.get(iId)
-          val rowsBuf = new ArrayBuffer[Row]()
-          while (src.hasNext && src.head.get(iId) == id) rowsBuf += src.next()
-          val n = rowsBuf.length
-          val staticVals = iStatics.map { i =>
-            val r = rowsBuf.head
-            if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
-          }
-          val dsArr = new Array[Any](n)
-          val hist = new Array[Double](n)
-          val yNull = new Array[Boolean](n)
-          var i = 0
-          while (i < n) {
-            val r = rowsBuf(i)
-            dsArr(i) = r.get(iDs)
-            yNull(i) = r.isNullAt(iY)
-            hist(i) = if (yNull(i)) Double.NaN else r.getDouble(iY)
-            i += 1
-          }
-          val noApp = new ArrayBuffer[Double](0)
-
-          // one-step dropna survival per position: every window feature,
-          // every exog value and the label present (MLForecast.dropNa)
-          def survives(pIdx: Int): Boolean = {
-            if (hist(pIdx).isNaN) return false
-            val view = new View(hist, 0, pIdx, noApp)
-            var k = 0
-            while (k < nWin) {
-              if (windowEvals(k)(view) == null) return false
-              k += 1
-            }
-            var j = 0
-            while (j < nDyn) {
-              val r = rowsBuf(pIdx)
-              if (r.isNullAt(iDyn(j)) || r.getDouble(iDyn(j)).isNaN) return false
-              j += 1
-            }
-            true
-          }
-
-          val outRows = new ArrayBuffer[Row]()
-          var o = 0
-          while (o < n - h) {
-            if (survives(o + 1)) {
-              val appended = Array.fill(nModels)(new ArrayBuffer[Double](h))
-              val preds = new Array[java.lang.Double](nModels)
-              var step = 1
-              while (step <= h) {
-                val stepIdx = o + step // future = next rows (continuity-validated panel)
-                var mi = 0
-                while (mi < nModels) {
-                  val view = new View(hist, 0, o + 1, appended(mi))
-                  val arr = new Array[Double](nFeat)
-                  var k = 0
-                  windowEvals.foreach { ev =>
-                    val x = ev(view)
-                    arr(k) = if (x == null) Double.NaN else x.doubleValue
-                    k += 1
-                  }
-                  if (nDate > 0) {
-                    val ld = dsArr(stepIdx).asInstanceOf[java.sql.Date].toLocalDate
-                    dateEvals.foreach { ev => arr(k) = ev(ld).toDouble; k += 1 }
-                  }
-                  staticVals.foreach { s => arr(k) = s; k += 1 }
-                  var j = 0
-                  while (j < nDyn) {
-                    val r = rowsBuf(stepIdx)
-                    arr(k) =
-                      if (r.isNullAt(iDyn(j))) Double.NaN else r.getDouble(iDyn(j))
-                    k += 1; j += 1
-                  }
-                  val pred = scorers(mi)(arr)
-                  preds(mi) = pred
-                  appended(mi) += (if (pred == null) Double.NaN else pred.doubleValue)
-                  mi += 1
-                }
-                step += 1
-              }
-              val vals = new Array[Any](3 + nModels)
-              vals(0) = id
-              vals(1) = dsArr(o + h)
-              vals(2) = if (yNull(o + h)) null else java.lang.Double.valueOf(hist(o + h))
+      seriesRuns(iter, layout.iId).flatMap { rows =>
+        val s = new Series(rows, layout)
+        val noApp = new ArrayBuffer[Double](0)
+        val outRows = new ArrayBuffer[Row]()
+        var o = 0
+        while (o < s.n - h) {
+          // one-step dropna survival of the origin's first forecast row:
+          // every window feature, every exog value and the label present
+          // (MLForecast.dropNa)
+          if (!s.hist(o + 1).isNaN && features(new View(s.hist, 0, o + 1, noApp),
+              s.ds(o + 1), s.statics, s.exog(o + 1), dropNa = true) != null) {
+            val appended = Array.fill(nModels)(new ArrayBuffer[Double](h))
+            val preds = new Array[java.lang.Double](nModels)
+            var step = 1
+            while (step <= h) {
+              val stepIdx = o + step // future = next rows (continuity-validated panel)
+              val exog = s.exog(stepIdx)
               var mi = 0
-              while (mi < nModels) { vals(3 + mi) = preds(mi); mi += 1 }
-              outRows += new org.apache.spark.sql.catalyst.expressions.GenericRow(vals)
+              while (mi < nModels) {
+                val pred = scorers(mi)(features(new View(s.hist, 0, o + 1, appended(mi)),
+                  s.ds(stepIdx), s.statics, exog))
+                preds(mi) = pred
+                appended(mi) += (if (pred == null) Double.NaN else pred.doubleValue)
+                mi += 1
+              }
+              step += 1
             }
-            o += 1
+            val vals = new Array[Any](3 + nModels)
+            vals(0) = s.id
+            vals(1) = s.ds(o + h)
+            vals(2) = if (s.yNull(o + h)) null else java.lang.Double.valueOf(s.hist(o + h))
+            var mi = 0
+            while (mi < nModels) { vals(3 + mi) = preds(mi); mi += 1 }
+            outRows += new org.apache.spark.sql.catalyst.expressions.GenericRow(vals)
           }
-          outRows.iterator
+          o += 1
         }
+        outRows.iterator
       }
     }(Encoders.row(outSchema))
   }

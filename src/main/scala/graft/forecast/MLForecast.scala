@@ -57,6 +57,14 @@ final case class MLForecast(
     * lead-expanded target (reference core.py:1061-1186, forecast.py:1208-1247).
     */
   def fit(panel: PanelFrame): FittedMLForecast = {
+    // predict carries only (id, ds, y, staticFeatures) per series, so a
+    // pooled bucket column outside them fits here and then fails in predict
+    for ((lag, t) <- spec.allTransforms;
+         c <- t.pooling.groupby ++ t.pooling.partitionBy
+         if c != panel.idCol && !staticFeatures.contains(c))
+      throw new IllegalArgumentException(
+        s"pooled transform ${spec.nameOf(lag, t)} groups by '$c', which is neither " +
+          s"the id column nor in staticFeatures; add '$c' to staticFeatures")
     val (src, p, fitted, featurized, train) = prepare(panel)
     val dynCols = dynamicExogCols(panel)
     if (directHorizons.isEmpty) {
@@ -540,14 +548,12 @@ final case class FittedMLForecast(
 
   private def predictRecursive(h: Int, xDf: Option[DataFrame],
                                callback: Option[PredictCallback] = None): DataFrame = {
-    // Fused fast path: when every transform is per-series (no pooled
-    // cross-series state forcing lockstep), all h steps × models run inside
-    // one mapPartitions pass — one job instead of h orchestrated steps.
-    // a callback stays fused-eligible when it declares a scalar after-hook
-    // (its contract: beforePredict is the identity); SaveFeatures and other
-    // frame-observing callbacks route to the driver loop below
-    if (callback.forall(_.afterScalar.isDefined) && conf.fusedPredict &&
-        LocalLoop.supported(conf, transformedPanel, trained, dynCols)) {
+    // Fused fast path (LocalLoop's route rule): when every transform is
+    // per-series (no pooled cross-series state forcing lockstep), all h
+    // steps × models run inside one mapPartitions pass — one job instead of
+    // h orchestrated steps. Frame-observing callbacks (SaveFeatures) route
+    // to the driver loop below.
+    if (LocalLoop.fusesPredict(conf, transformedPanel, trained, dynCols, callback)) {
       val out = LocalLoop.run(transformedPanel, conf, trained, dynCols, h, xDf,
         after = callback.flatMap(_.afterScalar))
       return inverseTransforms(out, trained.map(_._1))
@@ -863,8 +869,7 @@ final case class FittedMLForecast(
   private def fittedValuesRecursiveMulti(h: Int): DataFrame = {
     require(fittedTransforms.isEmpty,
       "recursive multi-step fitted values are not supported with target transforms")
-    require(LocalLoop.supported(conf, transformedPanel, trained, dynCols) &&
-      trained.forall(_._2.scorer(conf.featureCols ++ dynCols).isDefined),
+    require(LocalLoop.rolloutSupported(conf, transformedPanel, trained, dynCols),
       "recursive multi-step fitted values need local, fusible transforms and " +
         "models with executor-local scorers (same restriction as the reference's " +
         "on-demand rollout, which rejects global/grouped lag transforms)")
@@ -1077,177 +1082,77 @@ private object MLForecastCV {
                                   refitEvery: Option[Int]): Int =
     if (!refit) 0 else refitEvery.map(k => i - i % k).getOrElse(i)
 
-  def run(conf: MLForecast, rawPanel: PanelFrame, nWindows: Int, h: Int,
-          stepSize: Int, refit: Boolean, refitEvery: Option[Int] = None,
-          inputSize: Option[Int] = None,
-          callback: Option[PredictCallback] = None): DataFrame = {
-    // loud instead of offsets.head/empty.reduce crashes (or a silently
-    // empty frame for h = 0)
+  /** Window i's cutoff distance from each series' last date. */
+  private def windowOffsets(nWindows: Int, h: Int, stepSize: Int): IndexedSeq[Int] =
+    (0 until nWindows).map(i => h + (nWindows - 1 - i) * stepSize)
+
+  /** The CV argument checks, shared by run and runWithIntervals (whose
+    * shared backtest bypasses run): loud instead of offsets.head /
+    * empty.reduce crashes, or a silently empty frame for h = 0.
+    */
+  private def requireArgs(nWindows: Int, h: Int, stepSize: Int,
+                          refitEvery: Option[Int]): Unit = {
     require(nWindows >= 1, s"crossValidation needs nWindows >= 1, got $nWindows")
     require(h >= 1, s"crossValidation needs h >= 1, got $h")
     require(stepSize >= 1, s"crossValidation needs stepSize >= 1, got $stepSize")
     require(refitEvery.forall(_ >= 1),
       s"refitEvery must be >= 1, got ${refitEvery.get}")
+  }
+
+  def run(conf: MLForecast, rawPanel: PanelFrame, nWindows: Int, h: Int,
+          stepSize: Int, refit: Boolean, refitEvery: Option[Int] = None,
+          inputSize: Option[Int] = None,
+          callback: Option[PredictCallback] = None): DataFrame = {
+    requireArgs(nWindows, h, stepSize, refitEvery)
     // Every window reads the panel 2-3 times (train slice, actuals, exog);
     // materialize it once up front instead of re-running its upstream
     // lineage per reference. localCheckpoint: lineage cut, blocks released
     // with the reference, partitioning preserved.
     val panel = rawPanel.copy(df = MLForecast.pin(rawPanel.df))
-    import panel.{idCol, timeCol, targetCol}
     val lastDates = panel.lastDates
-
-    // Fused fast path: when the models are frozen across windows
-    // (refit=false, or closed-form models for which refitting is a no-op)
-    // and the spec qualifies for the fused loop, train once on the first
-    // window and run every (window × step) in one mapPartitions pass —
-    // nWindows×h jobs plus per-window actuals joins become a single job.
-    val offsets = (0 until nWindows).map(i => h + (nWindows - 1 - i) * stepSize)
-    // Fusible when each model is either frozen-valid across windows
-    // (refit=false, or dataFree so refitting is a no-op) or refittable
-    // inside the kernel (localFitter). In-kernel refit featurizes each
-    // window's training slice per series, so it additionally needs that
-    // slice bounded: an inputSize cap, or transforms whose history need is
-    // bounded (updateSamplesBound) — unbounded transforms + per-window
-    // refit would be quadratic in series length and stay on the driver loop.
-    val allFeat = conf.featureCols ++ conf.dynamicExogCols(rawPanel)
-    val mayLocalFit = conf.models.exists(m =>
-      !m.dataFree && m.localFitter(allFeat).isDefined)
-    val localFitBounded =
-      inputSize.isDefined || conf.spec.updateSamplesBound.isDefined
-    // a CV callback (reference cross_validation's before/after hooks,
-    // forecast.py:1876-1877) hooks the per-step loop — the fused kernel
-    // has no callback seam, so callbacks route to the driver windows
-    val canFuse = conf.fusedPredict && conf.directHorizons.isEmpty &&
-      conf.targetTransforms.isEmpty && callback.isEmpty &&
-      (!mayLocalFit || localFitBounded) &&
-      (!refit || conf.models.forall(m =>
-        m.dataFree || m.localFitter(allFeat).isDefined))
-    var preFit: Option[FittedMLForecast] = None
-    if (canFuse) {
-      // Data-free models (fit never reads the frame — the dataFree
-      // contract) skip the window-0 slice fit entirely: the eager
-      // train-slice pin inside conf.fit was its only cost, and the fused
-      // kernel needs only the TrainedModel scorers.
-      if (conf.models.nonEmpty && conf.models.forall(_.dataFree)) {
-        val dynCols0 = conf.dynamicExogCols(panel)
-        dataFreeTrained(conf, panel, dynCols0).foreach { t =>
-          return LocalLoop.runCV(panel, conf, t, dynCols0, h, offsets,
-            inputSize, refit, refitEvery)
-        }
-      }
-      // r14: a refit CV never reads window 0's driver-trained state — every
-      // non-dataFree model is kernel-refit per window (useLocal in runCV),
-      // so the eager train-slice fit below (and its blocking pin — one per
-      // rung×candidate in automl halving) is dead weight when every model
-      // is dataFree or localFitter-backed. Construct the trained set
-      // actionlessly: dataFree fits are frame-blind by contract, kernel-
-      // refit models need only their name + localFitter (stub scorer=None
-      // routes them to useLocal, exactly as a real trained instance would
-      // under refit=true).
-      if (refit && conf.models.nonEmpty &&
-          conf.models.forall(m =>
-            m.dataFree || m.localFitter(allFeat).isDefined)) {
-        val dynCols0 = conf.dynamicExogCols(panel)
-        val probe =
-          try {
-            val t = conf.models.map { m =>
-              m.name -> (if (m.dataFree)
-                m.fit(panel.df, conf.featureCols ++ dynCols0,
-                  panel.targetCol, panel.weightCol)
-              else KernelRefitStub: TrainedModel)
-            }
-            // dataFree models must still carry a per-row scorer
-            // (seriesLevels-only models fall back to the driver loop —
-            // the same probe dataFreeTrained applies)
-            val ok = t.forall { case (_, tm) =>
-              (tm eq KernelRefitStub) ||
-                tm.scorer(conf.featureCols ++ dynCols0).isDefined
-            }
-            if (ok && LocalLoop.supported(conf, panel, t, dynCols0,
-                localFitOk = true)) Some(t)
-            else None
-          } catch { case scala.util.control.NonFatal(_) => None }
-        probe.foreach { t =>
-          return LocalLoop.runCV(panel, conf, t, dynCols0, h, offsets,
-            inputSize, refit, refitEvery)
-        }
-      }
-      val cut0 = lastDates.select(col(idCol),
-        panel.freq.advance(col("last_date"), lit(-offsets.head)).as("__cutoff"))
-      val train0 = panel.df.join(broadcast(cut0), Seq(idCol))
-        .filter(col(timeCol) <= col("__cutoff")).drop("__cutoff")
-      val tp0 = {
-        val tp = panel.copy(df = train0)
-        inputSize.fold(tp)(tp.keepLastN)
-      }
-      val f = conf.fit(tp0)
-      val dynCols = conf.dynamicExogCols(panel)
-      if (f.trained.nonEmpty &&
-          LocalLoop.supported(conf, panel, f.trained, dynCols, localFitOk = true))
-        return LocalLoop.runCV(panel, conf, f.trained, dynCols, h, offsets,
-          inputSize, refit, refitEvery)
-      // unsupported spec/model: fall through to the driver loop, seeding it
-      // with this fit (it IS window 0's fit — same train slice)
-      preFit = Some(f)
-    }
-
-    def cutoffsFor(i: Int): DataFrame =
-      windowCutoffs(panel, lastDates, h + (nWindows - 1 - i) * stepSize, h)
+    val dynCols = conf.dynamicExogCols(panel)
+    val offsets = windowOffsets(nWindows, h, stepSize)
     def trainPanelFor(i: Int): PanelFrame =
-      trainSlice(panel, cutoffsFor(i), inputSize)
+      trainSlice(panel, windowCutoffs(panel, lastDates, offsets(i), h), inputSize)
     def fitWindowOf(i: Int): Int = fitWindow(i, refit, refitEvery)
+    // window 0's fit: the kernel's trained set when no actionless one
+    // exists, and the driver path's window-0 fit either way (fit once)
+    lazy val fit0 = conf.fit(trainPanelFor(0))
 
-    // Phase 1: train every refit window — independent job chains, a
-    // bounded few in flight (Par: enough overlap to hide scheduling
-    // latency; each fit is itself a fully parallel job chain).
-    val refitIdx = (0 until nWindows).map(fitWindowOf).distinct
-    val fits: Map[Int, FittedMLForecast] =
-      refitIdx.zip(Par.run(refitIdx.map(i => () =>
-        if (i == 0 && preFit.isDefined) preFit.get
-        else conf.fit(trainPanelFor(i))))).toMap
-
-    // Phase 2: every window's state rebuild + predict + actuals join is
-    // independent given its models — construct them with a bounded overlap
-    // (the lockstep predict loop materializes eagerly, so serial
-    // construction would serialize nWindows x h narrow jobs; unbounded
-    // fan-out was the r12 load-fragility).
-    val frames = Par.run((0 until nWindows).map { i =>
-      () => {
-        val fw = fitWindowOf(i)
-        val fitted =
+    // Fused path (LocalLoop's route rule): every (window × step × model)
+    // in one mapPartitions pass — nWindows×h jobs plus per-window actuals
+    // joins become a single job. Under refit, actionlessTrained covers
+    // every set the rule admits, so no real fit is offered (Nil fails the
+    // rule) and fit0 runs in Phase 1 alongside the other refit windows.
+    LocalLoop.cvRoute(conf, panel, dynCols, refit, inputSize, callback)(
+        actionlessTrained(conf, panel, dynCols, refit)
+          .getOrElse(if (refit) Nil else fit0.trained)) match {
+      case Some((t, chain)) =>
+        LocalLoop.runCV(panel, conf, t, dynCols, h, offsets, inputSize, refit,
+          refitEvery, chain)
+      case None =>
+        // Phase 1: train every refit window — independent job chains, a
+        // bounded few in flight (Par: enough overlap to hide scheduling
+        // latency; each fit is itself a fully parallel job chain).
+        val refitIdx = (0 until nWindows).map(fitWindowOf).distinct
+        val fits: Map[Int, FittedMLForecast] =
+          refitIdx.zip(Par.run(refitIdx.map(i => () =>
+            if (i == 0) fit0 else conf.fit(trainPanelFor(i))))).toMap
+        // Phase 2: each window's state rebuild + predict + actuals join
+        backtest(conf, panel, lastDates, offsets, h, callback) { (i, cutoffs) =>
+          val fw = fitWindowOf(i)
           if (fw == i) fits(i)
           else // frozen models, state rebuilt on this window's history
-            conf.warmup(trainPanelFor(i), fits(fw).trained, fits(fw).directTrained)
-        val cutoffs = cutoffsFor(i)
-        // future exog for this window come from the held-out actual rows
-        // (reference cross_validation passes them as X_df, forecast.py:2030-2044)
-        val dynCols = conf.dynamicExogCols(panel)
-        val xDf =
-          if (dynCols.isEmpty) None
-          else Some(panel.df.join(broadcast(cutoffs), Seq(idCol))
-            .filter(col(timeCol) > col("__cutoff"))
-            .select((Seq(idCol, timeCol) ++ dynCols).map(col): _*))
-        val preds = fitted.predict(h, xDf, callback = callback)
-        val actuals = panel.df.join(broadcast(cutoffs), Seq(idCol))
-          .filter(col(timeCol) > col("__cutoff") && col(timeCol) <= col("__bound"))
-          .select(col(idCol), col(timeCol), col("__cutoff").as("cutoff"),
-            col(targetCol).cast("double").as(targetCol))
-        actuals.join(preds, Seq(idCol, timeCol))
-      }
-    })
-    frames.reduce(_ unionByName _)
+            conf.warmup(trainSlice(panel, cutoffs, inputSize),
+              fits(fw).trained, fits(fw).directTrained)
+        }
+    }
   }
 
-  /** Trained instances for an all-data-free model set WITHOUT a fit pass —
-    * `dataFree` contracts that `fit` never reads the frame, so the panel is
-    * handed over lazily and no action runs. None when a model rejects the
-    * feature set (loud fit-time require) or the fused kernel cannot serve
-    * the trained set; callers fall back to the full fit path.
-    */
   /** Placeholder trained instance for a model the fused CV kernel refits
-    * in-task (r14): `runCV` reads only the model NAME and the conf's
-    * localFitter for such models — scorer stays None so useLocal routes it
-    * to the in-kernel refit, and predict must never be reached.
+    * in-task: runCV reads only its name (its scorer is None, so the route
+    * rule's refit plan sends it to the model's localFitter), and predict
+    * must never be reached.
     */
   private object KernelRefitStub extends TrainedModel {
     def predict(df: DataFrame, featureCols: Seq[String], out: String): DataFrame =
@@ -1256,22 +1161,24 @@ private object MLForecastCV {
           "model name into LocalLoop.runCV's refit schedule")
   }
 
-  private def dataFreeTrained(conf: MLForecast, panel: PanelFrame,
-                              dynCols: Seq[String]): Option[Seq[(String, TrainedModel)]] =
-    try {
-      val t = conf.models.map(m => m.name ->
-        m.fit(panel.df, conf.featureCols ++ dynCols, panel.targetCol,
-          panel.weightCol))
-      // the CV kernel needs a per-row scorer for every frozen model —
-      // LocalLoop.supported's predict criterion also admits
-      // seriesLevels-only models, which runCV would reject with a throw
-      // instead of this probe's graceful driver-loop fallback
-      val allScored = t.forall { case (_, tm) =>
-        tm.scorer(conf.featureCols ++ dynCols).isDefined
-      }
-      if (allScored && LocalLoop.supported(conf, panel, t, dynCols)) Some(t)
-      else None
-    } catch { case scala.util.control.NonFatal(_) => None }
+  /** The CV trained set WITHOUT a fit pass, when one exists: `dataFree`
+    * models fit frame-blind by contract (the panel is handed over lazily,
+    * no action runs), and under refit every other model with a localFitter
+    * is refit in-kernel per window, so a [[KernelRefitStub]] carries it.
+    * None when some model needs a real fit, or a data-free fit rejects the
+    * feature set (the window fit then raises that loudly).
+    */
+  private def actionlessTrained(conf: MLForecast, panel: PanelFrame, dynCols: Seq[String],
+                                refit: Boolean): Option[Seq[(String, TrainedModel)]] = {
+    val allFeat = conf.featureCols ++ dynCols
+    if (conf.models.isEmpty || !conf.models.forall(m =>
+        m.dataFree || (refit && m.localFitter(allFeat).isDefined))) None
+    else
+      try Some(conf.models.map(m => m.name -> (
+        if (m.dataFree) m.fit(panel.df, allFeat, panel.targetCol, panel.weightCol)
+        else KernelRefitStub)))
+      catch { case scala.util.control.NonFatal(_) => None }
+  }
 
   /** Does `advance(t, a + b) == advance(advance(t, a), b)` hold for EVERY
     * input? True for grid-shift freqs (ints, days, weeks, sub-day,
@@ -1303,44 +1210,50 @@ private object MLForecastCV {
     inputSize.fold(tp)(tp.keepLastN)
   }
 
-  /** Inference-only backtest with frozen models (reference
-    * _frozen_backtest, forecast.py:81-160): per window, feature state is
-    * rebuilt on that window's history (warmup) and the provided models
-    * predict — fit is never called. `stepSize=1` is the reference default
-    * for recalibration backtests (no refit means no leakage from
-    * overlapping windows).
+  /** The per-window body of every driver backtest: for each cutoff offset,
+    * take window i's fitted pipeline (`fittedAt(i, cutoffs)`), predict `h`
+    * steps with future exog from the held-out rows (reference
+    * cross_validation passes them as X_df, forecast.py:2030-2044), and
+    * inner-join the actuals in (cutoff, cutoff + h]. Windows are
+    * independent and the lockstep predict loop materializes eagerly, so a
+    * bounded few build concurrently (Par — the r12 unbounded fan-out of
+    * these loops burned 21× the CPU band under box load).
     */
-  def frozenBacktest(conf: MLForecast, rawPanel: PanelFrame,
-                     trained: Seq[(String, TrainedModel)],
-                     directTrained: Seq[(String, Map[Int, TrainedModel])],
-                     nWindows: Int, h: Int, stepSize: Int = 1): DataFrame = {
-    val panel = rawPanel.copy(df = MLForecast.pin(rawPanel.df))
+  private def backtest(conf: MLForecast, panel: PanelFrame, lastDates: DataFrame,
+                       offsets: Seq[Int], h: Int,
+                       callback: Option[PredictCallback] = None)(
+      fittedAt: (Int, DataFrame) => FittedMLForecast): DataFrame = {
     import panel.{idCol, timeCol, targetCol}
-    val lastDates = panel.lastDates
     val dynCols = conf.dynamicExogCols(panel)
-    // bounded fan-out (Par): each window is a warmup + lockstep predict —
-    // a full driver loop — and unbounded concurrency was the r12 fragility
-    val frames = Par.run((0 until nWindows).map { w =>
+    Par.run(offsets.zipWithIndex.map { case (off, i) =>
       () => {
-        val offset = h + (nWindows - 1 - w) * stepSize
-        val cutoffs = windowCutoffs(panel, lastDates, offset, h)
-        val fitted = conf.warmup(trainSlice(panel, cutoffs, None),
-          trained, directTrained)
+        val cutoffs = windowCutoffs(panel, lastDates, off, h)
         val xDf =
           if (dynCols.isEmpty) None
           else Some(panel.df.join(broadcast(cutoffs), Seq(idCol))
             .filter(col(timeCol) > col("__cutoff"))
             .select((Seq(idCol, timeCol) ++ dynCols).map(col): _*))
-        val preds = fitted.predict(h, xDf)
+        val preds = fittedAt(i, cutoffs).predict(h, xDf, callback = callback)
         val actuals = panel.df.join(broadcast(cutoffs), Seq(idCol))
           .filter(col(timeCol) > col("__cutoff") && col(timeCol) <= col("__bound"))
           .select(col(idCol), col(timeCol), col("__cutoff").as("cutoff"),
             col(targetCol).cast("double").as(targetCol))
         actuals.join(preds, Seq(idCol, timeCol))
       }
-    })
-    frames.reduce(_ unionByName _)
+    }).reduce(_ unionByName _)
   }
+
+  /** Inference-only backtest with frozen models (reference
+    * _frozen_backtest, forecast.py:81-160) over a pinned panel: per cutoff
+    * offset, feature state is rebuilt on that window's history (warmup)
+    * and the provided models predict — fit is never called.
+    */
+  private def frozenBacktest(conf: MLForecast, panel: PanelFrame, lastDates: DataFrame,
+                             trained: Seq[(String, TrainedModel)],
+                             directTrained: Seq[(String, Map[Int, TrainedModel])],
+                             offsets: Seq[Int], h: Int): DataFrame =
+    backtest(conf, panel, lastDates, offsets, h)((_, cutoffs) =>
+      conf.warmup(trainSlice(panel, cutoffs, None), trained, directTrained))
 
   /** CV + conformal interval columns; see
     * [[FittedMLForecast.crossValidationWithIntervals]] for semantics.
@@ -1354,16 +1267,8 @@ private object MLForecastCV {
       s"levels must be in (0, 100): $levels")
     require(intervalWindows >= 2,
       "at least two windows are needed for conformal intervals")
-    // run()'s argument validation, hoisted: the shared-kernel fast path
-    // below bypasses run() entirely, and h=0 / stepSize=0 / intervalH=0
-    // would otherwise silently produce an empty or duplicated CV frame
-    // instead of the loud error the per-window path raises
-    require(nWindows >= 1, s"crossValidation needs nWindows >= 1, got $nWindows")
-    require(h >= 1, s"crossValidation needs h >= 1, got $h")
-    require(stepSize >= 1, s"crossValidation needs stepSize >= 1, got $stepSize")
-    require(refitEvery.forall(_ >= 1),
-      s"crossValidation needs refitEvery >= 1, got $refitEvery")
     require(intervalH >= 1, s"intervals need intervalH >= 1, got $intervalH")
+    requireArgs(nWindows, h, stepSize, refitEvery)
     val panel = rawPanel.copy(df = MLForecast.pin(rawPanel.df))
     import panel.{idCol, timeCol, targetCol}
     val lastDates = panel.lastDates
@@ -1371,23 +1276,27 @@ private object MLForecastCV {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    // ---- shared nested-CV fast path (one scores pass, like the
-    // reference's single _conformity_scores CV, forecast.py:682-759).
+    // ---- shared nested-CV path (one scores pass, like the reference's
+    // single _conformity_scores CV, forecast.py:682-759).
     // Each refit window's fit-time calibration is a refit=false nested CV
     // on its own train slice. With data-free models those nested CVs
     // differ ONLY in their cutoff grids: a nested prediction at cutoff c
-    // reads history <= c, which the train slice and the full panel agree
-    // on, and the fused kernel emits nothing for a window whose cutoff
-    // predates the series (exactly the series the slice would not
-    // contain). So ONE kernel pass over the already-pinned panel at the
-    // UNION of offsets replaces a full fit + CV pass per refit window —
-    // and, when intervalH == h (the default), the same pass serves the
-    // OUTER CV too; each consumer slices its rows by (id, cutoff).
+    // is a pure function of history <= c — the transform state (prefix
+    // diffs, per-series scaler stats at c) included, since warmup re-fits
+    // every transform on its slice — which the train slice and the full
+    // panel agree on (the slice-of-slice equals the direct slice), and the
+    // fused kernel emits nothing for a window whose cutoff predates the
+    // series (exactly the series the slice would not contain). So ONE
+    // backtest over the already-pinned panel at the UNION of offsets
+    // replaces a full fit + CV pass per refit window — and, when
+    // intervalH == h (the default), the same pass serves the OUTER CV too;
+    // each consumer slices its rows by (id, cutoff).
     // Guard rails: inputSize caps the slice relative to the OUTER cutoff
     // (not expressible as one pass); non-data-free models train on
-    // window-specific slices; and nested cutoffs are composed single hops
-    // (advance(last, -(outer + v*iH))), exact only on compose-safe freqs —
-    // each of those keeps the per-window nested CV.
+    // window-specific slices; nested cutoffs are composed single hops
+    // (advance(last, -(outer + v*iH))), exact only on compose-safe freqs;
+    // and fusedPredict = false (LocalLoop.enabled) asks for the original
+    // path — each of those keeps the per-window nested CV.
     // Dense-grid precondition: the composed cutoffs assume each series is
     // gap-free up to its outer cutoff (the contract every panel operator
     // documents and PanelFrame.fillGaps/Validation.requireContinuity
@@ -1397,64 +1306,31 @@ private object MLForecastCV {
     // divergence every window transform has on gapped input, not a new one.
     val refitWindows = (0 until nWindows).filter(i => fitWindowOf(i) == i)
     val dynCols = conf.dynamicExogCols(panel)
+    val outerOffsets = windowOffsets(nWindows, h, stepSize)
     val nestedOffsetsOf: Int => Seq[Int] = i =>
-      (1 to intervalWindows).map(v =>
-        h + (nWindows - 1 - i) * stepSize + v * intervalH)
-    val outerOffsets = (0 until nWindows).map(i => h + (nWindows - 1 - i) * stepSize)
-    val fastTrained: Option[Seq[(String, TrainedModel)]] =
-      if (refitWindows.isEmpty || inputSize.isDefined || !conf.fusedPredict ||
-          conf.directHorizons.nonEmpty || conf.targetTransforms.nonEmpty ||
-          !advanceComposes(panel.freq) || !conf.models.forall(_.dataFree)) None
-      else dataFreeTrained(conf, panel, dynCols)
-    // ---- r12: the same sharing property holds WITH target transforms,
-    // because warmup re-fits every transform on its window's slice: a
-    // data-free prediction at cutoff c is a pure function of history <= c
-    // — the transform state (prefix diffs, per-series scaler stats at c)
-    // included — regardless of which refit window's nested CV asked for
-    // it. The kernel can't run transforms, so this path shares ONE
-    // driver-loop frozen backtest over the UNION of offsets instead of
-    // one nested CV per refit window (the reference runs exactly one
-    // scores CV regardless of transforms, forecast.py:682-759). The
-    // slice-of-slice the per-window path takes equals the direct slice
-    // (ds <= outer then ds <= nested ≡ ds <= nested), so results are
-    // bit-identical (CvIntervalsSpec pins fast-vs-slow for a
-    // Differences+scaler config).
-    val sharedDriverTrained: Option[Seq[(String, TrainedModel)]] =
-      if (fastTrained.isDefined || refitWindows.isEmpty || inputSize.isDefined ||
-          !conf.fusedPredict || conf.directHorizons.nonEmpty ||
-          conf.targetTransforms.isEmpty || !advanceComposes(panel.freq) ||
-          conf.models.isEmpty || !conf.models.forall(_.dataFree)) None
-      else
-        try Some(conf.models.map(m => m.name ->
-          m.fit(panel.df, conf.featureCols ++ dynCols, panel.targetCol,
-            panel.weightCol)))
-        catch { case scala.util.control.NonFatal(_) => None }
-    // warmup + predict + actuals per offset over the FULL panel — the
-    // driver twin of the kernel's combined pass (same per-window body as
-    // frozenBacktest, at explicit composed offsets; a future change to
-    // either must update the other). Windows are independent and the
-    // lockstep predict loop materializes eagerly, so a bounded few build
-    // concurrently (Par — the r12 unbounded fan-out of these exact loops
-    // burned 21× the CPU band under box load).
-    def offsetsBacktest(t: Seq[(String, TrainedModel)], offsets: Seq[Int],
-                        hh: Int): DataFrame =
-      Par.run(offsets.map { off =>
-        () => {
-          val cutoffs = windowCutoffs(panel, lastDates, off, hh)
-          val fitted = conf.warmup(trainSlice(panel, cutoffs, None), t)
-          val xDf =
-            if (dynCols.isEmpty) None
-            else Some(panel.df.join(broadcast(cutoffs), Seq(idCol))
-              .filter(col(timeCol) > col("__cutoff"))
-              .select((Seq(idCol, timeCol) ++ dynCols).map(col): _*))
-          val preds = fitted.predict(hh, xDf)
-          val actuals = panel.df.join(broadcast(cutoffs), Seq(idCol))
-            .filter(col(timeCol) > col("__cutoff") && col(timeCol) <= col("__bound"))
-            .select(col(idCol), col(timeCol), col("__cutoff").as("cutoff"),
-              col(targetCol).cast("double").as(targetCol))
-          actuals.join(preds, Seq(idCol, timeCol))
-        }
-      }).reduce(_ unionByName _)
+      (1 to intervalWindows).map(v => outerOffsets(i) + v * intervalH)
+    val shared: Option[Seq[(String, TrainedModel)]] =
+      if (refitWindows.isEmpty || inputSize.isDefined || conf.directHorizons.nonEmpty ||
+          !LocalLoop.enabled(conf) || !advanceComposes(panel.freq) ||
+          !conf.models.forall(_.dataFree)) None
+      else actionlessTrained(conf, panel, dynCols, refit = false)
+    // The shared pass at explicit composed offsets: the fused kernel when
+    // the route rule allows (r13: the transform chain refits per cutoff
+    // inside the task, KernelTransforms — cv_intervals_diff_scaler went ~20
+    // blocking panel-scale actions -> a handful, OPTIMIZATION_r13.md), else
+    // the frozen driver backtest over the full panel. Pinned EAGERLY: every
+    // consumer joins its cutoffs onto it from nWindows concurrent Futures,
+    // and a lazy checkpoint raced by two jobs can compute partitions twice
+    // (the case pinLazy's scaladoc carves out), re-running the pass this
+    // path exists to share.
+    def sharedBacktest(t: Seq[(String, TrainedModel)], offsets: Seq[Int],
+                       hh: Int): DataFrame =
+      (LocalLoop.cvRoute(conf, panel, dynCols, refit = false, None)(t) match {
+        case Some((_, chain)) =>
+          LocalLoop.runCV(panel, conf, t, dynCols, hh, offsets, None,
+            refit = false, None, chain)
+        case None => frozenBacktest(conf, panel, lastDates, t, Nil, offsets, hh)
+      }).localCheckpoint()
     def cutsFor(offsets: Seq[Int]): DataFrame =
       // distinct: duplicate offsets (possible whenever two windows'
       // composed offsets coincide) would otherwise multiply the rows of
@@ -1463,81 +1339,22 @@ private object MLForecastCV {
         lastDates.select(col(idCol),
           panel.freq.advance(col("last_date"), lit(-off)).as("cutoff"))
       }.reduce(_ unionByName _)
-    // every consumer joins its cutoffs onto the CV frame — pin EAGERLY:
-    // these frames fan out to nWindows concurrent Futures, and a lazy
-    // checkpoint raced by two jobs can compute partitions twice (the
-    // exact case pinLazy's scaladoc carves out), re-running the kernel
-    // pass this path exists to share
-    val (cv, sharedNested) = fastTrained match {
+    val (cv, sharedNested) = shared match {
       case Some(t) if intervalH == h =>
-        val all = (outerOffsets ++ refitWindows.flatMap(nestedOffsetsOf))
-          .distinct.sorted.reverse
-        val combined = LocalLoop.runCV(panel, conf, t, dynCols, h, all,
-          None, refit = false, None).localCheckpoint()
-        // re-select to the kernel's column order: the slicing join fronts
+        val combined = sharedBacktest(t,
+          (outerOffsets ++ refitWindows.flatMap(nestedOffsetsOf)).distinct.sorted.reverse, h)
+        // re-select to the pass's column order: the slicing join fronts
         // its keys, and downstream callers see run()'s layout
         val order = combined.columns.toSeq
         val outer = combined
-          .join(broadcast(cutsFor(outerOffsets.distinct)), Seq(idCol, "cutoff"))
+          .join(broadcast(cutsFor(outerOffsets)), Seq(idCol, "cutoff"))
           .select(order.map(c => col(s"`$c`")): _*)
         (outer, Some(combined))
-      case Some(t) =>
-        val allNested =
-          refitWindows.flatMap(nestedOffsetsOf).distinct.sorted.reverse
-        val nested = LocalLoop.runCV(panel, conf, t, dynCols, intervalH,
-          allNested, None, refit = false, None).localCheckpoint()
+      case _ =>
+        val nested = shared.map(sharedBacktest(_,
+          refitWindows.flatMap(nestedOffsetsOf).distinct.sorted.reverse, intervalH))
         (run(conf, rawPanel, nWindows, h, stepSize, refit, refitEvery,
-          inputSize).localCheckpoint(), Some(nested))
-      case None => sharedDriverTrained match {
-        case Some(t) if intervalH == h =>
-          val all = (outerOffsets ++ refitWindows.flatMap(nestedOffsetsOf))
-            .distinct.sorted.reverse
-          // r13: when every transform has a kernel twin, the shared
-          // backtest runs as ONE fused mapPartitions pass (per-cutoff
-          // transform refit inside the task, KernelTransforms) instead of
-          // a bounded driver-loop fan-out of warmup+lockstep windows —
-          // cv_intervals_diff_scaler went ~20 blocking panel-scale actions
-          // -> a handful (see OPTIMIZATION_r13.md); CvIntervalsSpec pins
-          // kernel-vs-driver bit-identity with exceptAll.
-          // allScored (r14, ADVICE): LocalLoop.supported's predict
-          // criterion admits seriesLevels-only models, which runCV rejects
-          // with a throw — a dataFree seriesLevels-only model must fall
-          // back to offsetsBacktest, like dataFreeTrained's probe
-          val allScored = t.forall { case (_, tm) =>
-            tm.scorer(conf.featureCols ++ dynCols).isDefined }
-          val kernelTfms = KernelTransforms.chainOf(conf.targetTransforms)
-            .filter(_ => allScored && LocalLoop.supported(conf, panel, t, dynCols))
-          val combined = (kernelTfms match {
-            case Some(ks) =>
-              LocalLoop.runCV(panel, conf, t, dynCols, h, all, None,
-                refit = false, None, ks)
-            case None => offsetsBacktest(t, all, h)
-          }).localCheckpoint()
-          val order = combined.columns.toSeq
-          val outer = combined
-            .join(broadcast(cutsFor(outerOffsets.distinct)), Seq(idCol, "cutoff"))
-            .select(order.map(c => col(s"`$c`")): _*)
-          (outer, Some(combined))
-        case Some(t) =>
-          val allNested =
-            refitWindows.flatMap(nestedOffsetsOf).distinct.sorted.reverse
-          // same allScored fallback guard as the intervalH == h arm above
-          val allScoredN = t.forall { case (_, tm) =>
-            tm.scorer(conf.featureCols ++ dynCols).isDefined }
-          val kernelTfms = KernelTransforms.chainOf(conf.targetTransforms)
-            .filter(_ => allScoredN && LocalLoop.supported(conf, panel, t, dynCols))
-          val nested = (kernelTfms match {
-            case Some(ks) =>
-              LocalLoop.runCV(panel, conf, t, dynCols, intervalH, allNested,
-                None, refit = false, None, ks)
-            case None => offsetsBacktest(t, allNested, intervalH)
-          }).localCheckpoint()
-          (run(conf, rawPanel, nWindows, h, stepSize, refit, refitEvery,
-            inputSize).localCheckpoint(), Some(nested))
-        case None =>
-          (run(conf, rawPanel, nWindows, h, stepSize, refit, refitEvery,
-            inputSize).localCheckpoint(), None)
-      }
+          inputSize).localCheckpoint(), nested)
     }
     val meta = Set(idCol, timeCol, targetCol, "cutoff")
     val names = cv.columns.filterNot(meta).toSeq
@@ -1555,14 +1372,12 @@ private object MLForecastCV {
     val frozenFits: Map[Int, Future[FittedMLForecast]] =
       (0 until nWindows).filter(i => fitWindowOf(i) != i)
         .map(fitWindowOf).distinct.map { fw =>
-          val cutoffs = windowCutoffs(panel, lastDates,
-            h + (nWindows - 1 - fw) * stepSize, h)
+          val cutoffs = windowCutoffs(panel, lastDates, outerOffsets(fw), h)
           fw -> Future { conf.fit(trainSlice(panel, cutoffs, inputSize)) }
         }.toMap
     val parts = Par.run((0 until nWindows).map { i =>
       () => {
-        val cutoffs = windowCutoffs(panel, lastDates,
-          h + (nWindows - 1 - i) * stepSize, h)
+        val cutoffs = windowCutoffs(panel, lastDates, outerOffsets(i), h)
         val winPreds = cv.join(
           broadcast(cutoffs.select(col(idCol), col("__cutoff").as("cutoff"))),
           Seq(idCol, "cutoff"))
@@ -1577,10 +1392,13 @@ private object MLForecastCV {
             levels, method, freq = Some(panel.freq))
         } else {
           // frozen window: the reference's default 'recalibrate' transfer —
-          // SIGNED residuals from a frozen backtest, pooled per step
+          // SIGNED residuals from a frozen backtest (step_size=1, the
+          // reference default: no refit means no leakage from overlapping
+          // windows), pooled per step
           val fitted = Await.result(frozenFits(fitWindowOf(i)), Duration.Inf)
-          val back = frozenBacktest(conf, train, fitted.trained,
-            fitted.directTrained, intervalWindows, intervalH)
+          val tp = train.copy(df = MLForecast.pin(train.df))
+          val back = frozenBacktest(conf, tp, tp.lastDates, fitted.trained,
+            fitted.directTrained, windowOffsets(intervalWindows, intervalH, 1), intervalH)
           val scores = ConformalTransfer.signedScores(back, idCol, timeCol,
             targetCol, names, freq = Some(panel.freq))
           ConformalTransfer.addSignedIntervals(winPreds, scores, idCol,
@@ -1602,9 +1420,9 @@ private object MLForecastCV {
     import panel.{idCol, timeCol, targetCol}
     val lastDates = panel.lastDates
     def fitWindowOf(i: Int): Int = fitWindow(i, refit, refitEvery)
-    def cutoffsAt(i: Int): DataFrame =
-      windowCutoffs(panel, lastDates, h + (nWindows - 1 - i) * stepSize, h)
-    // bounded fan-out (Par) for the same reason as run/frozenBacktest
+    val offsets = windowOffsets(nWindows, h, stepSize)
+    def cutoffsAt(i: Int): DataFrame = windowCutoffs(panel, lastDates, offsets(i), h)
+    // bounded fan-out (Par) for the same reason as backtest
     val refitIdx = (0 until nWindows).map(fitWindowOf).distinct
     val fits: Map[Int, FittedMLForecast] =
       refitIdx.zip(Par.run(refitIdx.map(i => () =>

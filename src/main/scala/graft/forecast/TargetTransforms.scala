@@ -217,9 +217,9 @@ sealed abstract class LocalScaler extends TargetTransform {
     * preceded by an ordered window transform (the diff-first chains every
     * test and oracle pin) that order is the (id, ds) sort; a scaler FIRST
     * in the chain aggregates in the source pin's arrival order, which
-    * Spark's non-stable sort by id alone does not fix — exact-replay
-    * consumers (fused state, SQL oracles) hold only for integer-valued
-    * targets or ordered upstreams there.
+    * Spark's non-stable sort by id alone does not fix — SQL oracles hold
+    * only for integer-valued targets or ordered upstreams there, and the
+    * fused state and kernel twins decline it ([[LocalScaler.sumMomentsFirst]]).
     */
   private[forecast] def withStats(df: DataFrame, p: PanelFrame): DataFrame
 
@@ -280,16 +280,27 @@ private[forecast] final case class ScalerFitted(
     inverse(df, idCol, lit(0L), valueCols)
 
   // Frozen update: new rows are scaled with the ORIGINAL fit stats (the
-  // reference does not refit scalers on update).
+  // reference does not refit scalers on update) — the same relation
+  // state() saves and inverse() broadcasts, so a fused chain never
+  // re-runs the unfused stats pass.
   def update(p: PanelFrame): FittedTargetTransform = {
-    val tf = p.df.join(broadcast(st.withColumnRenamed(fitIdCol, p.idCol)), Seq(p.idCol))
+    val tf = p.df.join(broadcast(stResolved.withColumnRenamed(fitIdCol, p.idCol)), Seq(p.idCol))
       .withColumn(p.targetCol, (p.y - col("__shift")) / col("__scale"))
       .drop("__shift", "__scale")
-    ScalerFitted(p.copy(df = tf), st, fitIdCol)
+    ScalerFitted(p.copy(df = tf), stResolved, fitIdCol)
   }
 }
 
 object LocalScaler {
+  /** A standard scaler FIRST in a chain sums its moments in the source's
+    * arrival order (see [[LocalScaler.withStats]]), which no time-ordered
+    * replay reproduces on float targets — the fused state
+    * ([[TransformState.fuseChain]]) and the kernel twins
+    * ([[KernelTransforms.chainOf]]) both decline such a chain.
+    */
+  private[forecast] def sumMomentsFirst(chain: Seq[TargetTransform]): Boolean =
+    chain.headOption.exists(_.isInstanceOf[LocalStandardScaler])
+
   /** sklearn's handle_zeros_in_scale: a zero scale — a constant (or, for
     * robust scalers, zero-spread) series — scales by 1.0 instead of
     * crashing the WHOLE fit with an ANSI DIVIDE_BY_ZERO; the inverse

@@ -28,7 +28,8 @@ import graft.core.PanelFrame
   * to the relation it replaces (TransformStateSpec pins this per family).
   *
   * Scope: fresh fits of Differences / LocalScaler / GlobalFuncTransform
-  * chains with at least two state passes to fuse. Restored chains keep
+  * chains with at least two state passes to fuse, except chains that open
+  * with a standard scaler ([[LocalScaler.sumMomentsFirst]]). Restored chains keep
   * frozen state untouched; BoxCox/auto/global-func-only chains have nothing
   * to fuse; anything unrecognized falls back to the per-transform passes.
   */
@@ -75,7 +76,7 @@ private[forecast] object TransformState {
     }.sum
     // a single state pass fuses into itself — nothing to win, keep the
     // per-transform shape (and its test surface) untouched
-    if (!fusable || statePasses < 2) return fitted
+    if (!fusable || statePasses < 2 || LocalScaler.sumMomentsFirst(transforms)) return fitted
 
     val base = inputs.head
     val tgt = base.targetCol

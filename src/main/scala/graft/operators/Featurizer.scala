@@ -387,9 +387,9 @@ object Featurizer {
         // each per-ordinal component is a singleton (sum(v)=v, count=1,
         // sum(v*v)=v*v), so the row-level window accumulates the same
         // values in the same ordinal order — bit-identical (pinned by
-        // PooledIdentityCollapseSpec against the comps path). In the
-        // recursive predict loop this removes two exchanges + a broadcast
-        // build from EVERY step's plan. Escape hatch:
+        // LagTransformsSpec "identity collapse…" against the comps path).
+        // In the recursive predict loop this removes two exchanges + a
+        // broadcast build from EVERY step's plan. Escape hatch:
         // spark.graft.pooledIdentityCollapse=false restores the comps
         // shape (e.g. for frames with duplicate (id, ds) rows, where the
         // two paths differ in float association order — same statistic,
