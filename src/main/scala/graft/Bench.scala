@@ -897,10 +897,6 @@ object Bench {
     * rolling min/max — 13 features — plus 4 date features and
     * Differences([1,7]) + LocalStandardScaler target transforms.
     */
-  /** The benchPredict model config, exposed for tools.PhaseTime. */
-  private[graft] def benchWorkloadConf(): MLForecast =
-    workloadConf(Seq(SparkLinearRegression(), Models.seasonalNaive(7)))
-
   private def workloadConf(models: Seq[graft.forecast.ForecastModel]): MLForecast =
     MLForecast(
       models = models,

@@ -6162,7 +6162,7 @@ object OracleQueries {
   private def dreIntervals(s: SparkSession, dir: String): DataFrame = {
     // ONE fit shared by the weight training and the prediction assembly:
     // the two halves read the same fitted pipeline, and a second fit was a
-    // second full panel pin (r11 ExecTrace: the query's top two executions)
+    // second full panel pin (r11 execution trace: the query's top two executions)
     val fitted = dreConf.fit(dense(s, dir))
     // weights quantized to 2^-20 dyadics INSIDE the oracle query: both
     // engines floor identical trained weights identically, and dyadic

@@ -34,7 +34,6 @@ final case class MLForecast(
     horizons: Option[Seq[Int]] = None, // 1-indexed sparse horizons
     incrementalPredict: Boolean = true, // updates_only fast path for expanding/EWM
     fusedPredict: Boolean = true, // per-series fused loop when all transforms are local
-    materializeFit: Boolean = true, // checkpoint the panel once at fit (see prepare)
     horizonFeatures: Map[Int, Seq[String]] = Map.empty, // 1-indexed horizon -> exog cols
     horizonFeatureTemplates: Seq[String] = Nil, // "{h}" patterns matched against exog cols
 ) {
@@ -277,39 +276,22 @@ final case class MLForecast(
     // panel's upstream plan (at scale: re-scans the source). This is the
     // reference's own stance (fit extracts GroupedArray once,
     // core.py:563-571); localCheckpoint keeps blocks on executors and frees
-    // them with the lineage. Opt out with materializeFit=false for
-    // single-action uses on pre-cached inputs.
+    // them with the lineage.
     val src =
-      if (!materializeFit) panel
       // warmup/load rebuilds: consumers are sequential (predict follows),
       // so a LAZY pin folds the materialization into the first action
       // instead of a blocking round-trip; fit keeps the eager pin because
       // its consumers (validation, concurrent model fits) race on it
-      else if (pinLazy) panel.copy(df = MLForecast.pinLazy(panel.df))
+      if (pinLazy) panel.copy(df = MLForecast.pinLazy(panel.df))
       else panel.copy(df = MLForecast.pin(panel.df))
     if (validate) Validation.requireValid(src) // one pass, one action
-    var p = src
-    val inputs = Seq.newBuilder[PanelFrame]
-    val fitted0 = targetTransforms.zipWithIndex.map { case (t, i) =>
-      inputs += p
-      val st = restoreStates.lift(i).getOrElse(Nil)
-      val f = if (st.isEmpty) t.fit(p) else t.restore(p, st)
-      p = f.transformed; f
-    }
-    // r14: freshly-fit Differences/scaler chains slice ONE fused state
-    // relation instead of one full-panel window pass per diff stage +
-    // scaler (TransformState.fuseChain; restored chains keep their frozen
-    // state untouched — recomputing a restored scaler's stats would undo
-    // the save/load freeze)
-    val fitted =
-      if (restoreStates.exists(_.nonEmpty)) fitted0
-      else TransformState.fuseChain(targetTransforms, fitted0, inputs.result())
-    // The transformed panel is the pipeline's working state (the reference
-    // stores the transformed GroupedArray); without a pin every predict/CV
-    // action replays the diff/scaler chain over the source. Lazy: the first
-    // consumer (feature materialization at fit) pays it.
-    if (targetTransforms.nonEmpty && materializeFit)
-      p = p.copy(df = p.df.localCheckpoint(false))
+    // fresh and restored stages alike slice ONE state relation per run of
+    // Differences/scaler stages (TransformState); a restored scaler enters
+    // with its frozen stats, never recomputed over the panel
+    val fitted = TransformState.chain(src, targetTransforms.zipWithIndex.map { case (t, i) =>
+      TransformState.fitStage(t, restoreStates.lift(i).getOrElse(Nil))
+    })
+    val p = MLForecast.workingPanel(src, fitted)
     val featurized = Featurizer.addFeatures(p, spec)
     val train = MLForecast.dropNa(featurized,
       spec.featureNames ++ dynamicExogCols(panel) :+ p.targetCol)
@@ -318,9 +300,8 @@ final case class MLForecast(
 
   /** Convenience: preprocess only (the reference's `preprocess`). */
   def preprocess(panel: PanelFrame): DataFrame = {
-    var p = panel
-    targetTransforms.foreach { t => p = t.fit(p).transformed }
-    Featurizer.addFeatures(p, spec)
+    val fitted = TransformState.chain(panel, targetTransforms.map(TransformState.fitStage(_, Nil)))
+    Featurizer.addFeatures(fitted.lastOption.fold(panel)(_.transformed), spec)
   }
 }
 
@@ -333,6 +314,18 @@ object MLForecast {
     * alias — it exists so reference users find the entry point by name.
     */
   def fromCv(result: LightGBMCVResult): FittedMLForecast = result.fitted
+
+  /** The transformed panel is the pipeline's working state (the reference
+    * stores the transformed GroupedArray); without a pin every predict/CV
+    * action replays the transform chain over the source. Lazy: the first
+    * consumer (feature materialization at fit) pays it. `src` itself when
+    * the chain is empty.
+    */
+  private[forecast] def workingPanel(src: PanelFrame,
+                                     fitted: Seq[FittedTargetTransform]): PanelFrame =
+    fitted.lastOption.fold(src) { f =>
+      f.transformed.copy(df = f.transformed.df.localCheckpoint(false))
+    }
 
   /** localCheckpoint unless the frame already IS one (its logical plan is
     * the materialized LogicalRDD) — fit, CV and update all pin their input,
@@ -668,22 +661,7 @@ final case class FittedMLForecast(
   }
 
   private def inverseTransforms(preds: DataFrame, valueCols: Seq[String]): DataFrame = {
-    // Materialize the chain's lazy per-series state (diff tails, scaler
-    // stats) before the inverse plan's broadcast builds force it relation
-    // by relation. r14: a fused chain (TransformState) holds ONE shared
-    // relation for the whole chain — force each distinct pin exactly once
-    // (racing the same lazy checkpoint from several threads can compute
-    // partitions twice); any remaining standalone state still overlaps on
-    // the bounded pool (r13 measurement: three sequential ~0.3 s passes on
-    // the diff(1,7)+scaler predict when left to the broadcasts).
-    val sharedPins = fittedTransforms.flatMap(_.inverseStateShared)
-      .foldLeft(Vector.empty[TransformState.Shared]) { (acc, s) =>
-        if (acc.exists(_ eq s)) acc else acc :+ s
-      }
-    sharedPins.foreach(_.force())
-    val standalone = fittedTransforms.filter(_.inverseStateShared.isEmpty)
-    if (standalone.size > 1)
-      Par.run(standalone.map(t => () => t.pinInverseState()))
+    TransformState.force(fittedTransforms)
     val stepIdx = row_number().over(
       Window.partitionBy(col(idCol)).orderBy(col(timeCol))).cast("long") - 1
     fittedTransforms.reverse.foldLeft(preds) { (df, t) =>
@@ -1007,15 +985,11 @@ final case class FittedMLForecast(
     }
 
     val appended = basePanel.copy(df = basePanel.df.unionByName(newC))
-    var cur = appended
-    val newFitted = fittedTransforms.map { f =>
-      val nf = f.update(cur); cur = nf.transformed; nf
-    }
-    // mirror prepare(): the re-transformed panel is the new working state —
-    // without a pin every later predict/CV replays the union + transform
-    // updates, compounding across chained update() calls
-    if (conf.targetTransforms.nonEmpty && conf.materializeFit)
-      cur = cur.copy(df = cur.df.localCheckpoint(false))
+    // one fused state relation for the updated chain, like prepare()
+    val newFitted = TransformState.chain(appended, fittedTransforms.map(TransformState.updateStage))
+    // mirror prepare(): without a pin every later predict/CV replays the
+    // union + transform updates, compounding across chained update() calls
+    val cur = MLForecast.workingPanel(appended, newFitted)
     val featurized = Featurizer.addFeatures(cur, conf.spec)
     FittedMLForecast(conf, appended, cur, newFitted, trained, featurized, directTrained)
   }

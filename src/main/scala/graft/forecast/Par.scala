@@ -18,12 +18,8 @@ package graft.forecast
   */
 private[graft] object Par {
 
-  /** Windows in flight per fan-out; override with SPARK_GRAFT_WINDOW_PAR. */
-  def defaultWidth: Int =
-    sys.env.get("SPARK_GRAFT_WINDOW_PAR")
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-      .filter(_ > 0)
-      .getOrElse(3)
+  /** Windows in flight per fan-out. */
+  val defaultWidth: Int = 3
 
   /** Run `thunks` with at most `width` in flight; preserves order and
     * rethrows the first failure with its original type (callers' loud

@@ -60,23 +60,6 @@ trait FittedTargetTransform extends Serializable {
     * transform is a pure function of the panel and restore() can refit.
     */
   def state: Seq[DataFrame] = Nil
-
-  /** Materialize any lazy per-series state this transform's `inverse`
-    * broadcasts (difference tails, scaler stats). Each state relation is a
-    * separate window pass over the fitted panel and they materialize
-    * SEQUENTIALLY when the inverse chain's broadcasts force them one by
-    * one; callers with several transforms force them concurrently through
-    * here first (r13 — the diff(1,7)+scaler predict paid three back-to-back
-    * ~0.3 s passes). Idempotent: pinned state is only computed once.
-    */
-  private[forecast] def pinInverseState(): Unit = ()
-
-  /** The fused state relation this transform's state slices (r14,
-    * [[TransformState.fuseChain]]); None = standalone per-transform state.
-    * Callers force each DISTINCT shared relation once (one job for the
-    * whole chain) before building inverse plans.
-    */
-  private[forecast] def inverseStateShared: Option[TransformState.Shared] = None
 }
 
 private[forecast] object FittedInverse {
@@ -114,60 +97,26 @@ private[forecast] object FittedInverse {
   */
 final case class Differences(ds: Seq[Int]) extends TargetTransform {
   require(ds.nonEmpty && ds.forall(_ > 0))
-  def fit(p: PanelFrame): FittedTargetTransform = {
-    var cur = p.df
-    val w = Window.partitionBy(p.id).orderBy(p.ds)
-    val rn = Window.partitionBy(p.id).orderBy(p.ds.desc)
-    val tails = Seq.newBuilder[DataFrame]
-    for (d <- ds) {
-      // tail of the CURRENT stage (pre-diff values), phase-indexed:
-      // phase = (d - position_from_end) mod d, position_from_end 1..d
-      val tail = cur
-        .withColumn("__from_end", row_number().over(rn))
-        .filter(col("__from_end") <= d)
-        .select(p.id.as("__tid"),
-          ((lit(d) - col("__from_end")) % d).cast("int").as("__tphase"),
-          p.y.cast("double").as("__tail"))
-      tails += tail
-      cur = cur.withColumn(p.targetCol, p.y - lag(p.y, d).over(w))
-    }
-    DiffFitted(p.copy(df = cur), p, ds, tails.result())
-  }
+  def fit(p: PanelFrame): FittedTargetTransform =
+    TransformState.chain(p, Seq(TransformState.Diff(ds))).head
 }
 
+/** Tails are tiny (d rows per series) slices of the chain's shared state
+  * relation ([[TransformState]]), resolved on first use so chains that
+  * never invert pay nothing, and broadcast as-is.
+  */
 private[forecast] final case class DiffFitted(
-    transformed: PanelFrame, orig: PanelFrame,
-    ds: Seq[Int], tails: Seq[DataFrame],
-    shared: Option[TransformState.Shared] = None,
-    sharedTails: Option[() => Seq[DataFrame]] = None)
+    transformed: PanelFrame, orig: PanelFrame, ds: Seq[Int],
+    shared: TransformState.Shared, tailCols: Seq[String])
     extends FittedTargetTransform {
-  // Tails are tiny (d rows per series) but their lineage is a full-panel
-  // window pass. Pinning at FIT would cost every one-shot preprocess a
-  // separate materialization job; pinning lazily at first INVERSE use makes
-  // only predict/CV pay it, once, and repeats read the blocks. Fused chains
-  // (r14, TransformState) hand LAZY slices of ONE pinned relation —
-  // resolved on first use so chains that never invert pay nothing, and
-  // broadcast as-is (re-checkpointing each slice would add a job per stage
-  // for data the parent pin already holds).
-  private[forecast] lazy val tailsResolved: Seq[DataFrame] =
-    sharedTails.map(_()).getOrElse(tails)
-  private lazy val tailsPinned =
-    if (sharedTails.isDefined) tailsResolved
-    else tailsResolved.map(_.localCheckpoint(false))
-
-  override private[forecast] def pinInverseState(): Unit = shared match {
-    case Some(s) => s.force()
-    case None =>
-      tailsPinned.foreach(_.queryExecution.toRdd.foreachPartition(_ => ()))
-  }
-
-  override private[forecast] def inverseStateShared: Option[TransformState.Shared] = shared
+  private[forecast] lazy val tails: Seq[DataFrame] =
+    ds.zip(tailCols).map { case (d, c) => shared.tail(d, c) }
 
   def inverse(preds: DataFrame, idCol: String, stepIdx: Column,
               valueCols: Seq[String]): DataFrame = {
     var out = preds
     // reverse order: undo the last difference first
-    for ((d, tail) <- ds.zip(tailsPinned).reverse) {
+    for ((d, tail) <- ds.zip(tails).reverse) {
       val phase = (stepIdx % d).cast("int")
       val w = Window.partitionBy(col(idCol), col("__phase"))
         .orderBy(stepIdx).rowsBetween(Window.unboundedPreceding, 0)
@@ -190,7 +139,8 @@ private[forecast] final case class DiffFitted(
 
   // Differencing has no fitted parameters — re-deriving diffs and tails from
   // the appended panel IS the incremental update (diff is a pure function of
-  // history; the tails land at the new series ends).
+  // history; the tails land at the new series ends). FittedMLForecast.update
+  // re-fuses the whole chain instead (TransformState.updateStage).
   def update(p: PanelFrame): FittedTargetTransform = Differences(ds).fit(p)
 
   def inverseFitted(df: DataFrame, idCol: String, timeCol: String,
@@ -206,9 +156,9 @@ private[forecast] final case class DiffFitted(
   * 100 TB that is two full passes over the differenced panel), while the
   * window pass shares the one (id, ds) sort every surrounding transform
   * already requires. The per-id stats RELATION (save/load state, predict
-  * inverse, frozen update) is the distinct of the same window columns, so
-  * forward and inverse use numerically identical values; it only
-  * materializes when one of those paths actually runs.
+  * inverse, frozen update) is a slice of the same replayed window columns
+  * ([[TransformState]]), so forward and inverse use identical values; it
+  * only materializes when one of those paths actually runs.
   */
 sealed abstract class LocalScaler extends TargetTransform {
   /** Adds `__shift`/`__scale` via window aggregates over partitionBy(id).
@@ -217,56 +167,41 @@ sealed abstract class LocalScaler extends TargetTransform {
     * preceded by an ordered window transform (the diff-first chains every
     * test and oracle pin) that order is the (id, ds) sort; a scaler FIRST
     * in the chain aggregates in the source pin's arrival order, which
-    * Spark's non-stable sort by id alone does not fix — SQL oracles hold
-    * only for integer-valued targets or ordered upstreams there, and the
-    * fused state and kernel twins decline it ([[LocalScaler.sumMomentsFirst]]).
+    * Spark's sort by id alone does not fix — SQL oracles hold only for
+    * integer-valued targets or ordered upstreams there; the kernel twins
+    * decline it and the state builder freezes its stats
+    * ([[LocalScaler.sumsUnordered]]).
     */
   private[forecast] def withStats(df: DataFrame, p: PanelFrame): DataFrame
 
-  private def safeScale(df: DataFrame): DataFrame = LocalScaler.safeScale(df)
-
-  protected def stats(p: PanelFrame): DataFrame = // (id, __shift, __scale)
-    safeScale(withStats(p.df, p))
+  /** Per-series `(id, __shift, __scale)`: the window-distinct relation. */
+  private[forecast] def stats(p: PanelFrame): DataFrame =
+    LocalScaler.safeScale(withStats(p.df, p))
       .select(col(p.idCol), col("__shift"), col("__scale")).distinct()
   // persisted frozen stats: re-apply them, don't recompute over the panel
   override def restore(p: PanelFrame, state: Seq[DataFrame]): FittedTargetTransform =
-    ScalerFitted(p, state.head, p.idCol).update(p)
-  def fit(p: PanelFrame): FittedTargetTransform = {
-    val tf = safeScale(withStats(p.df, p))
-      .withColumn(p.targetCol, (p.y - col("__shift")) / col("__scale"))
-      .drop("__shift", "__scale")
-    ScalerFitted(p.copy(df = tf), stats(p), p.idCol)
-  }
+    TransformState.chain(p, Seq(TransformState.Frozen(state.head))).head
+  def fit(p: PanelFrame): FittedTargetTransform =
+    TransformState.chain(p, Seq(TransformState.Scale(this))).head
 }
 
+/** Stats are a slice of the chain's shared state relation
+  * ([[TransformState]]), resolved on first use (state/save included) and
+  * broadcast as-is.
+  */
 private[forecast] final case class ScalerFitted(
-    transformed: PanelFrame, st: DataFrame, fitIdCol: String,
-    shared: Option[TransformState.Shared] = None,
-    sharedSt: Option[() => DataFrame] = None) extends FittedTargetTransform {
-  // one row per series; pinned lazily at first inverse so repeated
-  // predict/CV inverses reuse the stats while one-shot fits stay fused.
-  // Fused chains (r14, TransformState) hand a LAZY slice of ONE pinned
-  // relation — resolved on first use (state/save included) and broadcast
-  // as-is, no second checkpoint.
-  private[forecast] lazy val stResolved: DataFrame =
-    sharedSt.map(_()).getOrElse(st)
-  override def state: Seq[DataFrame] = Seq(stResolved)
-  private lazy val stPinned =
-    if (sharedSt.isDefined) stResolved else st.localCheckpoint(false)
+    transformed: PanelFrame, shared: TransformState.Shared, statCols: (String, String))
+    extends FittedTargetTransform {
+  private[forecast] lazy val st: DataFrame = shared.stats(statCols._1, statCols._2)
+  override def state: Seq[DataFrame] = Seq(st)
 
-  override private[forecast] def pinInverseState(): Unit = shared match {
-    case Some(s) => s.force()
-    case None => stPinned.queryExecution.toRdd.foreachPartition(_ => ())
-  }
-
-  override private[forecast] def inverseStateShared: Option[TransformState.Shared] = shared
   def inverse(preds: DataFrame, idCol: String, stepIdx: Column,
               valueCols: Seq[String]): DataFrame = {
     // LEFT join like the BoxCox/diff inverses: a series absent from the
     // fit-time stats keeps its rows with null values instead of silently
     // VANISHING from the forecast frame
     val joined = preds.join(
-      broadcast(stPinned.withColumnRenamed(fitIdCol, idCol)), Seq(idCol), "left")
+      broadcast(st.withColumnRenamed(shared.idCol, idCol)), Seq(idCol), "left")
     val inv = valueCols.map { c =>
       c -> (col(s"`$c`") * col("__scale") + col("__shift"))
     }
@@ -281,25 +216,20 @@ private[forecast] final case class ScalerFitted(
 
   // Frozen update: new rows are scaled with the ORIGINAL fit stats (the
   // reference does not refit scalers on update) — the same relation
-  // state() saves and inverse() broadcasts, so a fused chain never
-  // re-runs the unfused stats pass.
-  def update(p: PanelFrame): FittedTargetTransform = {
-    val tf = p.df.join(broadcast(stResolved.withColumnRenamed(fitIdCol, p.idCol)), Seq(p.idCol))
-      .withColumn(p.targetCol, (p.y - col("__shift")) / col("__scale"))
-      .drop("__shift", "__scale")
-    ScalerFitted(p.copy(df = tf), stResolved, fitIdCol)
-  }
+  // state() saves and inverse() broadcasts.
+  def update(p: PanelFrame): FittedTargetTransform =
+    TransformState.chain(p, Seq(TransformState.Frozen(st))).head
 }
 
 object LocalScaler {
-  /** A standard scaler FIRST in a chain sums its moments in the source's
-    * arrival order (see [[LocalScaler.withStats]]), which no time-ordered
-    * replay reproduces on float targets — the fused state
-    * ([[TransformState.fuseChain]]) and the kernel twins
-    * ([[KernelTransforms.chainOf]]) both decline such a chain.
+  /** A standard scaler with no difference stage before it sums its moments
+    * in the source's arrival order (see [[LocalScaler.withStats]]), which
+    * no time-ordered replay reproduces on float targets: the kernel twins
+    * ([[KernelTransforms.chainOf]]) decline such a chain, and the state
+    * builder ([[TransformState]]) freezes that scaler's stats.
     */
-  private[forecast] def sumMomentsFirst(chain: Seq[TargetTransform]): Boolean =
-    chain.headOption.exists(_.isInstanceOf[LocalStandardScaler])
+  private[forecast] def sumsUnordered(chain: Seq[TargetTransform]): Boolean =
+    chain.takeWhile(!_.isInstanceOf[Differences]).exists(_.isInstanceOf[LocalStandardScaler])
 
   /** sklearn's handle_zeros_in_scale: a zero scale — a constant (or, for
     * robust scalers, zero-spread) series — scales by 1.0 instead of
@@ -307,7 +237,7 @@ object LocalScaler {
     * round-trips through the same stored scale, so the affine map stays
     * exact. A null scale (all-null series) also maps to 1.0 — the target
     * is null there regardless. Shared with the fused-state replay
-    * ([[TransformState.fuseChain]]) so both paths apply one definition.
+    * ([[TransformState]]) so both paths apply one definition.
     */
   private[forecast] def safeScale(df: DataFrame): DataFrame =
     df.withColumn("__scale",
@@ -366,7 +296,7 @@ final case class GlobalFuncTransform(name: String) extends TargetTransform {
     case "sqrt"  => sqrt
   }
   /** Forward map as a column rewrite — shared by fit and the fused-state
-    * replay ([[TransformState.fuseChain]], which must pass the running
+    * replay ([[TransformState]], which must pass the running
     * target through stateless stages with the exact fit arithmetic).
     */
   private[forecast] def forward(df: DataFrame, targetCol: String): DataFrame =

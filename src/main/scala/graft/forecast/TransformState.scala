@@ -1,44 +1,74 @@
 package graft.forecast
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.core.PanelFrame
 
-/** Fused per-series transform state (r14, optimization guide §2.4 "remove
-  * shuffles outright" / §1.2 "fix the distributed algorithm").
+/** The one builder of per-series transform state (difference tails, scaler
+  * stats) and of the forward pass that produces it.
   *
-  * A freshly-fit transform chain owns lazy per-series inverse state — one
-  * tail relation per difference stage, one stats relation per scaler — and
-  * each is a SEPARATE full-panel window pass over the source pin (r13
-  * measured three back-to-back ~0.3 s passes on the Differences(1,7) +
-  * LocalStandardScaler predict; d20c0ca merely overlapped them). All of
-  * that state is derivable in ONE pass: the forward chain is stacked window
-  * expressions over the same (id, ds) sort, every intermediate target can
-  * ride along as an extra column, and the state rows are the last
-  * max(d) rows per series. [[fuseChain]] rebuilds the fitted chain so each
-  * transform's state is a cheap slice of that single pinned relation.
+  * A chain's inverse state is derivable in ONE pass: the forward chain is
+  * stacked window expressions over the same (id, ds) sort, every
+  * intermediate target rides along as an extra column, and the state rows
+  * are the last max(d) rows per series. [[chain]] replays each run of
+  * Differences / LocalScaler / GlobalFuncTransform stages that way and hands
+  * every stage's state out as a cheap slice of that single lazily pinned
+  * relation. Fresh fits, restores (`MLForecast.prepare`) and updates
+  * (`FittedMLForecast.update`) all go through it, and so does a transform
+  * fit on its own (a one-stage chain).
   *
-  * Exactness: the fused frame replays the chain's own column expressions in
-  * fit order — the same diff arithmetic in the panel target's native type,
-  * the same scaler window aggregates over rows in the same (id, ds) sorted
-  * order (the stats windows stack exactly where the per-transform plans put
-  * them, BEFORE the descending tail rank) — so every slice is value-equal
-  * to the relation it replaces (TransformStateSpec pins this per family).
+  * Exactness: a stage's transformed panel and its state slice are two
+  * projections of the same replayed columns, so the tails ARE the last d
+  * values of the stage input and transformed == (input - shift) / scale
+  * with the stats slice (TransformStateSpec pins both against values the
+  * spec computes itself). A scaler with FROZEN stats enters the replay as a
+  * broadcast join of its stats relation instead of a window aggregate:
+  * restored and updated scalers, and a standard scaler with no difference
+  * stage before it, whose sum-based moments accumulate in the source's
+  * arrival order that no later (id, ds)-sorted replay reproduces on float
+  * targets ([[LocalScaler.sumsUnordered]]); its stats are its own
+  * `stats(p)` window-distinct relation.
   *
-  * Scope: fresh fits of Differences / LocalScaler / GlobalFuncTransform
-  * chains with at least two state passes to fuse, except chains that open
-  * with a standard scaler ([[LocalScaler.sumMomentsFirst]]). Restored chains keep
-  * frozen state untouched; BoxCox/auto/global-func-only chains have nothing
-  * to fuse; anything unrecognized falls back to the per-transform passes.
+  * Scope: stages with their own state (BoxCox, the auto transforms, user
+  * transforms) are [[Opaque]]: they fit, restore and update themselves and
+  * split the chain into separately fused runs.
   */
 private[forecast] object TransformState {
 
-  /** One lazily-pinned relation shared by every slice; identity-equal so
-    * callers can dedupe across a chain's transforms.
+  /** One stage of a chain, as the replay sees it. */
+  sealed trait Stage
+  final case class Diff(ds: Seq[Int]) extends Stage
+  /** Scaler whose stats are a window aggregate over the stage input. */
+  final case class Scale(scaler: LocalScaler) extends Stage
+  /** Scaler with frozen per-series stats `(id, __shift, __scale)`. */
+  final case class Frozen(stats: DataFrame) extends Stage
+  final case class Func(g: GlobalFuncTransform) extends Stage
+  final case class Opaque(run: PanelFrame => FittedTargetTransform) extends Stage
+
+  /** Stage that fits `t`, or restores it from persisted `state` frames. */
+  def fitStage(t: TargetTransform, state: Seq[DataFrame]): Stage = t match {
+    case Differences(ds)                 => Diff(ds)
+    case s: LocalScaler if state.isEmpty => Scale(s)
+    case _: LocalScaler                  => Frozen(state.head)
+    case g: GlobalFuncTransform          => Func(g)
+    case _ if state.isEmpty              => Opaque(t.fit)
+    case _                               => Opaque(t.restore(_, state))
+  }
+
+  /** Stage that re-applies `f` with frozen parameters to an extended panel. */
+  def updateStage(f: FittedTargetTransform): Stage = f match {
+    case d: DiffFitted       => Diff(d.ds)
+    case s: ScalerFitted     => Frozen(s.st)
+    case g: GlobalFuncFitted => Func(GlobalFuncTransform(g.name))
+    case _                   => Opaque(f.update)
+  }
+
+  /** One lazily pinned relation that every slice of a fused run reads.
+    * Plain class: compared by identity.
     */
-  final class Shared(fused: DataFrame) {
+  final class Shared(val idCol: String, build: => DataFrame) {
     /** localCheckpoint(false), built LAZILY: even a lazy checkpoint fires
       * an SQL-execution event (and compiles the plan) at construction, so
       * an eager `val` here taxes every fit whose chain never inverts — the
@@ -46,105 +76,113 @@ private[forecast] object TransformState {
       * action budget (ActionBudgetSpec). First inverse/save/update use
       * builds it; force() materializes the blocks.
       */
-    lazy val pinned: DataFrame = fused.localCheckpoint(false)
+    lazy val pinned: DataFrame = build.localCheckpoint(false)
     def force(): Unit = pinned.queryExecution.toRdd.foreachPartition(_ => ())
+
+    /** Phase-keyed tail of one difference stage: phase = (d - from_end)
+      * mod d over the stage input's last d rows.
+      */
+    def tail(d: Int, c: String): DataFrame =
+      pinned.filter(col(FromEnd) <= d)
+        .select(col(idCol).as("__tid"),
+          ((lit(d) - col(FromEnd)) % d).cast("int").as("__tphase"),
+          col(c).cast("double").as("__tail"))
+
+    def stats(shift: String, scale: String): DataFrame =
+      pinned.select(col(idCol), col(shift).as("__shift"), col(scale).as("__scale"))
+        .distinct()
   }
 
   private[forecast] val FromEnd = "__fs_from_end"
 
-  /** Rebuild `fitted` so DiffFitted tails and ScalerFitted stats slice one
-    * fused relation. `transforms(i)` fit `inputs(i)` and produced
-    * `fitted(i)`; the caller guarantees NO transform was restored from
-    * persisted state (frozen stats must never be recomputed). Returns the
-    * chain unchanged when fusion does not apply.
+  /** Force each shared relation that several of `chain`'s inverse
+    * broadcasts read, once, before they run: racing one lazy checkpoint
+    * from several broadcast threads can compute its partitions twice. A
+    * relation read by one broadcast materializes inside it.
     */
-  def fuseChain(transforms: Seq[TargetTransform],
-                fitted: Seq[FittedTargetTransform],
-                inputs: Seq[PanelFrame]): Seq[FittedTargetTransform] = {
-    if (transforms.isEmpty) return fitted
-    // every transform must be recognized, else keep the chain as-is
-    val fusable = transforms.zip(fitted).forall {
-      case (_: Differences, _)         => true
-      case (_: LocalScaler, _)         => true
-      case (_: GlobalFuncTransform, _) => true
-      case _                           => false
-    }
-    val statePasses = transforms.map {
-      case d: Differences => d.ds.size
-      case _: LocalScaler => 1
-      case _              => 0
-    }.sum
-    // a single state pass fuses into itself — nothing to win, keep the
-    // per-transform shape (and its test surface) untouched
-    if (!fusable || statePasses < 2 || LocalScaler.sumMomentsFirst(transforms)) return fitted
+  def force(chain: Seq[FittedTargetTransform]): Unit =
+    chain.flatMap {
+      case d: DiffFitted   => d.ds.map(_ => d.shared)
+      case s: ScalerFitted => Seq(s.shared)
+      case _               => Nil
+    }.groupBy(identity).foreach { case (s, reads) => if (reads.size > 1) s.force() }
 
-    val base = inputs.head
+  /** Run `stages` over `base` in order; returns one fitted transform per
+    * stage. Every maximal run of non-[[Opaque]] stages shares one state
+    * relation.
+    */
+  def chain(base: PanelFrame, stages: Seq[Stage]): Seq[FittedTargetTransform] = {
+    val out = Seq.newBuilder[FittedTargetTransform]
+    var p = base
+    var rest = stages
+    while (rest.nonEmpty) {
+      val fs = rest.head match {
+        case Opaque(run) => rest = rest.tail; Seq(run(p))
+        case _ =>
+          val (run, after) = rest.span(!_.isInstanceOf[Opaque])
+          rest = after
+          fuseChain(p, run)
+      }
+      out ++= fs
+      p = fs.last.transformed
+    }
+    out.result()
+  }
+
+  private def fuseChain(base: PanelFrame, stages: Seq[Stage]): Seq[FittedTargetTransform] = {
     val tgt = base.targetCol
+    val y = col(s"`$tgt`")
+    val panelCols = base.df.columns.toSeq.map(c => col(s"`$c`"))
     val w = Window.partitionBy(base.id).orderBy(base.ds)
     var df = base.df
-    // replay the forward chain, keeping each diff stage's pre-diff target
-    // and each scaler's (shift, scale) as extra columns
-    val tailCols = Seq.newBuilder[(Int, Seq[(Int, String)])] // tfm idx -> (d, col) per stage
-    val statCols = Seq.newBuilder[(Int, (String, String))]   // tfm idx -> (shift, scale) cols
-    transforms.zipWithIndex.foreach {
-      case (d: Differences, ti) =>
-        val stages = d.ds.zipWithIndex.map { case (dd, j) =>
-          val c = s"__fs_t_${ti}_$j"
-          df = df.withColumn(c, col(s"`$tgt`"))
-          df = df.withColumn(tgt, col(s"`$tgt`") - lag(col(s"`$tgt`"), dd).over(w))
-          (dd, c)
-        }
-        tailCols += ti -> stages
-      case (s: LocalScaler, ti) =>
-        val (sh, sc) = (s"__fs_sh_$ti", s"__fs_sc_$ti")
-        val pView = inputs(ti).copy(df = df)
-        df = LocalScaler.safeScale(s.withStats(df, pView))
-        df = df.withColumn(sh, col("__shift")).withColumn(sc, col("__scale"))
-          .withColumn(tgt, (col(s"`$tgt`") - col("__shift")) / col("__scale"))
-          .drop("__shift", "__scale")
-        statCols += ti -> ((sh, sc))
-      case (g: GlobalFuncTransform, _) =>
-        // stateless; replay the forward map so later stages see its output
-        df = g.forward(df, tgt)
-      case _ => () // unreachable (fusable guard)
+    def current = base.copy(df = df.select(panelCols: _*))
+    val keep = Seq.newBuilder[String]
+    // `withStats` adds __shift/__scale; keep them as this stage's columns
+    def scaled(ti: Int, withStats: DataFrame): Shared => FittedTargetTransform = {
+      val cols = (s"__fs_sh_$ti", s"__fs_sc_$ti")
+      df = withStats.withColumnRenamed("__shift", cols._1).withColumnRenamed("__scale", cols._2)
+        .withColumn(tgt, (y - col(cols._1)) / col(cols._2))
+      keep ++= Seq(cols._1, cols._2)
+      val out = current
+      s => ScalerFitted(out, s, cols)
     }
-    val tails = tailCols.result().toMap
-    val stats = statCols.result().toMap
-    val maxTail = math.max(1, transforms.collect {
-      case d: Differences => d.ds.max
-    }.foldLeft(0)(math.max))
+    // a difference window leaves each series' rows in (id, ds) order, which
+    // every later window aggregate of the run accumulates in
+    var ordered = false
+    // each stage's fitted instance, once the shared relation exists
+    val slices = stages.zipWithIndex.map { case (stage, ti) =>
+      val in = current
+      stage match {
+        case Diff(ds) =>
+          val cols = ds.indices.map(j => s"__fs_t_${ti}_$j")
+          ds.zip(cols).foreach { case (d, c) =>
+            df = df.withColumn(c, y).withColumn(tgt, y - lag(y, d).over(w))
+          }
+          keep ++= cols
+          ordered = true
+          val out = current
+          (s: Shared) => DiffFitted(out, in, ds, s, cols)
+        case Func(g) =>
+          df = g.forward(df, tgt)
+          val out = current
+          (_: Shared) => GlobalFuncFitted(out, g.name)
+        case Scale(s: LocalStandardScaler) if !ordered =>
+          scaled(ti, df.join(broadcast(s.stats(in)), Seq(base.idCol)))
+        case Scale(s)   => scaled(ti, LocalScaler.safeScale(s.withStats(df, base)))
+        case Frozen(st) => scaled(ti, df.join(broadcast(st), Seq(base.idCol)))
+        case Opaque(_)  => throw new IllegalArgumentException("opaque stage inside a fused run")
+      }
+    }
+    val replayed = df
+    val keepCols = keep.result()
+    val maxTail = stages.collect { case Diff(ds) => ds.max }.foldLeft(1)(math.max)
     // descending tail rank LAST, after every stats window, so the scaler
-    // aggregates accumulate over the same ascending (id, ds) row order as
-    // their standalone plans
+    // aggregates accumulate over the same row order as the forward pass
     val rn = Window.partitionBy(base.id).orderBy(base.ds.desc)
-    val keep = tails.values.flatten.map(_._2).toSeq ++
-      stats.values.flatMap { case (a, b) => Seq(a, b) }
-    val fused = df
-      .withColumn(FromEnd, row_number().over(rn))
-      .filter(col(FromEnd) <= maxTail)
-      .select((col(base.idCol) +: col(FromEnd) +: keep.map(c => col(s"`$c`"))): _*)
-    val shared = new Shared(fused)
-
-    // Slices are THUNKS over the (lazy) pin: building them eagerly would
-    // construct the checkpoint (one SQL-execution event + plan compile) on
-    // every fit, including chains that never invert (kernel-CV intervals).
-    fitted.zipWithIndex.map {
-      case (f: DiffFitted, ti) =>
-        val stages = tails(ti)
-        f.copy(shared = Some(shared), sharedTails = Some(() =>
-          stages.map { case (dd, c) =>
-            shared.pinned.filter(col(FromEnd) <= dd)
-              .select(col(base.idCol).as("__tid"),
-                ((lit(dd) - col(FromEnd)) % dd).cast("int").as("__tphase"),
-                col(c).cast("double").as("__tail"))
-          }))
-      case (f: ScalerFitted, ti) =>
-        val (sh, sc) = stats(ti)
-        f.copy(shared = Some(shared), sharedSt = Some(() =>
-          shared.pinned
-            .select(col(base.idCol), col(sh).as("__shift"), col(sc).as("__scale"))
-            .distinct()))
-      case (f, _) => f
-    }
+    val shared = new Shared(base.idCol,
+      replayed.withColumn(FromEnd, row_number().over(rn))
+        .filter(col(FromEnd) <= maxTail)
+        .select((base.id +: col(FromEnd) +: keepCols.map(c => col(s"`$c`"))): _*))
+    slices.map(_(shared))
   }
 }

@@ -389,14 +389,10 @@ object Featurizer {
         // values in the same ordinal order — bit-identical (pinned by
         // LagTransformsSpec "identity collapse…" against the comps path).
         // In the recursive predict loop this removes two exchanges + a
-        // broadcast build from EVERY step's plan. Escape hatch:
-        // spark.graft.pooledIdentityCollapse=false restores the comps
-        // shape (e.g. for frames with duplicate (id, ds) rows, where the
-        // two paths differ in float association order — same statistic,
-        // last-ulp FP difference).
-        val identityCollapse = buckets == Seq(p.idCol) &&
-          df.sparkSession.conf
-            .get("spark.graft.pooledIdentityCollapse", "true").toBoolean
+        // broadcast build from EVERY step's plan. (On frames with duplicate
+        // (id, ds) rows the two paths differ in float association order —
+        // same statistic, last-ulp FP difference.)
+        val identityCollapse = buckets == Seq(p.idCol)
         val (aggable, rowLevel) =
           if (identityCollapse) (Nil, tfms)
           else tfms.partition { case (l, t) =>

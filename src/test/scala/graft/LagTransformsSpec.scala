@@ -121,28 +121,32 @@ class LagTransformsSpec extends SparkSpec {
   test("identity collapse: groupby=[id] pooled features bit-equal the comps path (r14)") {
     // The r14 identity-collapse route (buckets == [idCol]) windows raw rows
     // instead of building the per-(bucket, ordinal) component relation —
-    // this pins bit-identity against the comps shape (escape hatch conf
-    // off) on a float-valued panel across mean/std/min/max and expanding
-    // stats, so the accumulation-order argument is tested, not assumed.
+    // this pins bit-identity against the comps shape, taken through the
+    // same buckets keyed by (id, constant static k), on a float-valued
+    // panel across mean/std/min/max and expanding stats, so the
+    // accumulation-order argument is tested, not assumed.
     val rows = for {
       (id, off) <- Seq("a" -> 0.0, "b" -> 9.5)
       t <- 0 until 25
     } yield (id, t.toLong, math.sin(t * 0.83) * 3.7 + off)
-    val p = PanelFrame(rows.toDF("unique_id", "ds", "y"), freq = Freq.IntFreq(1))
-    val spec = FeatureSpec(lagTransforms = Map(1 -> Seq(
-      RollingMean(4, pooling = Pooling(groupby = Seq("unique_id"))),
-      RollingStd(4, pooling = Pooling(groupby = Seq("unique_id"))),
-      RollingMin(4, pooling = Pooling(groupby = Seq("unique_id"))),
-      RollingMax(4, pooling = Pooling(groupby = Seq("unique_id"))),
-      ExpandingMean(pooling = Pooling(groupby = Seq("unique_id"))))))
-    val fast = Featurizer.addFeatures(p, spec)
-    spark.conf.set("spark.graft.pooledIdentityCollapse", "false")
-    val slow =
-      try Featurizer.addFeatures(p, spec)
-      finally spark.conf.unset("spark.graft.pooledIdentityCollapse")
-    val cols = fast.columns.sorted.toSeq.map(c => col(s"`$c`"))
-    val fn = fast.select(cols: _*); val sn = slow.select(cols: _*)
-    assert(fn.exceptAll(sn).isEmpty && sn.exceptAll(fn).isEmpty,
+    val p = PanelFrame(rows.toDF("unique_id", "ds", "y").withColumn("k", lit(1)),
+      freq = Freq.IntFreq(1), staticCols = Seq("k"))
+    def spec(groupby: Seq[String]) = FeatureSpec(lagTransforms = Map(1 -> Seq(
+      RollingMean(4, pooling = Pooling(groupby = groupby)),
+      RollingStd(4, pooling = Pooling(groupby = groupby)),
+      RollingMin(4, pooling = Pooling(groupby = groupby)),
+      RollingMax(4, pooling = Pooling(groupby = groupby)),
+      ExpandingMean(pooling = Pooling(groupby = groupby)))))
+    // feature names carry the bucket columns: compare by position
+    def features(groupby: Seq[String]): DataFrame = {
+      val sp = spec(groupby)
+      Featurizer.addFeatures(p, sp).select((Seq(col("unique_id"), col("ds"), col("y")) ++
+        sp.featureNames.zipWithIndex.map { case (n, i) => col(s"`$n`").as(s"f$i") }): _*)
+    }
+    val fast = features(Seq("unique_id"))
+    val slow = features(Seq("unique_id", "k"))
+    assert(fast.filter(col("f0").isNotNull).count() > 0, "no pooled values to compare")
+    assert(fast.exceptAll(slow).isEmpty && slow.exceptAll(fast).isEmpty,
       "identity-collapse route diverged from the comps path")
   }
 

@@ -134,14 +134,13 @@ class RouteRuleSpec extends SparkSpec {
   test("standard-scaler-first float chain: fused state and kernel equal the driver") {
     val p = dailyPanel(5, 50, nParts = 4)
     val tfms = Seq(LocalStandardScaler(), Differences(Seq(1)))
-    // fused TransformState slices vs the standalone per-transform state
-    var cur = p
-    val inputs = Seq.newBuilder[PanelFrame]
-    val fitted = tfms.map { t => inputs += cur; val f = t.fit(cur); cur = f.transformed; f }
-    val fused = TransformState.fuseChain(tfms, fitted, inputs.result())
-    assertSameRows(fitted.head.asInstanceOf[ScalerFitted].st,
-      fused.head.asInstanceOf[ScalerFitted].stResolved, "scaler-first fused stats")
-    fitted(1).asInstanceOf[DiffFitted].tails.zip(fused(1).asInstanceOf[DiffFitted].tailsResolved)
+    // fused TransformState slices vs the scaler's own window-distinct
+    // stats and a one-stage diff chain over the scaler's output
+    val fused = TransformState.chain(p, tfms.map(TransformState.fitStage(_, Nil)))
+    assertSameRows(LocalStandardScaler().stats(p),
+      fused.head.asInstanceOf[ScalerFitted].st, "scaler-first fused stats")
+    val alone = Differences(Seq(1)).fit(fused.head.transformed).asInstanceOf[DiffFitted]
+    alone.tails.zip(fused(1).asInstanceOf[DiffFitted].tails)
       .foreach { case (a, b) => assertSameRows(a, b, "scaler-first fused diff tail") }
     // kernel chain vs the driver backtest, frozen CV and interval CV
     val conf = MLForecast(Seq(Models.seasonalNaive(7)), Freq.Day,
@@ -172,13 +171,14 @@ class RouteRuleSpec extends SparkSpec {
     val cutoff = java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 25))
     val old = p.copy(df = p.df.filter(col("ds") <= cutoff))
     val tfms = Seq(Differences(Seq(1)), LocalStandardScaler())
-    val d = tfms.head.fit(old)
-    val s = tfms(1).fit(d.transformed)
-    val fused = TransformState.fuseChain(tfms, Seq(d, s), Seq(old, d.transformed))
+    val fused = TransformState.chain(old, tfms.map(TransformState.fitStage(_, Nil)))
     val scaler = fused(1).asInstanceOf[ScalerFitted]
-    assert(scaler.shared.isDefined)
+    assert(fused.head.asInstanceOf[DiffFitted].shared eq scaler.shared)
     val updated = scaler.update(fused.head.update(p).transformed)
     assertSameRows(scaler.state.head, updated.state.head, "updated scaler state")
+    // the whole-chain update re-fuses with the same frozen stats
+    val chained = TransformState.chain(p, fused.map(TransformState.updateStage))
+    assertSameRows(scaler.state.head, chained(1).state.head, "chain-updated scaler state")
   }
 
   test("a pooled bucket column outside staticFeatures fails fit with a named error") {
