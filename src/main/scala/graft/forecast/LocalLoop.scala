@@ -392,20 +392,22 @@ private[graft] object LocalLoop {
         ts.map(t => compile(l, t).get)
       }
 
-  /** Streaming bridge: the spec's window kernels as functions of
-    * (history array, appended predictions) in featureNames order; None if
-    * any transform lacks a fused kernel. History uses NaN for missing.
-    */
-  private[graft] def compileKernels(
-      spec: FeatureSpec): Option[Seq[(Array[Double], ArrayBuffer[Double]) => java.lang.Double]] =
-    if (spec.allTransforms.forall { case (l, t) => t.pooling.isLocal && compile(l, t).isDefined })
-      Some(compiledEvals(spec).map(ev =>
-        (hist: Array[Double], app: ArrayBuffer[Double]) => ev(new View(hist, app))))
-    else None
+  /** Every transform is local and has a kernel. */
+  private def kernelsCompile(spec: FeatureSpec): Boolean =
+    spec.allTransforms.forall { case (l, t) => t.pooling.isLocal && compile(l, t).isDefined }
 
-  /** Streaming bridge: the local date-feature kernel for `name`. */
-  private[graft] def dateKernel(name: String): Option[LocalDate => Int] =
-    dateFeature(name)
+  /** Streaming bridge: the [[FeatureRow]] of a spec without statics or exog,
+    * as a function of (history, appended predictions, target date) — the
+    * date is read only when the spec has date features. History uses NaN
+    * for missing. None if any transform lacks a fused kernel.
+    */
+  private[graft] def streamingFeatures(spec: FeatureSpec, nFeatures: Int)
+      : Option[(Array[Double], ArrayBuffer[Double], java.sql.Date) => Array[Double]] =
+    if (!kernelsCompile(spec)) None
+    else {
+      val features = new FeatureRow(spec, 0, 0, nFeatures)
+      Some((hist, app, ds) => features(new View(hist, app), ds, Array.emptyDoubleArray, null))
+    }
 
   // ---- The route rule: fused kernel or driver lockstep loop -------------
   //
@@ -424,10 +426,7 @@ private[graft] object LocalLoop {
     // (reference equality — every row would become its own series), so
     // binary ids route to the driver loop, whose joins/windows compare
     // binary by value
-    p.df.schema(p.idCol).dataType != BinaryType &&
-      conf.spec.allTransforms.forall { case (l, t) =>
-        t.pooling.isLocal && compile(l, t).isDefined
-      } &&
+    p.df.schema(p.idCol).dataType != BinaryType && kernelsCompile(conf.spec) &&
       conf.spec.customDateFeatures.isEmpty &&
       (conf.spec.dateFeatures.isEmpty ||
         (dsType == DateType && conf.spec.dateFeatures.forall(dateFeature(_).isDefined))) &&

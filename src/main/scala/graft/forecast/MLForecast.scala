@@ -14,14 +14,19 @@ import graft.operators.{FeatureSpec, Featurizer}
   * counterpart of the reference's `MLForecast` + `TimeSeries`
   * (/root/reference/mlforecast/forecast.py, core.py).
   *
-  * Design stance (SURVEY §7): state is DataFrames; the recursive h-step loop
-  * is driver-orchestrated — each step is a narrow window pass over bounded
-  * per-series tails plus a model scoring job. Step predictions (one row per
-  * series) are collected and re-injected via a small union, so plan lineage
-  * stays depth-2 regardless of horizon. Pooled transforms work unmodified at
-  * predict because every series advances in lockstep — the cross-series
-  * limitation of the reference's own distributed mode (distributed/
-  * forecast.py:128-146) disappears.
+  * Design stance (SURVEY §7): state is DataFrames, and recursive predict
+  * has two routes, chosen in one place ([[LocalLoop.fusesPredict]]). By
+  * default the fused [[LocalLoop]] kernel runs all h steps for all models
+  * in one per-series mapPartitions pass. The driver loop (`recursiveLoop`)
+  * serves pooled transforms, frame-observing callbacks, binary ids, custom
+  * date features, models without an executor scorer, and
+  * `fusedPredict = false`, the reference the kernel is checked against.
+  * Each driver step is one job — a window pass over the carried per-series
+  * history plus scoring — checkpointed so plan lineage stays flat
+  * regardless of horizon. Pooled transforms work unmodified there because
+  * every series advances in lockstep — the cross-series limitation of the
+  * reference's own distributed mode (distributed/forecast.py:128-146)
+  * disappears.
   */
 final case class MLForecast(
     models: Seq[ForecastModel],
@@ -32,7 +37,6 @@ final case class MLForecast(
     validate: Boolean = false,
     maxHorizon: Option[Int] = None,
     horizons: Option[Seq[Int]] = None, // 1-indexed sparse horizons
-    incrementalPredict: Boolean = true, // updates_only fast path for expanding/EWM
     fusedPredict: Boolean = true, // per-series fused loop when all transforms are local
     horizonFeatures: Map[Int, Seq[String]] = Map.empty, // 1-indexed horizon -> exog cols
     horizonFeatureTemplates: Seq[String] = Nil, // "{h}" patterns matched against exog cols
@@ -411,6 +415,9 @@ final case class FittedMLForecast(
         restricted.predict(h, xDf, None, callback)
       case None =>
         validateXDf(h, xDf)
+        // without dynamic exog no route reads xDf; dropping it keeps its
+        // unvalidated keys out of the driver loop's placeholder join
+        val exog = if (dynCols.isEmpty) None else xDf
         if (directTrained.nonEmpty) {
           // loud, not a silent no-op: the direct path is one batch predict
           // per horizon with no step loop for a callback to hook into
@@ -418,8 +425,8 @@ final case class FittedMLForecast(
             "predict callbacks are not supported in direct mode (no " +
               "recursive step loop to hook); use recursive mode or capture " +
               "features via expandedTarget")
-          predictDirect(h, xDf)
-        } else predictRecursive(h, xDf, callback)
+          predictDirect(h, exog)
+        } else predictRecursive(h, exog, callback)
     }
   }
 
@@ -522,9 +529,11 @@ final case class FittedMLForecast(
       freq = Some(conf.freq))).drop("cutoff")
   }
 
-  /** Dynamic exog demand a complete future grid: missing (id, ds) rows would
-    * silently become null features (reference get_missing_future,
-    * forecast.py:1445-1457; core.py:1932-1962).
+  /** Dynamic exog demand a complete future grid with one row per key:
+    * missing (id, ds) rows would silently become null features (reference
+    * get_missing_future, forecast.py:1445-1457; core.py:1932-1962), and a
+    * duplicate key would fan the driver loop's placeholder into two scored
+    * rows while the fused kernel keeps one.
     */
   private def validateXDf(h: Int, xDf: Option[DataFrame]): Unit = {
     if (dynCols.isEmpty) return
@@ -532,11 +541,15 @@ final case class FittedMLForecast(
       s"fit saw dynamic exog [${dynCols.mkString(", ")}]; predict needs xDf with their future values")
     val absent = (Seq(idCol, timeCol) ++ dynCols).filterNot(xDf.get.columns.contains)
     require(absent.isEmpty, s"xDf is missing columns: ${absent.mkString(", ")}")
-    val missing = transformedPanel.futureGrid(h)
-      .join(xDf.get.select(col(idCol), col(timeCol)), Seq(idCol, timeCol), "left_anti")
+    // one action: each future key's xDf row count, null = missing
+    val faults = transformedPanel.futureGrid(h)
+      .join(xDf.get.groupBy(idCol, timeCol).count(), Seq(idCol, timeCol), "left")
+      .filter(col("count").isNull || col("count") > 1)
       .take(5)
-    require(missing.isEmpty,
-      s"xDf is missing future rows, e.g. ${missing.mkString("; ")}")
+    val (duplicate, missing) = faults.partition(!_.isNullAt(2))
+    def keys(rows: Array[Row]) = rows.map(r => s"[${r.get(0)},${r.get(1)}]").mkString("; ")
+    require(duplicate.isEmpty, s"xDf has duplicate (id, ds) rows, e.g. ${keys(duplicate)}")
+    require(missing.isEmpty, s"xDf is missing future rows, e.g. ${keys(missing)}")
   }
 
   private def predictRecursive(h: Int, xDf: Option[DataFrame],
@@ -551,17 +564,9 @@ final case class FittedMLForecast(
         after = callback.flatMap(_.afterScalar))
       return inverseTransforms(out, trained.map(_._1))
     }
-    // updates_only split (reference grouped_array.py:94-122): unbounded
-    // local expanding/EWM transforms are carried as per-series incremental
-    // state; the REMAINING spec decides how much history each step windows
-    // over.
-    val (incSpecs, restSpec) =
-      if (conf.incrementalPredict) IncrementalState.split(conf.spec)
-      else (Seq.empty[IncrementalState.IncSpec], conf.spec)
-    // Trim carried history when every remaining transform is finite-window
+    // Trim carried history when every transform is finite-window
     // (reference keep_last_n inference, core.py:404-425).
-    val restBound = restSpec.updateSamplesBound
-    val baseState = restBound match {
+    val baseState = conf.spec.updateSamplesBound match {
       case Some(bound) => transformedPanel.keepLastN(bound + 1).df
       case None        => transformedPanel.df
     }
@@ -575,21 +580,14 @@ final case class FittedMLForecast(
         .statics.localCheckpoint())
     val stateCols = Seq(idCol, timeCol, targetCol) ++ conf.staticFeatures
     val base = baseState.select(stateCols.map(col): _*).cache()
-    base.count() // materialize once; every step reuses it
-
     val lastDates = transformedPanel.lastDates.cache()
-
-    // Incremental state is history-only, so it is shared across models at
-    // step 1; each model's loop then evolves its own copy with its own
-    // predictions.
-    val initInc =
-      if (incSpecs.isEmpty) None
-      else Some(IncrementalState.init(transformedPanel, incSpecs).localCheckpoint())
-
-    val out = recursiveLoop(trained, h, base, statics, lastDates, xDf,
-      restSpec, restBound, incSpecs, initInc, callback)
-    // Step frames are localCheckpoint'ed, so the result no longer reads base.
-    base.unpersist(); lastDates.unpersist()
+    // a throwing model or callback must not leak either cache; step frames
+    // are localCheckpoint'ed, so the result no longer reads them
+    val out =
+      try {
+        base.count() // materialize once; every step reuses it
+        recursiveLoop(trained, h, base, statics, lastDates, xDf, callback)
+      } finally { base.unpersist(); lastDates.unpersist() }
     inverseTransforms(out, trained.map(_._1))
   }
 
@@ -669,33 +667,20 @@ final case class FittedMLForecast(
     }
   }
 
-  /** Distributed recursive loop: nothing ever leaves the cluster. Each step
-    * is one narrow job — featurize (state ∪ placeholder) restricted to
-    * per-series tails, score the placeholder rows, localCheckpoint the
-    * (small, one-row-per-series) step frame. The checkpoint truncates the
-    * LOGICAL plan, not just the computation: without it each step's plan
-    * embeds every previous step's (exponential in h); with it plans stay
-    * flat regardless of horizon, and no cached blocks accumulate across
-    * predict calls (blocks are GC'd with the RDD by the context cleaner).
-    * Appended state is the union of checkpointed steps (partitioned like
-    * the panel — no single-partition re-parallelize, no driver O(series × h)
-    * memory). Reference: core.py:1648-1681, minus the driver round-trips.
-    */
-  /** One loop for ALL models. Each step, per model: trim the carried state
-    * to the remaining spec's bound, featurize (state ∪ placeholder), join
-    * the incremental feature values, score. The step then checkpoints ONE
-    * tagged union holding every model's (appended state rows + scored row +
-    * absorbed incremental state) — a single Spark job per step whose
-    * independent per-model stages run concurrently, and every carried frame
-    * is a filter over the latest checkpoint, so per-step plan size and cost
-    * are FLAT in both horizon and (for bounded specs) history length.
+  /** The driver loop, one loop for ALL models. Each step, per model: trim
+    * the carried state to the spec's bound, featurize (state ∪ placeholder)
+    * with the whole spec, score. The step then checkpoints ONE tagged union
+    * holding every model's appended state rows and scored row — a single
+    * Spark job per step whose independent per-model stages run
+    * concurrently, and every carried frame is a filter over the latest
+    * checkpoint, so per-step plan size and cost are FLAT in horizon and,
+    * for bounded specs, in history length. No aggregate is carried between
+    * steps: expanding and EWM features are windowed over the full carried
+    * history each step.
     */
   private def recursiveLoop(models: Seq[(String, TrainedModel)], h: Int,
                             base: DataFrame, statics: Option[DataFrame],
                             lastDates: DataFrame, xDf: Option[DataFrame],
-                            restSpec: FeatureSpec, restBound: Option[Int],
-                            incSpecs: Seq[IncrementalState.IncSpec],
-                            initInc: Option[DataFrame],
                             callback: Option[PredictCallback] = None): DataFrame = {
     // the carried target is DOUBLE for the whole loop: casting appended
     // predictions back to an integer-typed panel target would truncate
@@ -703,10 +688,7 @@ final case class FittedMLForecast(
     // 10.7), silently diverging from the fused path and the reference
     val baseD = base.withColumn(targetCol, col(s"`$targetCol`").cast(DoubleType))
     val stateCols = baseD.columns.toSeq
-    val incStateCols = IncrementalState.stateCols(incSpecs)
     var states: Map[String, DataFrame] = models.map(_._1 -> baseD).toMap
-    var incStates: Map[String, DataFrame] =
-      initInc.map(st => models.map(_._1 -> st).toMap).getOrElse(Map.empty)
     var stepPreds: Vector[DataFrame] = Vector.empty // (id, ds, <model cols...>)
 
     // All h placeholders materialized once (statics + exog joined a single
@@ -736,7 +718,7 @@ final case class FittedMLForecast(
 
       val perModel = models.map { case (name, model) =>
         // trim keeps the carried state at bound+1 rows per series forever
-        val stateNow = restBound match {
+        val stateNow = conf.spec.updateSamplesBound match {
           case Some(b) =>
             val wTrim = Window.partitionBy(col(idCol)).orderBy(col(timeCol).desc)
             states(name).withColumn("__rt", row_number().over(wTrim))
@@ -744,13 +726,8 @@ final case class FittedMLForecast(
           case None => states(name)
         }
         val unioned = stateNow.unionByName(placeholder, allowMissingColumns = true)
-        val feats = Featurizer.addFeatures(transformedPanel.copy(df = unioned), restSpec)
+        val feats = Featurizer.addFeatures(transformedPanel.copy(df = unioned), conf.spec)
         var stepFeats = feats.filter(col("__is_step"))
-        incStates.get(name).foreach { st =>
-          stepFeats = stepFeats.join(
-            st.select(col(idCol) +: IncrementalState.valueExprs(incSpecs): _*),
-            Seq(idCol), "left")
-        }
         callback.foreach { cb => stepFeats = cb.beforePredict(step, name, stepFeats) }
         var scoredRaw = model.predict(stepFeats, allFeatureCols, "__yhat")
           .select(col(idCol), col(timeCol), col("__yhat").cast(DoubleType).as("__yhat"))
@@ -762,15 +739,8 @@ final case class FittedMLForecast(
             .select(col(idCol), col(timeCol),
               col("__yhat").cast(DoubleType).as("__yhat"))
         }
-        val scoredFull = incStates.get(name) match {
-          case Some(st) =>
-            scoredRaw.join(st, Seq(idCol), "left")
-              .select(col(idCol) +: col(timeCol) +: col("__yhat") +:
-                IncrementalState.updateExprs(incSpecs, col("__yhat")): _*)
-          case None => scoredRaw
-        }
         // the scored row re-enters the state with the prediction as target
-        var scoredAsState = scoredFull
+        var scoredAsState = scoredRaw
         statics.foreach { st => scoredAsState = scoredAsState.join(st, Seq(idCol), "left") }
         scoredAsState = scoredAsState.withColumn(targetCol, col("__yhat"))
         val oldRows = stateNow
@@ -798,11 +768,6 @@ final case class FittedMLForecast(
         name -> stepFrame.filter(col("__model") === name)
           .select(stateCols.map(c => col(s"`$c`").cast(baseD.schema(c).dataType)): _*)
       }.toMap
-      if (incStates.nonEmpty)
-        incStates = models.map { case (name, _) =>
-          name -> stepFrame.filter(col("__model") === name && col("__is_new"))
-            .select(col(idCol) +: incStateCols.map(c => col(s"`$c`")): _*)
-        }.toMap
     }
     stepPreds.reduce(_ unionByName _)
   }

@@ -209,20 +209,17 @@ object StreamingForecast {
         "streaming BusinessDayFreq needs weekday timestamps in the seed panel")
     }
 
-    val kernels = LocalLoop.compileKernels(conf.spec).getOrElse(
+    val featureCols = conf.featureCols
+    val features = LocalLoop.streamingFeatures(conf.spec, featureCols.size).getOrElse(
       throw new IllegalArgumentException(
         "spec has transforms without a fused kernel (pooled or custom)"))
-    val dateEvals = conf.spec.dateFeatures.map(n => LocalLoop.dateKernel(n).get)
+    val hasDates = conf.spec.dateFeatures.nonEmpty
     val names = fitted.trained.map(_._1)
     require(names.nonEmpty, "streaming forecast needs recursive-mode trained models")
-    val featureCols = conf.featureCols
     val scorers = fitted.trained.map { case (n, tm) =>
       tm.scorer(featureCols).getOrElse(throw new IllegalArgumentException(
         s"model $n has no local scorer; streaming needs closed-form or vector-scoring models"))
     }
-    val nFeat = kernels.size + dateEvals.size
-    require(nFeat == featureCols.size,
-      s"feature layout mismatch: $nFeat kernels vs ${featureCols.size} features")
 
     val spark = p.df.sparkSession
     import spark.implicits._
@@ -326,20 +323,10 @@ object StreamingForecast {
           vals(0) = key
           vals(1) = stepDs
           vals(2) = s
+          val date = if (hasDates) java.sql.Date.valueOf(toLocalDate(stepDs)) else null
           var mi = 0
           while (mi < nModels) {
-            val arr = new Array[Double](nFeat)
-            var i = 0
-            kernels.foreach { kn =>
-              val x = kn(tail, appended(mi))
-              arr(i) = if (x == null) Double.NaN else x.doubleValue
-              i += 1
-            }
-            if (dateEvals.nonEmpty) {
-              val ld = toLocalDate(stepDs)
-              dateEvals.foreach { ev => arr(i) = ev(ld).toDouble; i += 1 }
-            }
-            val pred = scorers(mi)(arr)
+            val pred = scorers(mi)(features(tail, appended(mi), date))
             vals(3 + mi) = pred
             appended(mi) += (if (pred == null) Double.NaN else pred.doubleValue)
             mi += 1

@@ -1078,18 +1078,51 @@ class ForecastSpec extends SparkSpec {
     assert(r.getDouble(1) == 100.0 * (2 + 3 + 4) / 3)
   }
 
-  test("incremental predict fast path is bit-identical to full recompute") {
-    // mirrors the reference transform==update parity contract
-    // (tests/test_lag_transforms.py:193-207): the expanding/EWM state-carry
-    // path must reproduce the full-history window recompute exactly.
-    import graft.functions._
-    // series "c" is SHORTER than the largest lag minus 1: its ring state
-    // starts partially filled and must grow (not absorb early) during the
-    // first predict steps
+  /** Bits of every forecast, ordered by (id, ds); null -> NaN. */
+  private def forecastBits(df: org.apache.spark.sql.DataFrame, names: Seq[String]): Seq[Long] =
+    df.orderBy("unique_id", "ds").collect().toSeq.flatMap { r =>
+      names.map { n =>
+        val i = r.fieldIndex(n)
+        java.lang.Double.doubleToLongBits(if (r.isNullAt(i)) Double.NaN else r.getDouble(i))
+      }
+    }
+
+  private def bitsDigest(b: Seq[Long]): String =
+    f"${b.length}%d:${scala.util.hashing.MurmurHash3.orderedHash(b)}%08x"
+
+  /** Three series: "c" is shorter than the largest lag minus 1. `aligned`
+    * ends every series at ds 29; otherwise every series starts at ds 0.
+    * `grp` pools a with c.
+    */
+  private def expandingPanel(aligned: Boolean): PanelFrame = {
+    val grp = Map("a" -> 1.0, "b" -> 2.0, "c" -> 1.0)
     val rows = for {
-      (id, n) <- Seq(("a", 30), ("b", 17), ("c", 4)); t <- 0 until n
-    } yield (id, t.toLong, ((t * 7) % 13 + (if (id == "a") 3 else 0)).toDouble)
-    val p = PanelFrame(rows.toDF("unique_id", "ds", "y"), freq = Freq.IntFreq(1))
+      (id, n) <- Seq(("a", 30), ("b", 17), ("c", 4))
+      t <- (if (aligned) 30 - n else 0) until (if (aligned) 30 else n)
+    } yield (id, t.toLong, ((t * 7) % 13 + (if (id == "a") 3 else 0)).toDouble, grp(id))
+    PanelFrame(rows.toDF("unique_id", "ds", "y", "grp"), freq = Freq.IntFreq(1),
+      staticCols = Seq("grp"))
+  }
+
+  /** A groupby-pooled window beside local expanding/EWM transforms. */
+  private def pooledExpandingSpec: FeatureSpec = {
+    import graft.functions._
+    FeatureSpec(
+      lags = Seq(1, 3),
+      lagTransforms = Map(
+        1 -> Seq(RollingMean(7, pooling = Pooling(groupby = Seq("grp"))),
+          ExpandingMean(), ExpandingStd(), ExponentiallyWeightedMean(0.5)),
+        2 -> Seq(graft.functions.Offset(ExpandingMax(), 1)),
+        4 -> Seq(ExpandingMean())))
+  }
+
+  test("expanding and EWM predict features: fused kernel == driver loop, bit for bit") {
+    // mirrors the reference transform==update parity contract
+    // (tests/test_lag_transforms.py:193-207): the fused kernel's running
+    // expanding/EWM features must reproduce the driver loop's full-history
+    // window recompute exactly
+    import graft.functions._
+    val p = expandingPanel(aligned = false)
     val spec = FeatureSpec(
       lags = Seq(1, 3),
       lagTransforms = Map(
@@ -1098,14 +1131,91 @@ class ForecastSpec extends SparkSpec {
         2 -> Seq(ExpandingMin(), ExpandingMax(),
           graft.functions.Offset(ExpandingMean(), 1)),
         6 -> Seq(ExpandingMean(), ExpandingStd(), ExponentiallyWeightedMean(0.3))))
-    val mkConf = (inc: Boolean) => MLForecast(
-      Seq(SparkLinearRegression(), Models.naive), Freq.IntFreq(1), spec,
-      incrementalPredict = inc)
-    val fast = mkConf(true).fit(p).predict(6)
-      .orderBy("unique_id", "ds").collect().toSeq
-    val slow = mkConf(false).fit(p).predict(6)
-      .orderBy("unique_id", "ds").collect().toSeq
-    assert(fast == slow)
+    val models = Seq(SparkLinearRegression(), Models.naive)
+    val names = models.map(_.name)
+    val fitted = MLForecast(models, Freq.IntFreq(1), spec).fit(p)
+    assert(LocalLoop.fusesPredict(fitted.conf, fitted.transformedPanel, fitted.trained,
+      Nil, None))
+    val fused = forecastBits(fitted.predict(6), names)
+    val driver = forecastBits(
+      fitted.copy(conf = fitted.conf.copy(fusedPredict = false)).predict(6), names)
+    assert(fused.length == 3 * 6 * 2 && fused == driver)
+
+    // driver only: the pooled window keeps the predict off the kernel, so
+    // the driver loop featurizes the local expanding/EWM transforms itself.
+    // The digest pins the forecasts that running aggregates and the window
+    // recompute both produced for this pipeline.
+    val pooled = MLForecast(models, Freq.IntFreq(1), pooledExpandingSpec,
+      staticFeatures = Seq("grp")).fit(expandingPanel(aligned = true))
+    assert(!LocalLoop.fusesPredict(pooled.conf, pooled.transformedPanel, pooled.trained,
+      Nil, None))
+    assert(bitsDigest(forecastBits(pooled.predict(6), names)) == "36:df20ee84")
+  }
+
+  test("driver loop windows a pooled group over the whole history of an unbounded spec") {
+    // a and c share a pooled group but end on different dates: c's first
+    // step (ds 4) pools a's rows at ds 0..3 with its own. Trimming each
+    // series to a bounded tail would drop a's early rows.
+    val spec = pooledExpandingSpec
+    val models = Seq(SparkLinearRegression(), Models.naive)
+    val fitted = MLForecast(models, Freq.IntFreq(1), spec, staticFeatures = Seq("grp"))
+      .fit(expandingPanel(aligned = false))
+    val saved = new SaveFeatures
+    fitted.predict(2, callback = Some(saved)).collect()
+    val pooledName = spec.nameOf(1, spec.lagTransforms(1).head)
+    val c1 = saved.features(withStep = true)
+      .filter($"unique_id" === "c" && $"step" === 1)
+      .select(col(s"`$pooledName`")).collect().map(_.getDouble(0)).distinct.toSeq
+    // a: 3, 10, 4, 11 and c: 0, 7, 1, 8
+    assert(c1 == Seq(44.0 / 8))
+    assert(bitsDigest(forecastBits(fitted.predict(6), models.map(_.name))) == "36:068adb20")
+  }
+
+  test("predict rejects an xDf with duplicate or missing (id, ds) rows on both routes") {
+    val n = 20
+    val rows = for (id <- Seq("a", "b"); t <- 0L until n)
+      yield (id, t, (t % 5).toDouble, 1.0 * t)
+    val p = PanelFrame(rows.toDF("unique_id", "ds", "y", "x"), freq = Freq.IntFreq(1))
+    val local = FeatureSpec(lags = Seq(1))
+    val pooled = FeatureSpec(lags = Seq(1), lagTransforms = Map(1 -> Seq(
+      graft.functions.RollingMean(3, pooling = graft.functions.Pooling(global = true)))))
+    val future = for (id <- Seq("a", "b"); t <- n until n + 3) yield (id, t, 1.0 * t)
+    val xDf = future.toDF("unique_id", "ds", "x")
+    val dup = (future :+ (("a", n + 1, -1.0))).toDF("unique_id", "ds", "x")
+    val short = future.filterNot(_ == (("b", n + 2, 1.0 * (n + 2)))).toDF("unique_id", "ds", "x")
+    for (spec <- Seq(local, pooled)) {
+      val fitted = MLForecast(Seq(Models.naive), Freq.IntFreq(1), spec).fit(p)
+      assert(fitted.predict(3, xDf = Some(xDf)).count() == 6)
+      val e = intercept[IllegalArgumentException](fitted.predict(3, xDf = Some(dup)))
+      assert(e.getMessage.contains("duplicate (id, ds) rows") &&
+        e.getMessage.contains(s"[a,${n + 1}]"), e.getMessage)
+      val m = intercept[IllegalArgumentException](fitted.predict(3, xDf = Some(short)))
+      assert(m.getMessage.contains("missing future rows") &&
+        m.getMessage.contains(s"[b,${n + 2}]"), m.getMessage)
+      // fit without exog: predict reads nothing from xDf, duplicates included
+      val noExog = MLForecast(Seq(Models.naive), Freq.IntFreq(1), spec)
+        .fit(p.copy(df = p.df.drop("x")))
+      assert(noExog.predict(3, xDf = Some(dup)).count() == 6)
+    }
+  }
+
+  test("a predict whose callback throws leaves no cached frame behind") {
+    val fitted = MLForecast(Seq(Models.naive), Freq.IntFreq(1), FeatureSpec(lags = Seq(1)))
+      .fit(seasonalPanel())
+    val failing = new PredictCallback {
+      override def beforePredict(step: Int, modelName: String,
+                                 feats: org.apache.spark.sql.DataFrame) =
+        if (step == 2) throw new IllegalStateException("callback failed") else feats
+    }
+    // localCheckpoint blocks are persistent RDDs too, released by the
+    // context cleaner rather than by predict; only caches are counted
+    def cached = spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if !rdd.isCheckpointed => id }.toSet
+    val before = cached
+    intercept[IllegalStateException](fitted.predict(3, callback = Some(failing)).collect())
+    assert((cached -- before).isEmpty)
+    fitted.predict(3, callback = Some(new SaveFeatures)).collect()
+    assert((cached -- before).isEmpty)
   }
 
   test("losses: per-id and pooled values match hand-computed") {
