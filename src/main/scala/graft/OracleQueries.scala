@@ -2084,9 +2084,10 @@ object OracleQueries {
          |JOIN wins w ON w.unique_id = d.unique_id AND d.ord <= w.cutoff
          |JOIN dense p ON p.unique_id = d.unique_id AND p.ord = d.ord - 7""".stripMargin)),
 
-    // Recursive predict through the LOCKSTEP loop: a pooled (groupby)
-    // transform forces the driver-orchestrated path — per-step pooled
-    // ordinals, collapse and join-back all run at predict. Buckets of one
+    // Recursive predict through the LOCKSTEP kernel: a pooled (groupby)
+    // rolling mean takes the step-synchronous kernel — per-step pooled
+    // ordinals and component windows run on the driver over per-(bucket,
+    // ds) partials, one Spark job per step. Buckets of one
     // series keep the value SQL-expressible: a 3-step rolling-mean
     // recursion whose step sums append earlier predictions in ordinal
     // order (integer history sums are exact; the appended doubles are

@@ -80,11 +80,10 @@ final case class LightGBMCV(
     val dynCols = full.dynamicExogCols(pinned)
     // per-window GBT trainings dominate the cost and are independent —
     // submit them concurrently like every other multi-fit in this package
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
     val windows = (0 until nWindows).map { i =>
-      Future {
+      Par.future(panel.df.sparkSession) {
         val offset = h + (nWindows - 1 - i) * h
         val cutoffs = lastDates.select(col(idCol),
           freq.advance(col("last_date"), lit(-offset)).as("__cutoff"),

@@ -11,16 +11,22 @@ import org.apache.spark.sql.types._
 
 import graft.core.{Freq, PanelFrame}
 import graft.functions._
-import graft.operators.FeatureSpec
+import graft.operators.{FeatureSpec, Featurizer}
 
 /** Fused per-series recursive predict: ALL h steps for ALL models run inside
   * one `mapPartitions` pass over the (id, ds)-sorted panel — one shuffle,
   * one job, zero driver round-trips — when every transform is local
   * (per-series). This is the reference's own distributed stance
   * (/root/reference/mlforecast/distributed/forecast.py:520-577 runs the
-  * whole recursive loop per partition) re-expressed natively: the
-  * driver-orchestrated lockstep loop in [[FittedMLForecast]] remains for
-  * pooled transforms, whose cross-series state forces synchronized steps.
+  * whole recursive loop per partition) re-expressed natively. Pooled
+  * transforms, whose cross-series state forces synchronized steps, run the
+  * step-synchronous variant ([[runLockstep]]) when they are bounded
+  * component windows over `global`/`groupby` buckets: the series stay in
+  * executor partitions, each step is one job, and the driver only combines
+  * per-(bucket, ds) partials (the reference's `_ts_aggs`, pooled.py) and
+  * broadcasts the next step's pooled features. The driver-orchestrated
+  * lockstep loop in [[FittedMLForecast]] remains for the other pooled
+  * shapes (partitionBy, timeAgg, unbounded or non-decomposable).
   *
   * Exactness contract: every kernel below mirrors its window-transform
   * twin in [[graft.functions.LagTransforms]] — same guards, same FP
@@ -254,6 +260,124 @@ private[graft] object LocalLoop {
     case _ => None
   }
 
+  /** One pooled bucket's calendar at one step, ascending: per entry the
+    * Featurizer's components `__c`, `__s`, `__ss`, `__mn`, `__mx` (sum, min
+    * and max are meaningless where `c` is 0, where Spark's are null).
+    */
+  private final class Comps(val c: Array[Long], val s: Array[Double], val ss: Array[Double],
+                            val mn: Array[Double], val mx: Array[Double])
+
+  /** A compiled pooled transform: its value at calendar position `o`. */
+  private type PooledEval = (Comps, Int) => java.lang.Double
+
+  /** Driver-side twin of a pooled transform's `stagesFromComponents` window
+    * over the per-(bucket, ordinal) components: the same RANGE frame, the
+    * same guards, and Spark's window `sum` — a null-skipping fold from 0.0
+    * in ascending ordinal order. None = the lockstep kernel cannot serve it.
+    */
+  private def compilePooled(lag: Int, t: LagTransform): Option[PooledEval] = {
+    def frame(x: Comps, lo: Int, hi: Int)(f: Int => Unit): Long = {
+      var n = 0L; var i = math.max(lo, 0)
+      while (i <= hi) { n += x.c(i); if (x.c(i) > 0) f(i); i += 1 }
+      n
+    }
+    def boxed(ok: Boolean, v: => Double): java.lang.Double =
+      if (ok) java.lang.Double.valueOf(v) else null
+    t match {
+      case o: Offset => compilePooled(lag + o.n, o.inner)
+      case r: SeasonalRollingBase =>
+        val ms = r.resolvedMinSamples
+        // one single-ordinal frame per season, summed frame by frame
+        def frames(x: Comps, o: Int)(f: (Int, Boolean) => Unit): Long = {
+          var n = 0L; var i = 0
+          while (i < r.windowSize) {
+            val p = o - lag - i * r.seasonLength
+            val has = p >= 0 && x.c(p) > 0
+            if (p >= 0) n += x.c(p)
+            f(p, has); i += 1
+          }
+          n
+        }
+        r match {
+          case _: SeasonalRollingMean => Some { (x, o) =>
+            var tot = 0.0; var first = true
+            val n = frames(x, o) { (p, has) =>
+              val v = if (has) 0.0 + x.s(p) else 0.0
+              tot = if (first) v else tot + v; first = false
+            }
+            boxed(n >= ms && n > 0, tot / n)
+          }
+          case _: SeasonalRollingStd => Some { (x, o) =>
+            var s = 0.0; var ss = 0.0; var first = true
+            val n = frames(x, o) { (p, has) =>
+              val v = if (has) 0.0 + x.s(p) else 0.0
+              val vv = if (has) 0.0 + x.ss(p) else 0.0
+              if (first) { s = v; ss = vv } else { s += v; ss += vv }
+              first = false
+            }
+            boxed(n >= ms && n > 1, stdFromSums(s, ss, n.toDouble))
+          }
+          case _: SeasonalRollingMin => Some { (x, o) =>
+            var m = Double.NaN
+            val n = frames(x, o) { (p, has) =>
+              if (has) m = if (m.isNaN) x.mn(p) else math.min(m, x.mn(p)) }
+            boxed(n >= ms && n > 0 && !m.isNaN, m)
+          }
+          case _: SeasonalRollingMax => Some { (x, o) =>
+            var m = Double.NaN
+            val n = frames(x, o) { (p, has) =>
+              if (has) m = if (m.isNaN) x.mx(p) else math.max(m, x.mx(p)) }
+            boxed(n >= ms && n > 0 && !m.isNaN, m)
+          }
+          case _ => None
+        }
+      case r: RollingBase =>
+        val ms = r.resolvedMinSamples
+        def bounds(o: Int) = (o - lag - r.windowSize + 1, o - lag)
+        r match {
+          case _: RollingMean => Some { (x, o) =>
+            val (lo, hi) = bounds(o)
+            var s = 0.0
+            val n = frame(x, lo, hi)(i => s += x.s(i))
+            boxed(n >= ms && n > 0, s / n)
+          }
+          case _: RollingStd => Some { (x, o) =>
+            val (lo, hi) = bounds(o)
+            var s = 0.0; var ss = 0.0
+            val n = frame(x, lo, hi) { i => s += x.s(i); ss += x.ss(i) }
+            boxed(n >= ms && n > 1, stdFromSums(s, ss, n.toDouble))
+          }
+          case _: RollingMin => Some { (x, o) =>
+            val (lo, hi) = bounds(o)
+            var m = Double.PositiveInfinity
+            val n = frame(x, lo, hi)(i => m = math.min(m, x.mn(i)))
+            boxed(n >= ms && n > 0, m)
+          }
+          case _: RollingMax => Some { (x, o) =>
+            val (lo, hi) = bounds(o)
+            var m = Double.NegativeInfinity
+            val n = frame(x, lo, hi)(i => m = math.max(m, x.mx(i)))
+            boxed(n >= ms && n > 0, m)
+          }
+          case _ => None
+        }
+      case _ => None
+    }
+  }
+
+  /** The non-local transforms the lockstep kernel serves: bounded, built
+    * from the Featurizer's components (the transforms [[compilePooled]]
+    * mirrors), over a `global` or `groupby` bucket with no `partitionBy`
+    * or `timeAgg` — so the bucket IS its parent scope, whose calendar is
+    * the bucket's own dates.
+    */
+  private def lockstepPoolable(lag: Int, t: LagTransform): Boolean = {
+    val pl = t.pooling
+    (pl.global || pl.groupby.nonEmpty) && pl.partitionBy.isEmpty && pl.timeAgg.isEmpty &&
+      t.forcedCollapse.isEmpty && t.updateSamples(lag).isDefined &&
+      compilePooled(lag, t).isDefined
+  }
+
   /** Local date features, matching DateFeatures' Spark expressions (pandas
     * conventions) on DateType columns.
     */
@@ -385,16 +509,23 @@ private[graft] object LocalLoop {
 
   /** Kernels in featureNames order: lags, transforms by ascending lag —
     * the features_order_ contract every kernel's [[FeatureRow]] follows.
+    * The i-th non-local transform reads `pooled(i)`.
     */
-  private def compiledEvals(spec: FeatureSpec): Seq[Eval] =
-    spec.lags.sorted.map(l => compile(l, Lag()).get) ++
-      spec.lagTransforms.toSeq.sortBy(_._1).flatMap { case (l, ts) =>
-        ts.map(t => compile(l, t).get)
-      }
+  private def compiledEvals(spec: FeatureSpec, pooled: Int => Eval): Seq[Eval] = {
+    var i = -1
+    spec.allTransforms.map { case (l, t) =>
+      if (t.pooling.isLocal) compile(l, t).get else { i += 1; pooled(i) }
+    }
+  }
 
-  /** Every transform is local and has a kernel. */
-  private def kernelsCompile(spec: FeatureSpec): Boolean =
-    spec.allTransforms.forall { case (l, t) => t.pooling.isLocal && compile(l, t).isDefined }
+  /** Every local transform has a kernel; non-local ones are refused, or,
+    * with `pooled`, admitted when the lockstep kernel serves them.
+    */
+  private def kernelsCompile(spec: FeatureSpec, pooled: Boolean = false): Boolean =
+    spec.allTransforms.forall { case (l, t) =>
+      if (t.pooling.isLocal) compile(l, t).isDefined
+      else pooled && lockstepPoolable(l, t)
+    }
 
   /** Streaming bridge: the [[FeatureRow]] of a spec without statics or exog,
     * as a function of (history, appended predictions, target date) — the
@@ -419,14 +550,16 @@ private[graft] object LocalLoop {
     * and advance this panel. The rollout, which has no driver twin, asks
     * only this; the routed calls also honor [[enabled]].
     */
-  private def compiles(conf: MLForecast, p: PanelFrame): Boolean = {
+  private def compiles(conf: MLForecast, p: PanelFrame, pooled: Boolean = false): Boolean = {
     val dsType = p.df.schema(p.timeCol).dataType
     // the kernels group sorted rows into series via universal equality on
     // the id value; BinaryType ids surface as fresh Array[Byte] per row
     // (reference equality — every row would become its own series), so
     // binary ids route to the driver loop, whose joins/windows compare
-    // binary by value
-    p.df.schema(p.idCol).dataType != BinaryType && kernelsCompile(conf.spec) &&
+    // binary by value. Pooled bucket keys are compared the same way.
+    val keyCols = p.idCol +: conf.spec.allTransforms.flatMap(_._2.pooling.bucketCols(p.idCol))
+    keyCols.distinct.forall(c => p.df.columns.contains(c) && p.df.schema(c).dataType != BinaryType) &&
+      kernelsCompile(conf.spec, pooled) &&
       conf.spec.customDateFeatures.isEmpty &&
       (conf.spec.dateFeatures.isEmpty ||
         (dsType == DateType && conf.spec.dateFeatures.forall(dateFeature(_).isDefined))) &&
@@ -439,8 +572,8 @@ private[graft] object LocalLoop {
     */
   def enabled(conf: MLForecast): Boolean = conf.fusedPredict
 
-  private def routable(conf: MLForecast, p: PanelFrame): Boolean =
-    enabled(conf) && conf.directHorizons.isEmpty && compiles(conf, p)
+  private def routable(conf: MLForecast, p: PanelFrame, pooled: Boolean = false): Boolean =
+    enabled(conf) && conf.directHorizons.isEmpty && compiles(conf, p, pooled)
 
   /** Per-model half of the CV rule — the plan [[runCV]] executes. Per
     * model: Some(false) = serve from the driver-trained scorer, which stays
@@ -473,10 +606,12 @@ private[graft] object LocalLoop {
   /** Predict route: true = [[run]]. Each model must carry a scorer or a
     * per-series constant (seriesLevels); a callback fuses only through its
     * scalar after-hook (its contract: beforePredict is the identity).
+    * Pooled transforms of the lockstep kernel's shape are admitted
+    * ([[lockstepPoolable]]); CV and the rollout stay local-only.
     */
   def fusesPredict(conf: MLForecast, p: PanelFrame, trained: Seq[(String, TrainedModel)],
                    dynCols: Seq[String], callback: Option[PredictCallback]): Boolean =
-    callback.forall(_.afterScalar.isDefined) && routable(conf, p) &&
+    callback.forall(_.afterScalar.isDefined) && routable(conf, p, pooled = true) &&
       trained.forall { case (_, tm) =>
         tm.scorer(conf.featureCols ++ dynCols).isDefined || tm.seriesLevels.isDefined }
 
@@ -530,8 +665,9 @@ private[graft] object LocalLoop {
     * cannot drift apart.
     */
   private final class FeatureRow(spec: FeatureSpec, nStatic: Int, nDyn: Int,
-                                 nFeatures: Int) extends Serializable {
-    private val windowEvals: Array[Eval] = compiledEvals(spec).toArray
+                                 nFeatures: Int, pooled: Int => Eval = null)
+      extends Serializable {
+    private val windowEvals: Array[Eval] = compiledEvals(spec, pooled).toArray
     private val dateEvals: Array[LocalDate => Int] =
       spec.dateFeatures.map(n => dateFeature(n).get).toArray
     private val size = windowEvals.length + dateEvals.length + nStatic + nDyn
@@ -600,12 +736,74 @@ private[graft] object LocalLoop {
       s.fieldIndex("__y"), statics.map(s.fieldIndex).toArray, dynCols.map(s.fieldIndex).toArray))
   }
 
+  /** Column positions of the predict kernels' input rows; `iLevel(mi)` is
+    * model mi's level column, -1 for a feature-scored model; `iKeys(si)`
+    * the bucket key columns of pooled scope si.
+    */
+  private final case class PredictLayout(iId: Int, iDs: Int, iY: Int, iFut: Int,
+                                         iStatics: Array[Int], iDyn: Array[Int],
+                                         iLevel: Array[Int], iKeys: Array[Array[Int]])
+
+  /** The predict kernels' input stream: `hist` rows + tagged future-exog
+    * rows, one shuffle by id, sorted so each series arrives as a contiguous
+    * ascending run. Level-backed models contribute one joined constant
+    * column per model (left join: a series with no level predicts null,
+    * like the driver path's left join). `keys(si)` are scope si's bucket
+    * columns, carried raw with NaN folded to null, as the Featurizer keys
+    * its buckets.
+    */
+  private def predictInput(p: PanelFrame, hist: DataFrame, statics: Seq[String],
+                           dynCols: Seq[String], levelModels: Seq[Option[(DataFrame, String)]],
+                           xDf: Option[DataFrame],
+                           keys: Seq[Seq[String]] = Nil): (DataFrame, PredictLayout) = {
+    import p.{idCol, timeCol}
+    val levelCols = levelModels.zipWithIndex.collect {
+      case (Some(_), mi) => s"__lvl_$mi"
+    }
+    val keyCols = keys.zipWithIndex.map { case (cs, si) => cs.indices.map(j => s"__bk_${si}_$j") }
+    val histBase = levelModels.zipWithIndex.foldLeft(hist) {
+      case (d, (Some((lv, kc)), mi)) =>
+        d.join(lv.select(col(s"`$kc`").as(idCol),
+          col("__level").cast(DoubleType).as(s"__lvl_$mi")), Seq(idCol), "left")
+      case (d, _) => d
+    }
+    val histSel = Seq(p.id, p.ds, p.y.cast(DoubleType).as("__y"), lit(false).as("__fut")) ++
+      statics.map(c => col(s"`$c`").cast(DoubleType).as(c)) ++
+      dynCols.map(c => lit(null).cast(DoubleType).as(c)) ++
+      levelCols.map(col) ++
+      keys.zip(keyCols).flatMap { case (cs, ks) =>
+        cs.zip(ks).map { case (c, k) => Featurizer.normalizedKey(hist, c).as(k) } }
+    var input = histBase.select(histSel: _*)
+    xDf.foreach { x =>
+      val futSel = Seq(col(idCol), col(timeCol), lit(null).cast(DoubleType).as("__y"),
+        lit(true).as("__fut")) ++
+        statics.map(c => lit(null).cast(DoubleType).as(c)) ++
+        dynCols.map(c => col(s"`$c`").cast(DoubleType).as(c)) ++
+        levelCols.map(c => lit(null).cast(DoubleType).as(c)) ++
+        keyCols.flatten.map(k => lit(null).as(k))
+      input = input.unionByName(x.select(futSel: _*))
+    }
+    val sorted = kernelPartitioned(input, p)
+    val sc = sorted.schema
+    (sorted, PredictLayout(sc.fieldIndex(idCol), sc.fieldIndex(timeCol), sc.fieldIndex("__y"),
+      sc.fieldIndex("__fut"), statics.map(sc.fieldIndex).toArray,
+      dynCols.map(sc.fieldIndex).toArray,
+      levelModels.zipWithIndex.map {
+        case (Some(_), mi) => sc.fieldIndex(s"__lvl_$mi")
+        case (None, _) => -1
+      }.toArray,
+      keyCols.map(_.map(sc.fieldIndex).toArray).toArray))
+  }
+
   /** Run the fused loop. Returns (id, ds, <model preds...>) — identical to
-    * the driver loop's pre-inverse output.
+    * the driver loop's pre-inverse output. A spec with pooled transforms
+    * runs the step-synchronous [[runLockstep]].
     */
   def run(p: PanelFrame, conf: MLForecast, trained: Seq[(String, TrainedModel)],
           dynCols: Seq[String], h: Int, xDf: Option[DataFrame],
           after: Option[Double => Double] = None): DataFrame = {
+    if (!conf.spec.allTransforms.forall(_._2.pooling.isLocal))
+      return runLockstep(p, conf, trained, dynCols, h, xDf, after)
     import p.{idCol, timeCol}
     val spec = conf.spec
     val statics = conf.staticFeatures
@@ -623,47 +821,9 @@ private[graft] object LocalLoop {
     val advance = advancer(conf.freq, p.df.schema(timeCol).dataType).get
     val trimN = spec.updateSamplesBound.map(_ + 1).getOrElse(Int.MaxValue)
 
-    // Input stream: history rows + tagged future-exog rows, one shuffle by
-    // id, sorted so each series arrives as a contiguous ascending run.
-    // Level-backed models contribute one joined constant column per model
-    // (left join: a series with no level predicts null, like the driver
-    // path's left join).
-    val levelCols = levelModels.zipWithIndex.collect {
-      case (Some(_), mi) => s"__lvl_$mi"
-    }
-    val histBase = levelModels.zipWithIndex.foldLeft(p.df) {
-      case (d, (Some((lv, kc)), mi)) =>
-        d.join(lv.select(col(s"`$kc`").as(idCol),
-          col("__level").cast(DoubleType).as(s"__lvl_$mi")), Seq(idCol), "left")
-      case (d, _) => d
-    }
-    val histSel = Seq(p.id, p.ds, p.y.cast(DoubleType).as("__y"), lit(false).as("__fut")) ++
-      statics.map(c => col(s"`$c`").cast(DoubleType).as(c)) ++
-      dynCols.map(c => lit(null).cast(DoubleType).as(c)) ++
-      levelCols.map(col)
-    var input = histBase.select(histSel: _*)
-    xDf.foreach { x =>
-      val futSel = Seq(col(idCol), col(timeCol), lit(null).cast(DoubleType).as("__y"),
-        lit(true).as("__fut")) ++
-        statics.map(c => lit(null).cast(DoubleType).as(c)) ++
-        dynCols.map(c => col(s"`$c`").cast(DoubleType).as(c)) ++
-        levelCols.map(c => lit(null).cast(DoubleType).as(c))
-      input = input.unionByName(x.select(futSel: _*))
-    }
-    val sorted = kernelPartitioned(input, p)
-
+    val (sorted, layout) = predictInput(p, p.df, statics, dynCols, levelModels, xDf)
     val inSchema = sorted.schema
-    val iId = inSchema.fieldIndex(idCol)
-    val iDs = inSchema.fieldIndex(timeCol)
-    val iY = inSchema.fieldIndex("__y")
-    val iFut = inSchema.fieldIndex("__fut")
-    val iStatics = statics.map(inSchema.fieldIndex).toArray
-    val iDyn = dynCols.map(inSchema.fieldIndex).toArray
-    // per-model input index of its level column; -1 = feature-scored model
-    val iLevel: Array[Int] = levelModels.zipWithIndex.map {
-      case (Some(_), mi) => inSchema.fieldIndex(s"__lvl_$mi")
-      case (None, _) => -1
-    }.toArray
+    val PredictLayout(iId, iDs, iY, iFut, iStatics, iDyn, iLevel, _) = layout
 
     val outSchema = StructType(
       StructField(idCol, inSchema(iId).dataType, nullable = true) +:
@@ -720,6 +880,298 @@ private[graft] object LocalLoop {
         }
       }
     }(Encoders.row(outSchema))
+  }
+
+  /** Exact partials of one (bucket, ds) entry over its non-missing values:
+    * count, sum, sum of the squares as `v * v` rounds them, min and max.
+    * The sums are exact, so merging partials is order-free, and [[sum]] /
+    * [[sumSq]] round each once: the result does not depend on how the
+    * values were split across tasks.
+    */
+  private final class Comp extends Serializable {
+    var c = 0L
+    var mn = Double.PositiveInfinity
+    var mx = Double.NegativeInfinity
+    private var s = java.math.BigDecimal.ZERO
+    private var ss = java.math.BigDecimal.ZERO
+    // infinite addends, which BigDecimal cannot hold: bit 1 = +Inf, bit 2 = -Inf
+    private var sInf = 0
+    private var ssInf = 0
+
+    def add(x: Double): Unit = if (!x.isNaN) {
+      c += 1
+      mn = math.min(mn, x); mx = math.max(mx, x)
+      if (x.isInfinite) sInf |= (if (x > 0) 1 else 2)
+      else s = s.add(new java.math.BigDecimal(x))
+      val sq = x * x
+      if (sq.isInfinite) ssInf = 1 else ss = ss.add(new java.math.BigDecimal(sq))
+    }
+
+    def merge(o: Comp): Unit = {
+      c += o.c
+      mn = math.min(mn, o.mn); mx = math.max(mx, o.mx)
+      s = s.add(o.s); ss = ss.add(o.ss)
+      sInf |= o.sInf; ssInf |= o.ssInf
+    }
+
+    def copy(): Comp = { val o = new Comp; o.merge(this); o }
+
+    private def rounded(b: java.math.BigDecimal, inf: Int): Double = inf match {
+      case 0 => b.doubleValue
+      case 1 => Double.PositiveInfinity
+      case 2 => Double.NegativeInfinity
+      case _ => Double.NaN
+    }
+    def sum: Double = rounded(s, sInf)
+    def sumSq: Double = rounded(ss, ssInf)
+  }
+
+  /** One series in the lockstep kernel: its kept history (dates and NaN-
+    * for-missing targets), what its features read, its bucket key per
+    * pooled scope, and per model the appended targets (NaN = missing) and
+    * the reported predictions of the steps run so far.
+    */
+  private final case class LockstepSeries(
+      id: Any, lastDs: Any, histDs: Array[Any], hist: Array[Double],
+      statics: Array[Double], levels: Array[java.lang.Double],
+      exogByDs: Map[Any, Array[Double]], keys: Array[Seq[Any]],
+      app: Array[Array[Double]], preds: Array[Array[java.lang.Double]])
+
+  /** A bucket key as Spark groups it: -0.0 is 0.0 (NaN is already null). */
+  private def bucketValue(v: Any): Any = v match {
+    case d: java.lang.Double if d.doubleValue == 0.0 => java.lang.Double.valueOf(0.0)
+    case f: java.lang.Float if f.floatValue == 0.0f => java.lang.Float.valueOf(0.0f)
+    case other => other
+  }
+
+  /** Step-synchronous fused predict for specs with pooled transforms
+    * ([[lockstepPoolable]]), one Spark job per step. The per-series
+    * history stays in executor partitions, local-checkpointed step by step;
+    * the driver holds only per-(model, bucket, date) components.
+    *
+    *   - Job 0 materializes the kernel-partitioned history
+    *     ([[MLForecast.predictHistory]]'s rows) and returns its exact
+    *     per-(bucket, date) partials and each bucket's series end dates.
+    *   - Before step k the driver adds the step's placeholder dates
+    *     (`advance(end, k)` per end date) to each bucket's calendar, so
+    *     ordinals are the dense rank `Ordinals.withOrdinal` assigns, and
+    *     evaluates every pooled transform at each placeholder
+    *     ([[compilePooled]]): a broadcast (model, bucket, date) → values
+    *     table.
+    *   - Step k's job scores every series, reading local features from its
+    *     history and pooled ones from the table (an [[Eval]] at the
+    *     feature's featureNames position), appends the prediction and
+    *     returns per-(model, bucket, date) partials of the predictions,
+    *     which the driver merges into the calendars.
+    *
+    * Exactness: the calendar, frames and guards are the driver loop's; the
+    * component sums are exact and rounded once where the Featurizer's
+    * Spark `sum` rounds in arrival order, so forecasts match the driver
+    * loop bit for bit whenever those sums are exact (integer-valued
+    * history and predictions) and to the last bits otherwise, and never
+    * depend on the kernel's partition count. Output: (id, ds, <model
+    * preds...>), like [[run]].
+    */
+  private def runLockstep(p: PanelFrame, conf: MLForecast, trained: Seq[(String, TrainedModel)],
+                          dynCols: Seq[String], h: Int, xDf: Option[DataFrame],
+                          after: Option[Double => Double]): DataFrame = {
+    import p.{idCol, timeCol}
+    val spark = p.df.sparkSession
+    val sc = spark.sparkContext
+    val spec = conf.spec
+    val statics = conf.staticFeatures
+    val allFeatures = conf.featureCols ++ dynCols
+    val nFeatures = allFeatures.size
+    val names = trained.map(_._1)
+    val nModels = names.size
+    val levelModels = trained.map { case (_, tm) => tm.seriesLevels }
+    val levelBacked = levelModels.map(_.isDefined).toArray
+    val scorers = trained.map { case (_, tm) => tm.scorer(allFeatures).orNull }.toArray
+    require(scorers.zip(levelModels).forall { case (s, l) => s != null || l.isDefined },
+      "model is neither scorable nor level-backed")
+    val advance = advancer(conf.freq, p.df.schema(timeCol).dataType).get
+    val afterFn: Double => Double = after.orNull
+
+    // pooled transforms in featureNames order, each with its scope (bucket
+    // columns; Nil = global) and driver-side evaluator
+    val pooled = spec.allTransforms.filterNot(_._2.pooling.isLocal)
+    val scopes = pooled.map(_._2.pooling.bucketCols(idCol)).distinct
+    val scopeOf = pooled.map(t => scopes.indexOf(t._2.pooling.bucketCols(idCol))).toArray
+    val evals = pooled.map { case (l, t) => compilePooled(l, t).get }.toArray
+    val nPooled = pooled.size
+    val nScopes = scopes.size
+
+    val (sorted, layout) = predictInput(p, MLForecast.predictHistory(p, spec), statics,
+      dynCols, levelModels, xDf, scopes)
+    val outSchema = StructType(
+      StructField(idCol, sorted.schema(layout.iId).dataType, nullable = true) +:
+        StructField(timeCol, advancedDsType(p), nullable = true) +:
+        names.map(n => StructField(n, DoubleType, nullable = true)))
+
+    var state: org.apache.spark.rdd.RDD[LockstepSeries] = sorted.rdd.mapPartitions { iter =>
+      val l = layout
+      seriesRuns(iter, l.iId).flatMap { run =>
+        val (futRows, histRows) = run.partition(_.getBoolean(l.iFut))
+        if (histRows.isEmpty) Iterator.empty // exog-only ids emit nothing
+        else {
+          val first = histRows.head
+          Iterator.single(LockstepSeries(
+            id = first.get(l.iId),
+            lastDs = histRows.last.get(l.iDs),
+            histDs = histRows.map(_.get(l.iDs)).toArray,
+            hist = histRows.map(doubleAt(_, l.iY)).toArray,
+            statics = l.iStatics.map(doubleAt(first, _)),
+            levels = l.iLevel.map { i =>
+              if (i < 0 || first.isNullAt(i)) null else java.lang.Double.valueOf(first.getDouble(i))
+            },
+            exogByDs = futRows.iterator.map(r => r.get(l.iDs) -> l.iDyn.map(doubleAt(r, _))).toMap,
+            keys = l.iKeys.map(ks => ks.toSeq.map(i => bucketValue(first.get(i)))),
+            app = Array.fill(nModels)(Array.emptyDoubleArray),
+            preds = Array.fill(nModels)(Array.empty[java.lang.Double])))
+        }
+      }
+    }
+    state.localCheckpoint()
+
+    // job 0: history partials and series end dates per bucket
+    val history = sc.runJob(state, (it: Iterator[LockstepSeries]) => {
+      val parts = scala.collection.mutable.HashMap.empty[(Int, Seq[Any], Any), Comp]
+      val ends = scala.collection.mutable.HashMap.empty[(Int, Seq[Any]), Set[Any]]
+      it.foreach { s =>
+        var si = 0
+        while (si < nScopes) {
+          val key = s.keys(si)
+          var r = 0
+          while (r < s.hist.length) {
+            if (s.histDs(r) != null)
+              parts.getOrElseUpdate((si, key, s.histDs(r)), new Comp).add(s.hist(r))
+            r += 1
+          }
+          ends((si, key)) = ends.getOrElse((si, key), Set.empty[Any]) + s.lastDs
+          si += 1
+        }
+      }
+      (parts, ends)
+    })
+    // per (model, scope, bucket): the calendar, date -> components
+    val ordering: Ordering[Any] = (a: Any, b: Any) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+    val calendars = scala.collection.mutable.HashMap.empty[(Int, Int, Seq[Any]),
+      java.util.TreeMap[Any, Comp]]
+    def calendar(mi: Int, si: Int, key: Seq[Any]) =
+      calendars.getOrElseUpdate((mi, si, key), new java.util.TreeMap[Any, Comp](ordering))
+    val bucketEnds = scala.collection.mutable.HashMap.empty[(Int, Seq[Any]), Set[Any]]
+    history.foreach { case (parts, ends) =>
+      ends.foreach { case (b, es) => bucketEnds(b) = bucketEnds.getOrElse(b, Set.empty[Any]) ++ es }
+      parts.foreach { case ((si, key, ds), comp) =>
+        (0 until nModels).foreach { mi =>
+          val cal = calendar(mi, si, key)
+          val cur = cal.get(ds)
+          if (cur == null) cal.put(ds, comp.copy()) else cur.merge(comp)
+        }
+      }
+    }
+
+    for (step <- 1 to h) {
+      // the step's pooled features: (model, scope, bucket, date) -> values
+      // indexed like `pooled` (other scopes' slots unused)
+      val table = new java.util.HashMap[(Int, Int, Seq[Any], Any), Array[java.lang.Double]]()
+      for (((si, key), es) <- bucketEnds; mi <- 0 until nModels) {
+        val cal = calendar(mi, si, key)
+        val placeholders = es.map(advance(_, step))
+        placeholders.foreach(d => if (!cal.containsKey(d)) cal.put(d, new Comp))
+        val n = cal.size
+        val at = scala.collection.mutable.HashMap.empty[Any, Int] // placeholder positions
+        val comps = new Comps(new Array[Long](n), new Array[Double](n), new Array[Double](n),
+          new Array[Double](n), new Array[Double](n))
+        var i = 0
+        val it = cal.entrySet.iterator
+        while (it.hasNext) {
+          val e = it.next(); val cp = e.getValue
+          if (placeholders.contains(e.getKey)) at(e.getKey) = i
+          comps.c(i) = cp.c; comps.s(i) = cp.sum; comps.ss(i) = cp.sumSq
+          comps.mn(i) = cp.mn; comps.mx(i) = cp.mx
+          i += 1
+        }
+        placeholders.foreach { d =>
+          val o = at(d)
+          val vals = new Array[java.lang.Double](nPooled)
+          var j = 0
+          while (j < nPooled) { if (scopeOf(j) == si) vals(j) = evals(j)(comps, o); j += 1 }
+          table.put((mi, si, key, d), vals)
+        }
+      }
+      val bc = sc.broadcast(table)
+      val next = state.mapPartitions({ iter =>
+        val slot = new Array[java.lang.Double](nPooled)
+        val features = new FeatureRow(spec, statics.size, dynCols.size, nFeatures,
+          j => (_: View) => slot(j))
+        val tab = bc.value
+        iter.map { s =>
+          val stepDs = advance(s.lastDs, step)
+          val exog = s.exogByDs.getOrElse(stepDs, null)
+          val app = new Array[Array[Double]](nModels)
+          val preds = new Array[Array[java.lang.Double]](nModels)
+          var mi = 0
+          while (mi < nModels) {
+            var pred: java.lang.Double =
+              if (levelBacked(mi)) s.levels(mi) // per-series constant
+              else {
+                var si = 0
+                while (si < nScopes) {
+                  val vals = tab.get((mi, si, s.keys(si), stepDs))
+                  var j = 0
+                  while (j < nPooled) { if (scopeOf(j) == si) slot(j) = vals(j); j += 1 }
+                  si += 1
+                }
+                scorers(mi)(features(new View(s.hist, ArrayBuffer.from(s.app(mi))), stepDs,
+                  s.statics, exog))
+              }
+            if (afterFn != null && pred != null)
+              pred = java.lang.Double.valueOf(afterFn(pred.doubleValue))
+            app(mi) = s.app(mi) :+ (if (pred == null) Double.NaN else pred.doubleValue)
+            preds(mi) = s.preds(mi) :+ pred
+            mi += 1
+          }
+          s.copy(app = app, preds = preds)
+        }
+      }, preservesPartitioning = true)
+      next.localCheckpoint()
+      // step job: materialize the step and return its prediction partials
+      val stepParts = sc.runJob(next, (it: Iterator[LockstepSeries]) => {
+        val parts = scala.collection.mutable.HashMap.empty[(Int, Int, Seq[Any], Any), Comp]
+        it.foreach { s =>
+          val stepDs = advance(s.lastDs, step)
+          var mi = 0
+          while (mi < nModels) {
+            var si = 0
+            while (si < nScopes) {
+              parts.getOrElseUpdate((mi, si, s.keys(si), stepDs), new Comp).add(s.app(mi)(step - 1))
+              si += 1
+            }
+            mi += 1
+          }
+        }
+        parts
+      })
+      stepParts.foreach(_.foreach { case ((mi, si, key, ds), comp) =>
+        calendar(mi, si, key).get(ds).merge(comp)
+      })
+      // the step job checkpointed `next`, so nothing reads `state` again
+      state.unpersist(blocking = false)
+      state = next
+    }
+
+    val out = state.flatMap { s =>
+      (1 to h).iterator.map { step =>
+        val vals = new Array[Any](2 + nModels)
+        vals(0) = s.id
+        vals(1) = advance(s.lastDs, step)
+        var mi = 0
+        while (mi < nModels) { vals(2 + mi) = s.preds(mi)(step - 1); mi += 1 }
+        new org.apache.spark.sql.catalyst.expressions.GenericRow(vals): Row
+      }
+    }
+    spark.createDataFrame(out, outSchema)
   }
 
   /** Fused sliding-window cross validation: every (window × step × model) for

@@ -17,10 +17,14 @@ import graft.operators.{FeatureSpec, Featurizer}
   * Design stance (SURVEY §7): state is DataFrames, and recursive predict
   * has two routes, chosen in one place ([[LocalLoop.fusesPredict]]). By
   * default the fused [[LocalLoop]] kernel runs all h steps for all models
-  * in one per-series mapPartitions pass. The driver loop (`recursiveLoop`)
-  * serves pooled transforms, frame-observing callbacks, binary ids, custom
-  * date features, models without an executor scorer, and
-  * `fusedPredict = false`, the reference the kernel is checked against.
+  * in one per-series mapPartitions pass; with pooled transforms (bounded
+  * component windows over global/groupby buckets) it runs one job per
+  * step and the driver combines per-(bucket, ds) partials between steps.
+  * The driver loop (`recursiveLoop`) serves the other pooled shapes
+  * (partitionBy, timeAgg, unbounded or non-decomposable), frame-observing
+  * callbacks, binary ids, custom date features, models without an
+  * executor scorer, and `fusedPredict = false`, the reference the kernel
+  * is checked against.
   * Each driver step is one job — a window pass over the carried per-series
   * history plus scoring — checkpointed so plan lineage stays flat
   * regardless of horizon. Pooled transforms work unmodified there because
@@ -78,13 +82,12 @@ final case class MLForecast(
       // passes. Closed-form echo models never trigger the materialization
       // (cache is lazy), so they pay nothing. Per-model fits are independent
       // job chains — submit concurrently so they overlap on free executors.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.Await
       import scala.concurrent.duration.Duration
       val trainC = train.cache()
       val trained =
         try models.map { m =>
-          m.name -> Future {
+          m.name -> Par.future(panel.df.sparkSession) {
             m.fit(trainC, featureCols ++ dynCols, p.targetCol, panel.weightCol)
           }
         }.map { case (n, f) => n -> Await.result(f, Duration.Inf) }
@@ -100,13 +103,12 @@ final case class MLForecast(
       val feat = featurized.cache()
       // per-horizon fits are independent job chains over the shared cached
       // frame — submit them concurrently so they overlap on free executors
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.Await
       import scala.concurrent.duration.Duration
       val futures = models.map { m =>
         m.name -> directHorizons.map { h =>
           val allowed = exogForHorizon(h, dynCols, routed)
-          h -> Future {
+          h -> Par.future(panel.df.sparkSession) {
             val trainDf = directTrainFrame(feat, p, h, dynCols, exog, allowed)
             m.fit(trainDf, featureCols ++ allowed, "__tgt", panel.weightCol)
           }
@@ -349,6 +351,65 @@ object MLForecast {
     if (df.queryExecution.logical.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]) df
     else df.localCheckpoint(false)
 
+  /** The history a predict carries (reference keep_last_n inference,
+    * core.py:404-425): every row some step's features read. A local-only
+    * bounded spec keeps each series' last `bound + 1` rows. A non-local
+    * transform windows its parent scope's calendar (the group's; the
+    * panel's for global pooling), where a series that ends early reads its
+    * partners' rows at dates their own tails would drop. Such a spec also
+    * keeps, per parent scope, every row from a cut at least `bound`
+    * calendar entries before the earliest series end ([[scopeCutoffs]]):
+    * the calendar from the cut on is whole, so the ordinal distances the
+    * steps' windows read are unchanged. Unbounded specs keep everything.
+    */
+  private[forecast] def predictHistory(p: PanelFrame, spec: FeatureSpec): DataFrame =
+    spec.updateSamplesBound match {
+      case None => p.df
+      case Some(bound) =>
+        val scopes = spec.allTransforms.collect {
+          case (_, t) if !t.pooling.isLocal => t.pooling.parentScope(p.idCol)
+        }.distinct
+        if (scopes.isEmpty) p.keepLastN(bound + 1).df
+        else {
+          val fromEnd = row_number().over(Window.partitionBy(p.id).orderBy(p.ds.desc))
+          val ranked = p.df.withColumn("__rn", fromEnd)
+          val (withCuts, keeps) = scopes.zipWithIndex.foldLeft((ranked, Seq.empty[Column])) {
+            case ((df, ks), (scope, i)) =>
+              val cut = s"__cut$i"
+              (df.join(broadcast(scopeCutoffs(ranked, p, scope, bound, s"__sk${i}_", cut)),
+                scope.zipWithIndex.map { case (c, j) =>
+                  Featurizer.normalizedKey(df, c) <=> col(s"__sk${i}_$j") }
+                  .foldLeft(lit(true))(_ && _), "left"),
+                ks :+ (col(cut).isNull || p.ds >= col(cut)))
+          }
+          val keyCols = scopes.indices.flatMap(i =>
+            scopes(i).indices.map(j => s"__sk${i}_$j") :+ s"__cut$i")
+          withCuts.filter(keeps.foldLeft(col("__rn") <= bound + 1)(_ || _))
+            .drop(("__rn" +: keyCols): _*)
+        }
+    }
+
+  /** Per parent-scope key of `ranked` (the panel with each series'
+    * descending row number `__rn`; NaN and null keys are one key, as the
+    * pooled calendar has them): a date at least `bound` calendar entries
+    * before the scope's earliest series end, null when none is known. It
+    * is read off the series' own last `bound + 1` rows, a subset of the
+    * calendar: the date `bound` entries back in that subset is at or
+    * before the calendar's, and the same date on gap-free series. One
+    * aggregation over at most `bound + 1` rows per series.
+    */
+  private def scopeCutoffs(ranked: DataFrame, p: PanelFrame, scope: Seq[String], bound: Int,
+                           keyPrefix: String, cut: String): DataFrame = {
+    val keys = scope.indices.map(j => s"$keyPrefix$j")
+    val desc = sort_array(filter(col("__ds"), d => d <= col("__end")), asc = false)
+    ranked.filter(col("__rn") <= bound + 1)
+      .select((scope.zip(keys).map { case (c, k) => Featurizer.normalizedKey(ranked, c).as(k) }
+        :+ p.ds.as("__d") :+ col("__rn")): _*)
+      .groupBy(keys.map(col): _*)
+      .agg(min(when(col("__rn") === 1, col("__d"))).as("__end"), collect_set(col("__d")).as("__ds"))
+      .select((keys.map(col) :+ when(size(desc) > bound, element_at(desc, bound + 1)).as(cut)): _*)
+  }
+
   /** na.drop that survives dotted feature names (`...alpha0.5`): explicit
     * backticked null/NaN filter per column, same semantics as
     * DataFrameNaFunctions.drop on double columns.
@@ -555,21 +616,16 @@ final case class FittedMLForecast(
   private def predictRecursive(h: Int, xDf: Option[DataFrame],
                                callback: Option[PredictCallback] = None): DataFrame = {
     // Fused fast path (LocalLoop's route rule): when every transform is
-    // per-series (no pooled cross-series state forcing lockstep), all h
-    // steps × models run inside one mapPartitions pass — one job instead of
-    // h orchestrated steps. Frame-observing callbacks (SaveFeatures) route
-    // to the driver loop below.
+    // per-series, all h steps × models run inside one mapPartitions pass —
+    // one job instead of h orchestrated steps; admitted pooled specs run
+    // one kernel job per step. Frame-observing callbacks (SaveFeatures)
+    // route to the driver loop below.
     if (LocalLoop.fusesPredict(conf, transformedPanel, trained, dynCols, callback)) {
       val out = LocalLoop.run(transformedPanel, conf, trained, dynCols, h, xDf,
         after = callback.flatMap(_.afterScalar))
       return inverseTransforms(out, trained.map(_._1))
     }
-    // Trim carried history when every transform is finite-window
-    // (reference keep_last_n inference, core.py:404-425).
-    val baseState = conf.spec.updateSamplesBound match {
-      case Some(bound) => transformedPanel.keepLastN(bound + 1).df
-      case None        => transformedPanel.df
-    }
+    val baseState = MLForecast.predictHistory(transformedPanel, conf.spec)
     // statics is a full-panel distinct and gets embedded in every appended
     // step frame — materialize it once (one small row per series); with no
     // static features it is just the id set and every use is a no-op join,
@@ -579,15 +635,15 @@ final case class FittedMLForecast(
       else Some(transformedPanel.copy(staticCols = conf.staticFeatures)
         .statics.localCheckpoint())
     val stateCols = Seq(idCol, timeCol, targetCol) ++ conf.staticFeatures
-    val base = baseState.select(stateCols.map(col): _*).cache()
+    // pinned as a checkpoint, not a cache: the first step's plan missed a
+    // cache of a pooled history (its cutoff self-join) and re-ran the
+    // history's shuffles several times over
+    val base = baseState.select(stateCols.map(col): _*).localCheckpoint()
     val lastDates = transformedPanel.lastDates.cache()
-    // a throwing model or callback must not leak either cache; step frames
-    // are localCheckpoint'ed, so the result no longer reads them
+    // a throwing model or callback must not leak the cache
     val out =
-      try {
-        base.count() // materialize once; every step reuses it
-        recursiveLoop(trained, h, base, statics, lastDates, xDf, callback)
-      } finally { base.unpersist(); lastDates.unpersist() }
+      try recursiveLoop(trained, h, base, statics, lastDates, xDf, callback)
+      finally lastDates.unpersist()
     inverseTransforms(out, trained.map(_._1))
   }
 
@@ -603,10 +659,7 @@ final case class FittedMLForecast(
     require(hs.nonEmpty,
       s"no trained horizon < $h; trained (1-indexed): ${conf.directHorizons.map(_ + 1).mkString(", ")}")
 
-    val baseState = conf.spec.updateSamplesBound match {
-      case Some(bound) => transformedPanel.keepLastN(bound + 1).df
-      case None        => transformedPanel.df
-    }
+    val baseState = MLForecast.predictHistory(transformedPanel, conf.spec)
     val stateCols = Seq(idCol, timeCol, targetCol) ++ conf.staticFeatures
     val base = baseState.select(stateCols.map(col): _*)
     val lastDates = transformedPanel.lastDates
@@ -668,7 +721,8 @@ final case class FittedMLForecast(
   }
 
   /** The driver loop, one loop for ALL models. Each step, per model: trim
-    * the carried state to the spec's bound, featurize (state ∪ placeholder)
+    * the carried state to the spec's bound (local-only specs; a pooled spec
+    * keeps [[MLForecast.predictHistory]]'s rows), featurize (state ∪ placeholder)
     * with the whole spec, score. The step then checkpoints ONE tagged union
     * holding every model's appended state rows and scored row — a single
     * Spark job per step whose independent per-model stages run
@@ -690,6 +744,7 @@ final case class FittedMLForecast(
     val stateCols = baseD.columns.toSeq
     var states: Map[String, DataFrame] = models.map(_._1 -> baseD).toMap
     var stepPreds: Vector[DataFrame] = Vector.empty // (id, ds, <model cols...>)
+    val localOnly = conf.spec.allTransforms.forall(_._2.pooling.isLocal)
 
     // All h placeholders materialized once (statics + exog joined a single
     // time); each step's placeholder is then a zero-shuffle filter.
@@ -717,13 +772,15 @@ final case class FittedMLForecast(
       val placeholder = placeholders.filter(col("__step_no") === step).drop("__step_no")
 
       val perModel = models.map { case (name, model) =>
-        // trim keeps the carried state at bound+1 rows per series forever
+        // a local-only bounded spec keeps the carried state at bound+1 rows
+        // per series forever; a pooled one keeps predictHistory's rows plus
+        // every step (a per-series tail would cut its partners' rows)
         val stateNow = conf.spec.updateSamplesBound match {
-          case Some(b) =>
+          case Some(b) if localOnly =>
             val wTrim = Window.partitionBy(col(idCol)).orderBy(col(timeCol).desc)
             states(name).withColumn("__rt", row_number().over(wTrim))
               .filter(col("__rt") <= b + 1).drop("__rt")
-          case None => states(name)
+          case _ => states(name)
         }
         val unioned = stateNow.unionByName(placeholder, allowMissingColumns = true)
         val feats = Featurizer.addFeatures(transformedPanel.copy(df = unioned), conf.spec)
@@ -1213,7 +1270,6 @@ private object MLForecastCV {
     val lastDates = panel.lastDates
     def fitWindowOf(i: Int): Int = fitWindow(i, refit, refitEvery)
     import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     // ---- shared nested-CV path (one scores pass, like the reference's
     // single _conformity_scores CV, forecast.py:682-759).
@@ -1312,7 +1368,7 @@ private object MLForecastCV {
       (0 until nWindows).filter(i => fitWindowOf(i) != i)
         .map(fitWindowOf).distinct.map { fw =>
           val cutoffs = windowCutoffs(panel, lastDates, outerOffsets(fw), h)
-          fw -> Future { conf.fit(trainSlice(panel, cutoffs, inputSize)) }
+          fw -> Par.future(panel.df.sparkSession) { conf.fit(trainSlice(panel, cutoffs, inputSize)) }
         }.toMap
     val parts = Par.run((0 until nWindows).map { i =>
       () => {

@@ -53,7 +53,6 @@ object MLForecastIO {
 
   def save(fitted: FittedMLForecast, path: String): Unit = {
     import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     val spark = fitted.rawPanel.df.sparkSession
     val meta = PanelMeta(fitted.rawPanel.idCol, fitted.rawPanel.timeCol,
@@ -65,7 +64,7 @@ object MLForecastIO {
     // state frame is tiny but each serial write stacked a constant job
     // latency; reference equivalent is one cloudpickle, core.py:2002-2010).
     val writes = Seq.newBuilder[Future[Unit]]
-    writes += Future {
+    writes += Par.future(spark) {
       fitted.rawPanel.df.write.mode("overwrite").parquet(s"$path/panel")
     }
     // frozen transform state (scaler stats, auto decisions, Box-Cox λ):
@@ -73,7 +72,7 @@ object MLForecastIO {
     // refitting on the appended panel would silently change the values
     val stateCounts = fitted.fittedTransforms.zipWithIndex.map { case (f, i) =>
       f.state.zipWithIndex.foreach { case (df, j) =>
-        writes += Future {
+        writes += Par.future(spark) {
           df.write.mode("overwrite").parquet(s"$path/tfm_state/$i/$j")
         }
       }
@@ -83,7 +82,7 @@ object MLForecastIO {
     // state — never through a driver collect into the blob
     val modelStateCounts = fitted.trained.zipWithIndex.map { case ((_, tm), i) =>
       tm.state.zipWithIndex.foreach { case (df, j) =>
-        writes += Future {
+        writes += Par.future(spark) {
           df.write.mode("overwrite").parquet(s"$path/model_state/$i/$j")
         }
       }
@@ -92,7 +91,7 @@ object MLForecastIO {
     val directStateCounts = fitted.directTrained.zipWithIndex.map { case ((_, byH), i) =>
       byH.toSeq.sortBy(_._1).map { case (h, tm) =>
         tm.state.zipWithIndex.foreach { case (df, j) =>
-          writes += Future {
+          writes += Par.future(spark) {
             df.write.mode("overwrite").parquet(s"$path/model_state_direct/$i/$h/$j")
           }
         }
@@ -130,13 +129,12 @@ object MLForecastIO {
         .asInstanceOf[(MLForecast, PanelMeta, Seq[(String, TrainedModel)],
           Seq[(String, Map[Int, TrainedModel])], Seq[Int], Seq[Int], Seq[Seq[(Int, Int)]])]
     import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     // spark.read.parquet is lazy but not free: each path pays a driver-side
     // file listing + footer schema read. Issue them concurrently (same
     // rationale as save's threaded writes).
     def rd(p: String): Future[org.apache.spark.sql.DataFrame] =
-      Future(spark.read.parquet(p))
+      Par.future(spark)(spark.read.parquet(p))
     val dfF = rd(s"$path/panel")
     val statesF = stateCounts.zipWithIndex.map { case (n, i) =>
       (0 until n).map(j => rd(s"$path/tfm_state/$i/$j"))

@@ -18,6 +18,25 @@ package graft.forecast
   */
 private[graft] object Par {
 
+  private val ExecutionIds = Seq("spark.sql.execution.id", "spark.sql.execution.root.id")
+
+  /** `Future(body)` on the global pool, run under the submitting thread's
+    * SQL execution ids. A pool thread keeps the Spark local properties it
+    * inherited when it was spawned, among them the ids of whatever
+    * execution its spawning thread was running; a job it submits later
+    * would report that stale execution and nest its own executions under
+    * it. The ids are cleared again when the body ends.
+    */
+  def future[T](spark: org.apache.spark.sql.SparkSession)(body: => T)
+      : scala.concurrent.Future[T] = {
+    val sc = spark.sparkContext
+    val ids = ExecutionIds.map(k => k -> sc.getLocalProperty(k))
+    scala.concurrent.Future {
+      ids.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try body finally ExecutionIds.foreach(sc.setLocalProperty(_, null))
+    }(scala.concurrent.ExecutionContext.global)
+  }
+
   /** Windows in flight per fan-out. */
   val defaultWidth: Int = 3
 

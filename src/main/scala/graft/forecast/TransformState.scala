@@ -26,10 +26,14 @@ import graft.core.PanelFrame
   * spec computes itself). A scaler with FROZEN stats enters the replay as a
   * broadcast join of its stats relation instead of a window aggregate:
   * restored and updated scalers, and a standard scaler with no difference
-  * stage before it, whose sum-based moments accumulate in the source's
-  * arrival order that no later (id, ds)-sorted replay reproduces on float
-  * targets ([[LocalScaler.sumsUnordered]]); its stats are its own
-  * `stats(p)` window-distinct relation.
+  * stage before it in a run of several stages, whose sum-based moments
+  * accumulate in the source's arrival order that a later stage's
+  * (id, ds)-sorted window could reorder on float targets
+  * ([[LocalScaler.sumsUnordered]]); its stats are its own `stats(p)`
+  * window-distinct relation. Fused alone (`LocalStandardScaler().fit(p)`,
+  * a one-stage run), it replays its window aggregate: the state relation
+  * runs that same window over the same input, followed only by the tail
+  * rank.
   *
   * Scope: stages with their own state (BoxCox, the auto transforms, user
   * transforms) are [[Opaque]]: they fit, restore and update themselves and
@@ -166,7 +170,7 @@ private[forecast] object TransformState {
           df = g.forward(df, tgt)
           val out = current
           (_: Shared) => GlobalFuncFitted(out, g.name)
-        case Scale(s: LocalStandardScaler) if !ordered =>
+        case Scale(s: LocalStandardScaler) if !ordered && stages.size > 1 =>
           scaled(ti, df.join(broadcast(s.stats(in)), Seq(base.idCol)))
         case Scale(s)   => scaled(ti, LocalScaler.safeScale(s.withStats(df, base)))
         case Frozen(st) => scaled(ti, df.join(broadcast(st), Seq(base.idCol)))

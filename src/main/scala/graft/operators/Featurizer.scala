@@ -76,7 +76,7 @@ object Featurizer {
     * Backticked: a bucket column named with a dot must not parse as a
     * struct-field access.
     */
-  private def normalizedKey(df: DataFrame, c: String): Column =
+  private[graft] def normalizedKey(df: DataFrame, c: String): Column =
     df.schema(c).dataType match {
       case DoubleType | FloatType =>
         when(isnan(col(s"`$c`")), lit(null)).otherwise(col(s"`$c`"))

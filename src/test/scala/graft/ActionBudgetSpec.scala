@@ -45,7 +45,10 @@ class ActionBudgetSpec extends SparkSpec {
     // r12: sidecar writes/reads threaded (max-of-jobs, not sum) — the
     // count is now fit-pin + panel write + load pins + predict
     "save_load_predict_diff_naive" -> 6,
-    "predict_pooled_groupby_rmean" -> 7,
+    // the pooled lockstep kernel: its history and step jobs are plain RDD
+    // jobs outside any SQL execution (one job per step, pinned by the
+    // job-count test below); 7 -> 3 from the driver lockstep loop
+    "predict_pooled_groupby_rmean" -> 3,
     "predict_intervals_weighted" -> 2,
     "aci_path_snaive" -> 1,
     "predict_ses_h3" -> 2,
@@ -89,5 +92,39 @@ class ActionBudgetSpec extends SparkSpec {
     }
     assert(over.isEmpty,
       s"driver-loop action budgets exceeded:\n${over.mkString("\n")}")
+  }
+
+  test("a pooled lockstep predict runs one Spark job per step") {
+    import graft.core.{Freq, PanelFrame}
+    import graft.forecast.{MLForecast, Models, SparkLinearRegression}
+    import graft.functions.{Pooling, RollingMean}
+    import graft.operators.FeatureSpec
+    import spark.implicits._
+    val rows = for (s <- 0 until 12; t <- 0 until 60)
+      yield (s"s$s", t.toLong, ((s * 7 + t * 3) % 11).toDouble, (s % 3).toDouble)
+    val p = PanelFrame(rows.toDF("unique_id", "ds", "y", "grp"), freq = Freq.IntFreq(1),
+      staticCols = Seq("grp"))
+    val fitted = MLForecast(Seq(SparkLinearRegression(), Models.naive), Freq.IntFreq(1),
+      FeatureSpec(lags = Seq(1, 7), lagTransforms =
+        Map(1 -> Seq(RollingMean(7, pooling = Pooling(groupby = Seq("grp")))))),
+      staticFeatures = Seq("grp")).fit(p)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(h: Int): Int = {
+      fitted.predict(h).collect() // warm
+      org.apache.spark.sql.graft.bridge.waitForListeners(spark)
+      jobs.set(0)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        fitted.predict(h).collect()
+        org.apache.spark.sql.graft.bridge.waitForListeners(spark)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      jobs.get()
+    }
+    val (j2, j7) = (jobsOf(2), jobsOf(7))
+    info(s"pooled predict jobs: h=2 $j2, h=7 $j7")
+    assert(j7 - j2 <= 5, s"h=7 ran $j7 jobs, h=2 ran $j2: more than one job per step")
   }
 }

@@ -1141,15 +1141,47 @@ class ForecastSpec extends SparkSpec {
       fitted.copy(conf = fitted.conf.copy(fusedPredict = false)).predict(6), names)
     assert(fused.length == 3 * 6 * 2 && fused == driver)
 
-    // driver only: the pooled window keeps the predict off the kernel, so
-    // the driver loop featurizes the local expanding/EWM transforms itself.
-    // The digest pins the forecasts that running aggregates and the window
-    // recompute both produced for this pipeline.
+    // with a pooled window: the driver loop (fusedPredict = false)
+    // featurizes the local expanding/EWM transforms itself, and the
+    // lockstep kernel runs them beside the pooled table. The digest pins
+    // the forecasts that running aggregates and the window recompute both
+    // produced for this pipeline.
     val pooled = MLForecast(models, Freq.IntFreq(1), pooledExpandingSpec,
       staticFeatures = Seq("grp")).fit(expandingPanel(aligned = true))
-    assert(!LocalLoop.fusesPredict(pooled.conf, pooled.transformedPanel, pooled.trained,
+    assert(LocalLoop.fusesPredict(pooled.conf, pooled.transformedPanel, pooled.trained,
       Nil, None))
+    val pooledDriver = pooled.copy(conf = pooled.conf.copy(fusedPredict = false))
+    assert(bitsDigest(forecastBits(pooledDriver.predict(6), names)) == "36:df20ee84")
     assert(bitsDigest(forecastBits(pooled.predict(6), names)) == "36:df20ee84")
+  }
+
+  test("pooled predict history keeps the group rows a staggered series reads") {
+    // c ends at ds 3 and a at ds 29 in one group: c's first step pools a's
+    // rows at ds 0..3 with its own (a: 3, 10, 4, 11; c: 0, 7, 1, 8). A
+    // per-series tail of bound + 1 = 9 rows would drop a's.
+    // On the gappy panel c holds the even days 0..20 and a every day
+    // 0..29: c's step at ds 21 pools ds 14..20 (a: 10, 4, 11, 5, 12, 6,
+    // 13; c: 7, 8, 9, 10), which lie before a's own tail, after the
+    // history's cut.
+    import graft.functions._
+    val spec = FeatureSpec(lags = Seq(1), lagTransforms =
+      Map(1 -> Seq(RollingMean(7, pooling = Pooling(groupby = Seq("grp"))))))
+    val echo = FeatureEcho("echo", spec.featureNames.last)
+    val gappy = {
+      val p = expandingPanel(aligned = false)
+      p.copy(df = p.df.filter($"unique_id" =!= "c").unionByName(
+        (0 to 20 by 2).map(t => ("c", t.toLong, ((t * 7) % 13).toDouble, 1.0))
+          .toDF("unique_id", "ds", "y", "grp")))
+    }
+    val recursive = MLForecast(Seq(echo), Freq.IntFreq(1), spec, staticFeatures = Seq("grp"))
+    for ((p, expected) <- Seq(expandingPanel(aligned = false) -> 44.0 / 8, gappy -> 95.0 / 11);
+         (route, conf) <- Seq("kernel" -> recursive,
+           "driver loop" -> recursive.copy(fusedPredict = false),
+           "direct" -> recursive.copy(maxHorizon = Some(2)))) {
+      val c1 = conf.fit(p).predict(1).filter($"unique_id" === "c")
+        .select("echo").collect().map(r => Option(r.get(0))).toSeq
+      assert(c1 == Seq(Some(expected)), s"$route: $c1")
+    }
   }
 
   test("driver loop windows a pooled group over the whole history of an unbounded spec") {

@@ -61,7 +61,7 @@ class RouteRuleSpec extends SparkSpec {
       ("direct horizons", base.copy(maxHorizon = Some(3)), p, true, None, None, None, false),
       ("pooled spec", base.copy(spec = FeatureSpec(lags = Seq(1), lagTransforms =
         Map(1 -> Seq(RollingMean(3, pooling = Pooling(groupby = Seq("grp"))))))),
-        p, true, None, None, None, false),
+        p, true, None, None, None, true),
       ("binary ids", base, binary, true, None, None, None, false),
       ("no-twin transform", base.copy(targetTransforms = Seq(LocalBoxCox())),
         p, true, None, None, None, true),
