@@ -386,8 +386,15 @@ object Bench {
     // end must not overwrite the original's position.
     var sessionT0 = System.nanoTime()
     val qOffsets = scala.collection.mutable.Map[String, Double]()
+    // per-query Janino compiles (generated classes that missed Spark's
+    // codegen cache), read outside the timed region; first timing only,
+    // like qOffsets — a re-time runs on a warm cache
+    val qCompiles = scala.collection.mutable.Map[String, Long]()
+    def compiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def time(name: String, body: => DataFrame): Option[(Double, Double)] = {
-      if (!qOffsets.contains(name))
+      val firstTiming = !qOffsets.contains(name)
+      if (firstTiming)
         qOffsets(name) = (System.nanoTime() - sessionT0) / 1e9
       // untimed GC between queries: object-heavy operators (percentile /
       // collect_list windows) otherwise bill their garbage to whichever
@@ -395,6 +402,7 @@ object Bench {
       // 1.3s in isolation)
       System.gc()
       guard.label = name
+      val k0 = compiles
       val c0 = osBean.getProcessCpuTime
       val t0 = System.nanoTime()
       val out =
@@ -404,6 +412,7 @@ object Bench {
             (osBean.getProcessCpuTime - c0) / 1e9))
         }
         catch { case scala.util.control.NonFatal(_) => None }
+      if (firstTiming) qCompiles(name) = compiles - k0
       // listener callbacks are async; drain (untimed) BEFORE clearing the
       // label or this query's violations would be dropped/mis-attributed
       org.apache.spark.sql.graft.bridge.waitForListeners(spark)
@@ -771,6 +780,8 @@ object Bench {
       .mkString("{", ",", "}")
     val fullCpuQs = cpuResults.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val fullCompileQs = attempts.map(_._1).flatMap(n => qCompiles.get(n).map(n -> _))
+      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     // the COMMITTED flagging band, load-protected: measured values except
     // that load_suspect queries keep their clean retime or the previous
     // committed band entry (the r11 defect: a loaded session's inflated
@@ -841,7 +852,7 @@ object Bench {
         s""""queries_retimed":$retimedJson,""" +
         s""""retime_pairs":$retimePairsJson}"""
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpu_sec":$cpuTotal,"queries":$fullQs,"queries_cpu":$fullCpuQs,"band":$bandQs,"band_cpu":$bandCpuQs,"sf":"$sfName","n_queries":${results.size}$duckdbJson$sessionJson$failedJson$loadJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","cpu_sec":$cpuTotal,"queries":$fullQs,"queries_cpu":$fullCpuQs,"queries_compiles":$fullCompileQs,"band":$bandQs,"band_cpu":$bandCpuQs,"sf":"$sfName","n_queries":${results.size}$duckdbJson$sessionJson$failedJson$loadJson}"""
     // filtered local-iteration runs must not clobber the committed
     // full-suite artifact
     val artifact = if (only.isEmpty) "bench_full.json" else "bench_filtered.json"

@@ -28,6 +28,13 @@ import graft.operators.{FeatureSpec, Featurizer}
   * lockstep loop in [[FittedMLForecast]] remains for the other pooled
   * shapes (partitionBy, timeAgg, unbounded or non-decomposable).
   *
+  * Fit featurizes with the same kernels ([[featurize]], chosen by
+  * [[featurizes]]): one kernel-partitioned pass builds the training frame,
+  * local features from [[FeatureRow]] over each series' history and pooled
+  * ones from a broadcast table the driver evaluates over exact
+  * per-(scope, bucket, date) partials. Specs the rule refuses keep the
+  * window Featurizer.
+  *
   * Exactness contract: every kernel below mirrors its window-transform
   * twin in [[graft.functions.LagTransforms]] — same guards, same FP
   * accumulation order (left-to-right over ascending positions; seasonal
@@ -260,12 +267,38 @@ private[graft] object LocalLoop {
     case _ => None
   }
 
-  /** One pooled bucket's calendar at one step, ascending: per entry the
+  /** One pooled bucket's calendar, ascending: per entry its date and the
     * Featurizer's components `__c`, `__s`, `__ss`, `__mn`, `__mx` (sum, min
     * and max are meaningless where `c` is 0, where Spark's are null).
     */
-  private final class Comps(val c: Array[Long], val s: Array[Double], val ss: Array[Double],
-                            val mn: Array[Double], val mx: Array[Double])
+  private final class Comps(val dates: Array[Any], val c: Array[Long], val s: Array[Double],
+                            val ss: Array[Double], val mn: Array[Double], val mx: Array[Double])
+
+  /** A calendar of exact partials as [[Comps]], each sum rounded once. */
+  private def compsOf(cal: java.util.TreeMap[Any, Comp]): Comps = {
+    val n = cal.size
+    val x = new Comps(new Array[Any](n), new Array[Long](n), new Array[Double](n),
+      new Array[Double](n), new Array[Double](n), new Array[Double](n))
+    var i = 0
+    val it = cal.entrySet.iterator
+    while (it.hasNext) {
+      val e = it.next(); val cp = e.getValue
+      x.dates(i) = e.getKey; x.c(i) = cp.c; x.s(i) = cp.sum; x.ss(i) = cp.sumSq
+      x.mn(i) = cp.mn; x.mx(i) = cp.mx
+      i += 1
+    }
+    x
+  }
+
+  /** Calendar order of the kernels' dates (dates, timestamps, numbers). */
+  private val dateOrdering: Ordering[Any] =
+    (a: Any, b: Any) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+
+  /** Adds partial `comp` for date `ds` to calendar `cal`. */
+  private def mergeAt(cal: java.util.TreeMap[Any, Comp], ds: Any, comp: Comp): Unit = {
+    val cur = cal.get(ds)
+    if (cur == null) cal.put(ds, comp.copy()) else cur.merge(comp)
+  }
 
   /** A compiled pooled transform: its value at calendar position `o`. */
   private type PooledEval = (Comps, Int) => java.lang.Double
@@ -546,25 +579,32 @@ private[graft] object LocalLoop {
   // requires the same per-model plan, so no caller can admit a pipeline the
   // kernel would reject.
 
-  /** Spec/panel half of the rule: the kernels can group, featurize, date
-    * and advance this panel. The rollout, which has no driver twin, asks
-    * only this; the routed calls also honor [[enabled]].
+  /** The kernels can group and featurize this panel: every transform has
+    * a kernel (non-local ones with `pooled`, [[kernelsCompile]]), and every
+    * date feature one on a DateType axis.
     */
-  private def compiles(conf: MLForecast, p: PanelFrame, pooled: Boolean = false): Boolean = {
-    val dsType = p.df.schema(p.timeCol).dataType
+  private def featuresCompile(spec: FeatureSpec, p: PanelFrame, pooled: Boolean): Boolean = {
     // the kernels group sorted rows into series via universal equality on
     // the id value; BinaryType ids surface as fresh Array[Byte] per row
     // (reference equality — every row would become its own series), so
     // binary ids route to the driver loop, whose joins/windows compare
     // binary by value. Pooled bucket keys are compared the same way.
-    val keyCols = p.idCol +: conf.spec.allTransforms.flatMap(_._2.pooling.bucketCols(p.idCol))
+    val keyCols = p.idCol +: spec.allTransforms.flatMap(_._2.pooling.bucketCols(p.idCol))
     keyCols.distinct.forall(c => p.df.columns.contains(c) && p.df.schema(c).dataType != BinaryType) &&
-      kernelsCompile(conf.spec, pooled) &&
-      conf.spec.customDateFeatures.isEmpty &&
-      (conf.spec.dateFeatures.isEmpty ||
-        (dsType == DateType && conf.spec.dateFeatures.forall(dateFeature(_).isDefined))) &&
-      advancer(conf.freq, dsType).isDefined
+      kernelsCompile(spec, pooled) &&
+      spec.customDateFeatures.isEmpty &&
+      (spec.dateFeatures.isEmpty ||
+        (p.df.schema(p.timeCol).dataType == DateType &&
+          spec.dateFeatures.forall(dateFeature(_).isDefined)))
   }
+
+  /** Spec/panel half of the rule: the kernels can group, featurize, date
+    * and advance this panel. The rollout, which has no driver twin, asks
+    * only this; the routed calls also honor [[enabled]].
+    */
+  private def compiles(conf: MLForecast, p: PanelFrame, pooled: Boolean = false): Boolean =
+    featuresCompile(conf.spec, p, pooled) &&
+      advancer(conf.freq, p.df.schema(p.timeCol).dataType).isDefined
 
   /** The user's switch: `fusedPredict = false` keeps every routed call,
     * and interval CV's shared union-of-offsets backtest, on the original
@@ -633,6 +673,29 @@ private[graft] object LocalLoop {
         cvAdmits(conf, refitPlan(conf, t, conf.featureCols ++ dynCols, refit), chain, inputSize)
     } yield (t, chain)
 
+  /** Fit's featurize route: true = [[featurize]] builds the training
+    * features (fit, warmup, load and update ask it), false = the window
+    * Featurizer. It admits a bounded spec whose local transforms have
+    * kernels and whose pooled ones are [[lockstepPoolable]]; it fails
+    * closed to the Featurizer on `fusedPredict = false`, unbounded
+    * transforms, `partitionBy`, `timeAgg`, non-decomposable pooled
+    * transforms, pooling at a sub-minute frequency (the Featurizer's loud
+    * refusal), repeated feature names or features already on the panel
+    * (the Featurizer's checks and keep-as-is contract), and a non-numeric
+    * target or exog. [[featurize]] itself falls back when its pooled table
+    * is too large.
+    */
+  def featurizes(conf: MLForecast, p: PanelFrame, dynCols: Seq[String]): Boolean = {
+    val spec = conf.spec
+    val names = spec.featureNames
+    val pooled = spec.allTransforms.exists(!_._2.pooling.isLocal)
+    enabled(conf) && spec.updateSamplesBound.isDefined &&
+      featuresCompile(spec, p, pooled = true) &&
+      !(pooled && Featurizer.rowScaledCalendar(p.freq)) &&
+      names.distinct.size == names.size && !names.exists(p.df.columns.contains) &&
+      (p.targetCol +: dynCols).forall(c => p.df.schema(c).dataType.isInstanceOf[NumericType])
+  }
+
   /** In-sample rollout precondition: the kernels compile and every model
     * serves from its frozen scorer (the rollout never refits).
     */
@@ -641,8 +704,11 @@ private[graft] object LocalLoop {
     compiles(conf, p) &&
       refitPlan(conf, trained, conf.featureCols ++ dynCols, refit = false).forall(_.contains(false))
 
-  /** The kernels' missing convention: NaN for a null double. */
-  private def doubleAt(r: Row, i: Int): Double = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
+  /** The kernels' missing convention: NaN for a null. Any numeric column
+    * reads as its cast to double does.
+    */
+  private def doubleAt(r: Row, i: Int): Double =
+    if (r.isNullAt(i)) Double.NaN else r.get(i).asInstanceOf[Number].doubleValue
 
   /** The sorted kernel input of one partition, one id's contiguous run of
     * rows at a time.
@@ -675,22 +741,26 @@ private[graft] object LocalLoop {
 
     /** Features of the position after `view`'s end, dated `ds`, with that
       * position's exog values `dyn` (null = all missing). With `dropNa`,
-      * null when the row fails MLForecast.dropNa: a window feature or an
-      * exog value is missing.
+      * null when the row fails MLForecast.dropNa: a window feature, a date
+      * feature (null date) or an exog value is missing. `nulls`, when
+      * given, records which window features are SQL NULL (a NaN there is
+      * a value).
       */
     def apply(view: View, ds: Any, statics: Array[Double], dyn: Array[Double],
-              dropNa: Boolean = false): Array[Double] = {
+              dropNa: Boolean = false, nulls: Array[Boolean] = null): Array[Double] = {
       val arr = new Array[Double](size)
       var k = 0
       while (k < windowEvals.length) {
         val x = windowEvals(k)(view)
+        if (nulls != null) nulls(k) = x == null
         if (x == null) { if (dropNa) return null; arr(k) = Double.NaN }
         else arr(k) = x.doubleValue
         k += 1
       }
       if (dateEvals.nonEmpty) {
-        val ld = ds.asInstanceOf[java.sql.Date].toLocalDate
-        dateEvals.foreach { ev => arr(k) = ev(ld).toDouble; k += 1 }
+        if (ds == null && dropNa) return null
+        val ld = if (ds == null) null else ds.asInstanceOf[java.sql.Date].toLocalDate
+        dateEvals.foreach { ev => arr(k) = if (ld == null) Double.NaN else ev(ld).toDouble; k += 1 }
       }
       statics.foreach { s => arr(k) = s; k += 1 }
       var j = 0
@@ -721,6 +791,29 @@ private[graft] object LocalLoop {
       if (l.iDyn.isEmpty) null else rows.map(r => l.iDyn.map(doubleAt(r, _))).toArray
     /** Row i's exog values; null (FeatureRow reads none) without exog. */
     def exog(i: Int): Array[Double] = if (exogRows == null) null else exogRows(i)
+  }
+
+  /** The per-row training-feature loop of fit's kernel ([[featurize]]) and
+    * runCV's in-kernel refit: series `s` at positions `from to to`, each
+    * position's features read from the history between `from` and it.
+    * `at(i)` runs before position i is featurized (pooled slots). Rows go
+    * to `emit(i, features)`; with `dropNa` only those MLForecast.dropNa
+    * keeps: the label, every window feature and every exog value present.
+    */
+  private def trainingRows(features: FeatureRow, s: Series, from: Int, to: Int,
+                           dropNa: Boolean, nulls: Array[Boolean] = null)(at: Int => Unit)(
+      emit: (Int, Array[Double]) => Unit): Unit = {
+    val noApp = new ArrayBuffer[Double](0)
+    var i = from
+    while (i <= to) {
+      if (!dropNa || !s.hist(i).isNaN) {
+        at(i)
+        val arr = features(new View(s.hist, from, i, noApp), s.ds(i), s.statics, s.exog(i),
+          dropNa, nulls)
+        if (arr != null) emit(i, arr)
+      }
+      i += 1
+    }
   }
 
   /** The CV and rollout kernels' input: every panel row as (id, ds, __y,
@@ -937,21 +1030,101 @@ private[graft] object LocalLoop {
       exogByDs: Map[Any, Array[Double]], keys: Array[Seq[Any]],
       app: Array[Array[Double]], preds: Array[Array[java.lang.Double]])
 
-  /** A bucket key as Spark groups it: -0.0 is 0.0 (NaN is already null). */
+  /** A bucket key as the Featurizer groups it: NaN is null
+    * (normalizedKey), -0.0 is 0.0.
+    */
   private def bucketValue(v: Any): Any = v match {
+    case d: java.lang.Double if d.isNaN => null
+    case f: java.lang.Float if f.isNaN => null
     case d: java.lang.Double if d.doubleValue == 0.0 => java.lang.Double.valueOf(0.0)
     case f: java.lang.Float if f.floatValue == 0.0f => java.lang.Float.valueOf(0.0f)
     case other => other
   }
+
+  /** Row `r`'s bucket key of pooled scope `si` (`iKeys(si)` its columns). */
+  private def bucketKey(r: Row, iKeys: Array[Array[Int]], si: Int): Seq[Any] =
+    iKeys(si).toSeq.map(i => bucketValue(r.get(i)))
+
+  /** The rows of one series' ascending history that
+    * [[MLForecast.predictHistory]] keeps: its last `bound + 1` rows, and
+    * every row on or after its scope's cut (per scope, the key absent from
+    * `cuts` keeps every row). Without a bound it keeps everything.
+    */
+  private final class HistoryCut(bound: Option[Int], cuts: Map[(Int, Seq[Any]), Any],
+                                 iDs: Int, iKeys: Array[Array[Int]]) extends Serializable {
+    def apply(hist: ArrayBuffer[Row]): ArrayBuffer[Row] = bound match {
+      case None => hist
+      case Some(b) =>
+        val n = hist.length
+        hist.zipWithIndex.collect { case (r, i) if n - i <= b + 1 || onOrAfterCut(r) => r }
+    }
+
+    private def onOrAfterCut(r: Row): Boolean = {
+      val ds = r.get(iDs)
+      iKeys.indices.exists { si =>
+        cuts.get((si, bucketKey(r, iKeys, si))) match {
+          case None => true
+          case Some(c) => ds != null && dateOrdering.gteq(ds, c)
+        }
+      }
+    }
+  }
+
+  /** [[MLForecast.predictHistory]]'s cut on the kernel input `rows`
+    * (sorted, each series a contiguous ascending run): one job returns,
+    * per (scope, bucket key) and task, the earliest series end and the
+    * dates of the series' last `bound + 1` rows; the cut is the date
+    * `bound` entries before the earliest end among them, none when there
+    * are not that many (scopeCutoffs' rule, one key per NaN or null key).
+    */
+  private def historyCut(rows: org.apache.spark.rdd.RDD[Row], l: PredictLayout,
+                         bound: Option[Int]): HistoryCut = {
+    val cuts = bound.fold(Map.empty[(Int, Seq[Any]), Any]) { b =>
+      type Tails = scala.collection.mutable.HashMap[(Int, Seq[Any]), (Any, Set[Any])]
+      val parts = rows.sparkContext.runJob(rows, (it: Iterator[Row]) => {
+        val tails: Tails = scala.collection.mutable.HashMap.empty
+        seriesRuns(it, l.iId).foreach { run =>
+          val hist = run.filterNot(_.getBoolean(l.iFut))
+          val n = hist.length
+          for (i <- math.max(0, n - b - 1) until n; si <- l.iKeys.indices) {
+            val ds = hist(i).get(l.iDs)
+            val k = (si, bucketKey(hist(i), l.iKeys, si))
+            val (end, dates) = tails.getOrElse(k, (null, Set.empty[Any]))
+            val last = if (i == n - 1) ds else null
+            tails(k) = (minDate(end, last), if (ds == null) dates else dates + ds)
+          }
+        }
+        tails
+      })
+      val merged: Tails = scala.collection.mutable.HashMap.empty
+      parts.foreach(_.foreach { case (k, (end, dates)) =>
+        val (e0, d0) = merged.getOrElse(k, (null, Set.empty[Any]))
+        merged(k) = (minDate(e0, end), d0 ++ dates)
+      })
+      merged.iterator.flatMap { case (k, (end, dates)) =>
+        val desc = if (end == null) Nil
+          else dates.toSeq.filter(dateOrdering.lteq(_, end)).sorted(dateOrdering.reverse)
+        desc.lift(b).map(k -> _)
+      }.toMap
+    }
+    new HistoryCut(bound, cuts, l.iDs, l.iKeys)
+  }
+
+  /** The earlier of two dates, null being none. */
+  private def minDate(a: Any, b: Any): Any =
+    if (a == null) b else if (b == null || dateOrdering.lteq(a, b)) a else b
 
   /** Step-synchronous fused predict for specs with pooled transforms
     * ([[lockstepPoolable]]), one Spark job per step. The per-series
     * history stays in executor partitions, local-checkpointed step by step;
     * the driver holds only per-(model, bucket, date) components.
     *
-    *   - Job 0 materializes the kernel-partitioned history
-    *     ([[MLForecast.predictHistory]]'s rows) and returns its exact
-    *     per-(bucket, date) partials and each bucket's series end dates.
+    *   - A first job over the kernel-partitioned panel finds each scope's
+    *     history cut ([[historyCut]]); the series then keep
+    *     [[MLForecast.predictHistory]]'s rows, without a window plan.
+    *   - Job 0 materializes the kept history from the same shuffle and
+    *     returns its exact per-(bucket, date) partials and each bucket's
+    *     series end dates.
     *   - Before step k the driver adds the step's placeholder dates
     *     (`advance(end, k)` per end date) to each bucket's calendar, so
     *     ordinals are the dense rank `Ordinals.withOrdinal` assigns, and
@@ -1001,17 +1174,22 @@ private[graft] object LocalLoop {
     val nPooled = pooled.size
     val nScopes = scopes.size
 
-    val (sorted, layout) = predictInput(p, MLForecast.predictHistory(p, spec), statics,
-      dynCols, levelModels, xDf, scopes)
+    // the whole panel goes in; each series keeps predictHistory's rows,
+    // cut in the kernel ([[historyCut]])
+    val (sorted, layout) = predictInput(p, p.df, statics, dynCols, levelModels, xDf, scopes)
     val outSchema = StructType(
       StructField(idCol, sorted.schema(layout.iId).dataType, nullable = true) +:
         StructField(timeCol, advancedDsType(p), nullable = true) +:
         names.map(n => StructField(n, DoubleType, nullable = true)))
+    val rows = sorted.rdd
+    val cut = sc.broadcast(historyCut(rows, layout, spec.updateSamplesBound))
 
-    var state: org.apache.spark.rdd.RDD[LockstepSeries] = sorted.rdd.mapPartitions { iter =>
+    var state: org.apache.spark.rdd.RDD[LockstepSeries] = rows.mapPartitions { iter =>
       val l = layout
+      val keep = cut.value
       seriesRuns(iter, l.iId).flatMap { run =>
-        val (futRows, histRows) = run.partition(_.getBoolean(l.iFut))
+        val (futRows, allRows) = run.partition(_.getBoolean(l.iFut))
+        val histRows = keep(allRows)
         if (histRows.isEmpty) Iterator.empty // exog-only ids emit nothing
         else {
           val first = histRows.head
@@ -1025,7 +1203,7 @@ private[graft] object LocalLoop {
               if (i < 0 || first.isNullAt(i)) null else java.lang.Double.valueOf(first.getDouble(i))
             },
             exogByDs = futRows.iterator.map(r => r.get(l.iDs) -> l.iDyn.map(doubleAt(r, _))).toMap,
-            keys = l.iKeys.map(ks => ks.toSeq.map(i => bucketValue(first.get(i)))),
+            keys = l.iKeys.indices.map(bucketKey(first, l.iKeys, _)).toArray,
             app = Array.fill(nModels)(Array.emptyDoubleArray),
             preds = Array.fill(nModels)(Array.empty[java.lang.Double])))
         }
@@ -1054,20 +1232,15 @@ private[graft] object LocalLoop {
       (parts, ends)
     })
     // per (model, scope, bucket): the calendar, date -> components
-    val ordering: Ordering[Any] = (a: Any, b: Any) => a.asInstanceOf[Comparable[Any]].compareTo(b)
     val calendars = scala.collection.mutable.HashMap.empty[(Int, Int, Seq[Any]),
       java.util.TreeMap[Any, Comp]]
     def calendar(mi: Int, si: Int, key: Seq[Any]) =
-      calendars.getOrElseUpdate((mi, si, key), new java.util.TreeMap[Any, Comp](ordering))
+      calendars.getOrElseUpdate((mi, si, key), new java.util.TreeMap[Any, Comp](dateOrdering))
     val bucketEnds = scala.collection.mutable.HashMap.empty[(Int, Seq[Any]), Set[Any]]
     history.foreach { case (parts, ends) =>
       ends.foreach { case (b, es) => bucketEnds(b) = bucketEnds.getOrElse(b, Set.empty[Any]) ++ es }
       parts.foreach { case ((si, key, ds), comp) =>
-        (0 until nModels).foreach { mi =>
-          val cal = calendar(mi, si, key)
-          val cur = cal.get(ds)
-          if (cur == null) cal.put(ds, comp.copy()) else cur.merge(comp)
-        }
+        (0 until nModels).foreach(mi => mergeAt(calendar(mi, si, key), ds, comp))
       }
     }
 
@@ -1079,19 +1252,10 @@ private[graft] object LocalLoop {
         val cal = calendar(mi, si, key)
         val placeholders = es.map(advance(_, step))
         placeholders.foreach(d => if (!cal.containsKey(d)) cal.put(d, new Comp))
-        val n = cal.size
-        val at = scala.collection.mutable.HashMap.empty[Any, Int] // placeholder positions
-        val comps = new Comps(new Array[Long](n), new Array[Double](n), new Array[Double](n),
-          new Array[Double](n), new Array[Double](n))
-        var i = 0
-        val it = cal.entrySet.iterator
-        while (it.hasNext) {
-          val e = it.next(); val cp = e.getValue
-          if (placeholders.contains(e.getKey)) at(e.getKey) = i
-          comps.c(i) = cp.c; comps.s(i) = cp.sum; comps.ss(i) = cp.sumSq
-          comps.mn(i) = cp.mn; comps.mx(i) = cp.mx
-          i += 1
-        }
+        val comps = compsOf(cal)
+        // placeholder positions
+        val at = comps.dates.indices.filter(i => placeholders.contains(comps.dates(i)))
+          .map(i => comps.dates(i) -> i).toMap
         placeholders.foreach { d =>
           val o = at(d)
           val vals = new Array[java.lang.Double](nPooled)
@@ -1172,6 +1336,165 @@ private[graft] object LocalLoop {
       }
     }
     spark.createDataFrame(out, outSchema)
+  }
+
+  /** Most (scope, bucket, date) entries [[featurize]] gathers on the
+    * driver; a larger pooled table keeps the window Featurizer.
+    */
+  private val MaxPooledEntries = 1 << 18
+
+  /** (scope, bucket key, date) → the pooled features' values there, indexed
+    * like the spec's non-local transforms (other scopes' slots unused).
+    */
+  private type PooledTable = java.util.HashMap[(Int, Seq[Any], Any), Array[java.lang.Double]]
+
+  /** Every transform of `pooled` (scope index `scopeOf(j)`) at every
+    * (scope, bucket, date) of panel `p`, whose bucket keys per scope sit
+    * at `iKeys`. One job over the panel's internal rows (its scan plan
+    * alone, no deserializer to generate) returns each task's exact
+    * per-(scope, bucket, date) [[Comp]] partials; the driver merges them
+    * into calendars and evaluates each transform at every position with
+    * [[compilePooled]], the Featurizer's RANGE frame over the same dense
+    * calendar. None when a date is null (the Featurizer ranks it as a
+    * calendar entry) or the calendars pass [[MaxPooledEntries]]; a task
+    * stops at that size, so the driver holds at most one capped map per
+    * task and never per-row data.
+    */
+  private def pooledTable(p: PanelFrame, l: SeriesLayout,
+                          iKeys: Array[Array[Int]], pooled: Seq[(Int, LagTransform)],
+                          scopeOf: Array[Int]): Option[PooledTable] = {
+    val evals = pooled.map { case (lag, t) => compilePooled(lag, t).get }.toArray
+    val cap = MaxPooledEntries
+    // the values a Row of the panel holds, read off its internal rows
+    val schema = p.df.schema
+    val read = schema.fields.map(f => (f.dataType,
+      org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(f.dataType)))
+    def at(r: org.apache.spark.sql.catalyst.InternalRow, i: Int): Any =
+      if (r.isNullAt(i)) null else read(i)._2(r.get(i, read(i)._1))
+    val rows = p.df.queryExecution.toRdd
+    val parts = rows.sparkContext.runJob(rows,
+      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+        val m = scala.collection.mutable.HashMap.empty[(Int, Seq[Any], Any), Comp]
+        var ok = true
+        while (ok && it.hasNext) {
+          val r = it.next()
+          val ds = at(r, l.iDs)
+          ok = ds != null
+          val y = at(r, l.iY)
+          var si = 0
+          while (ok && si < iKeys.length) {
+            val key = iKeys(si).toSeq.map(i => bucketValue(at(r, i)))
+            m.getOrElseUpdate((si, key, ds), new Comp)
+              .add(if (y == null) Double.NaN else y.asInstanceOf[Number].doubleValue)
+            si += 1
+          }
+          ok = ok && m.size <= cap
+        }
+        if (ok) m else null
+      })
+    if (parts.contains(null)) return None
+    val cals = scala.collection.mutable.HashMap.empty[(Int, Seq[Any]), java.util.TreeMap[Any, Comp]]
+    parts.foreach(_.foreach { case ((si, key, ds), comp) =>
+      mergeAt(cals.getOrElseUpdate((si, key), new java.util.TreeMap[Any, Comp](dateOrdering)),
+        ds, comp)
+    })
+    if (cals.valuesIterator.map(_.size.toLong).sum > cap) return None
+    val table = new PooledTable()
+    for (((si, key), cal) <- cals) {
+      val comps = compsOf(cal)
+      var o = 0
+      while (o < comps.dates.length) {
+        val vals = new Array[java.lang.Double](pooled.size)
+        var j = 0
+        while (j < vals.length) { if (scopeOf(j) == si) vals(j) = evals(j)(comps, o); j += 1 }
+        table.put((si, key, comps.dates(o)), vals)
+        o += 1
+      }
+    }
+    Some(table)
+  }
+
+  /** Fit's featurize kernel, for specs [[featurizes]] admits: the frame
+    * Featurizer.addFeatures builds (every panel column, then each feature
+    * in featureNames order, [[Featurizer.outputColumns]]) from one
+    * kernel-partitioned input, as `frames(false)`; `frames(true)` keeps
+    * only the rows MLForecast.dropNa keeps ([[trainingRows]]). Local
+    * features come from [[FeatureRow]]'s kernels over each series'
+    * history, bit-identical to the window route. Pooled ones read a
+    * broadcast [[pooledTable]], gathered by one narrow job over the panel
+    * before the frames are built (they stay lazy plans). Its sums are
+    * exact and rounded once, so they do not depend on partitioning, and
+    * they equal the Featurizer's arrival-order sums whenever those are
+    * exact (integer targets) and to the last bits otherwise. None = the
+    * pooled table declined; the caller runs the Featurizer.
+    */
+  def featurize(p: PanelFrame, spec: FeatureSpec, dynCols: Seq[String])
+      : Option[Boolean => DataFrame] = {
+    import p.{idCol, timeCol}
+    val pooled = spec.allTransforms.filterNot(_._2.pooling.isLocal)
+    val scopes = pooled.map(_._2.pooling.bucketCols(idCol)).distinct
+    val scopeOf = pooled.map(t => scopes.indexOf(t._2.pooling.bucketCols(idCol))).toArray
+    val nPooled = pooled.size
+    // the panel's own rows: doubleAt reads the target and exog as their
+    // casts to double do, bucketValue reads keys as normalizedKey does
+    val sc = p.df.schema
+    val nIn = sc.size
+    val layout = SeriesLayout(sc.fieldIndex(idCol), sc.fieldIndex(timeCol),
+      sc.fieldIndex(p.targetCol), Array.emptyIntArray, dynCols.map(sc.fieldIndex).toArray)
+    val iKeys = scopes.map(_.map(sc.fieldIndex).toArray).toArray
+    // a pooled spec's table: one narrow job over the panel rows
+    val bc =
+      if (pooled.isEmpty) null
+      else pooledTable(p, layout, iKeys, pooled, scopeOf) match {
+        case Some(table) => p.df.sparkSession.sparkContext.broadcast(table)
+        case None => return None
+      }
+    val nWin = spec.allTransforms.size
+    val names = spec.featureNames
+    val outSchema = StructType(sc.fields ++ names.zipWithIndex.map { case (n, k) =>
+      StructField(n, if (k < nWin) DoubleType else IntegerType, nullable = true) })
+    val pass = (dropNa: Boolean) => (iter: Iterator[Row]) => {
+      val slot = new Array[java.lang.Double](nPooled)
+      val features = new FeatureRow(spec, 0, dynCols.size, names.size + dynCols.size,
+        j => (_: View) => slot(j))
+      val nulls = new Array[Boolean](nWin)
+      val tab = if (bc == null) null else bc.value
+      seriesRuns(iter, layout.iId).flatMap { rows =>
+        val s = new Series(rows, layout)
+        val out = new ArrayBuffer[Row](s.n)
+        trainingRows(features, s, 0, s.n - 1, dropNa, nulls) { i =>
+          // the row's own bucket per scope, as the Featurizer joins it
+          var si = 0
+          while (tab != null && si < iKeys.length) {
+            val key = bucketKey(rows(i), iKeys, si)
+            val vals = tab.get((si, key, s.ds(i)))
+            var j = 0
+            while (j < nPooled) {
+              if (scopeOf(j) == si) slot(j) = if (vals == null) null else vals(j)
+              j += 1
+            }
+            si += 1
+          }
+        } { (i, arr) =>
+          val r = rows(i)
+          val vals = new Array[Any](nIn + names.size)
+          var c = 0
+          while (c < nIn) { vals(c) = r.get(c); c += 1 }
+          var k = 0
+          while (k < names.size) {
+            vals(nIn + k) =
+              if (k < nWin) { if (nulls(k)) null else java.lang.Double.valueOf(arr(k)) }
+              else if (s.ds(i) == null) null
+              else java.lang.Integer.valueOf(arr(k).toInt)
+            k += 1
+          }
+          out += new org.apache.spark.sql.catalyst.expressions.GenericRow(vals)
+        }
+        out.iterator
+      }
+    }
+    val sorted = kernelPartitioned(p.df, p)
+    Some((dropNa: Boolean) => sorted.mapPartitions(pass(dropNa))(Encoders.row(outSchema)))
   }
 
   /** Fused sliding-window cross validation: every (window × step × model) for
@@ -1261,7 +1584,6 @@ private[graft] object LocalLoop {
         // schedule and frozen in between — refitAt(0) is always true, so
         // every local entry is fit before its first use
         val curScorers = scorers.clone()
-        val noApp = new ArrayBuffer[Double](0)
 
         val outRows = new ArrayBuffer[Row]()
         var wi = 0
@@ -1281,14 +1603,8 @@ private[graft] object LocalLoop {
             val sliceStart = inputSize.fold(0)(sz => math.max(0, originIdx + 1 - sz))
             val featBuf = new ArrayBuffer[Array[Double]]()
             val labBuf = new ArrayBuffer[Double]()
-            var pIdx = sliceStart
-            while (pIdx <= originIdx) {
-              if (!s.hist(pIdx).isNaN) {
-                val arr = features(new View(s.hist, sliceStart, pIdx, noApp), s.ds(pIdx),
-                  s.statics, s.exog(pIdx), dropNa = true)
-                if (arr != null) { featBuf += arr; labBuf += s.hist(pIdx) }
-              }
-              pIdx += 1
+            trainingRows(features, s, sliceStart, originIdx, dropNa = true)(_ => ()) { (i, arr) =>
+              featBuf += arr; labBuf += s.hist(i)
             }
             val fRows = featBuf.toArray
             val lRows = labBuf.toArray

@@ -31,6 +31,12 @@ import graft.operators.{FeatureSpec, Featurizer}
   * every series advances in lockstep — the cross-series limitation of the
   * reference's own distributed mode (distributed/forecast.py:128-146)
   * disappears.
+  *
+  * Training features follow a route rule of their own
+  * ([[LocalLoop.featurizes]], asked by fit, warmup, load and update):
+  * bounded specs the kernels serve are featurized in one kernel pass
+  * ([[LocalLoop.featurize]]), the rest by the window Featurizer; both emit
+  * the same columns in featureNames order.
   */
 final case class MLForecast(
     models: Seq[ForecastModel],
@@ -72,8 +78,9 @@ final case class MLForecast(
       throw new IllegalArgumentException(
         s"pooled transform ${spec.nameOf(lag, t)} groups by '$c', which is neither " +
           s"the id column nor in staticFeatures; add '$c' to staticFeatures")
-    val (src, p, fitted, featurized, train) = prepare(panel)
+    val (src, p, fitted, frames) = prepare(panel)
     val dynCols = dynamicExogCols(panel)
+    val featurized = () => frames()._1
     if (directHorizons.isEmpty) {
       require(horizonFeatures.isEmpty && horizonFeatureTemplates.isEmpty,
         "horizon features are only supported in direct mode (maxHorizon or horizons)")
@@ -84,7 +91,7 @@ final case class MLForecast(
       // job chains — submit concurrently so they overlap on free executors.
       import scala.concurrent.Await
       import scala.concurrent.duration.Duration
-      val trainC = train.cache()
+      val trainC = frames()._2.cache()
       val trained =
         try models.map { m =>
           m.name -> Par.future(panel.df.sparkSession) {
@@ -100,7 +107,7 @@ final case class MLForecast(
       // lookup from the PINNED src: the raw panel's lineage would re-run
       // the upstream plan once per (horizon, model) train-frame join
       val exog = exogLookup(src, dynCols)
-      val feat = featurized.cache()
+      val feat = featurized().cache()
       // per-horizon fits are independent job chains over the shared cached
       // frame — submit them concurrently so they overlap on free executors
       import scala.concurrent.Await
@@ -159,12 +166,12 @@ final case class MLForecast(
     */
   def expandedTarget(panel: PanelFrame): DataFrame = {
     require(directHorizons.nonEmpty, "expandedTarget requires maxHorizon or horizons")
-    val (src, p, _, featurized, _) = prepare(panel)
+    val (src, p, _, frames) = prepare(panel)
     val dynCols = dynamicExogCols(panel)
     val routed = resolveHorizonFeatures(dynCols)
     val exog = exogLookup(src, dynCols)
     directHorizons.map { h =>
-      directTrainFrame(featurized, p, h, dynCols, exog, exogForHorizon(h, dynCols, routed))
+      directTrainFrame(frames()._1, p, h, dynCols, exog, exogForHorizon(h, dynCols, routed))
         .withColumn("horizon", lit(h + 1))
     }.reduce(_ unionByName _)
   }
@@ -256,8 +263,8 @@ final case class MLForecast(
     */
   def warmup(panel: PanelFrame, trained: Seq[(String, TrainedModel)],
              directTrained: Seq[(String, Map[Int, TrainedModel])] = Nil): FittedMLForecast = {
-    val (src, p, fitted, featurized, _) = prepare(panel, pinLazy = true)
-    FittedMLForecast(this, src, p, fitted, trained, featurized, directTrained)
+    val (src, p, fitted, frames) = prepare(panel, pinLazy = true)
+    FittedMLForecast(this, src, p, fitted, trained, () => frames()._1, directTrained)
   }
 
   /** warmup with persisted frozen transform state (save/load path):
@@ -268,8 +275,8 @@ final case class MLForecast(
                                        trained: Seq[(String, TrainedModel)],
                                        directTrained: Seq[(String, Map[Int, TrainedModel])],
                                        states: Seq[Seq[DataFrame]]): FittedMLForecast = {
-    val (src, p, fitted, featurized, _) = prepare(panel, states, pinLazy = true)
-    FittedMLForecast(this, src, p, fitted, trained, featurized, directTrained)
+    val (src, p, fitted, frames) = prepare(panel, states, pinLazy = true)
+    FittedMLForecast(this, src, p, fitted, trained, () => frames()._1, directTrained)
   }
 
   private def prepare(panel: PanelFrame, restoreStates: Seq[Seq[DataFrame]] = Nil,
@@ -298,10 +305,29 @@ final case class MLForecast(
       TransformState.fitStage(t, restoreStates.lift(i).getOrElse(Nil))
     })
     val p = MLForecast.workingPanel(src, fitted)
-    val featurized = Featurizer.addFeatures(p, spec)
-    val train = MLForecast.dropNa(featurized,
-      spec.featureNames ++ dynamicExogCols(panel) :+ p.targetCol)
-    (src, p, fitted, featurized, train)
+    // built on first use: fit trains on them at once, warmup and load
+    // never read them unless asked
+    lazy val frames = trainingFrames(p, dynamicExogCols(panel))
+    (src, p, fitted, () => frames)
+  }
+
+  /** The training features of the working panel `p` and the rows dropNa
+    * keeps (the label, every feature and every exog value present). The
+    * featurize route rule ([[LocalLoop.featurizes]]) sends an admitted spec
+    * through [[LocalLoop.featurize]]'s kernel pass; every other spec, and
+    * an admitted one whose pooled table is too large, takes the window
+    * Featurizer and a dropNa filter.
+    */
+  private[forecast] def trainingFrames(p: PanelFrame,
+                                       dynCols: Seq[String]): (DataFrame, DataFrame) = {
+    val kernel =
+      if (LocalLoop.featurizes(this, p, dynCols)) LocalLoop.featurize(p, spec, dynCols) else None
+    kernel match {
+      case Some(frames) => (frames(false), frames(true))
+      case None =>
+        val featurized = Featurizer.addFeatures(p, spec)
+        (featurized, MLForecast.dropNa(featurized, spec.featureNames ++ dynCols :+ p.targetCol))
+    }
   }
 
   /** Convenience: preprocess only (the reference's `preprocess`). */
@@ -361,6 +387,8 @@ object MLForecast {
     * calendar entries before the earliest series end ([[scopeCutoffs]]):
     * the calendar from the cut on is whole, so the ordinal distances the
     * steps' windows read are unchanged. Unbounded specs keep everything.
+    * The driver loop reads this frame; the lockstep kernel applies the same
+    * rule to its own input (`LocalLoop.historyCut`).
     */
   private[forecast] def predictHistory(p: PanelFrame, spec: FeatureSpec): DataFrame =
     spec.updateSamplesBound match {
@@ -433,9 +461,14 @@ final case class FittedMLForecast(
     transformedPanel: PanelFrame,
     fittedTransforms: Seq[FittedTargetTransform],
     trained: Seq[(String, TrainedModel)],
-    featurized: DataFrame,
+    features: () => DataFrame,
     directTrained: Seq[(String, Map[Int, TrainedModel])] = Nil,
 ) {
+  /** The training-feature frame of the transformed panel, built on first
+    * use ([[MLForecast.trainingFrames]]).
+    */
+  lazy val featurized: DataFrame = features()
+
   // fit() populates exactly one of the two model stores; a warmup caller
   // passing both would make predict() dispatch to the DIRECT models while
   // interval/level assembly derives its column names from `trained` —
@@ -1012,8 +1045,8 @@ final case class FittedMLForecast(
     // mirror prepare(): without a pin every later predict/CV replays the
     // union + transform updates, compounding across chained update() calls
     val cur = MLForecast.workingPanel(appended, newFitted)
-    val featurized = Featurizer.addFeatures(cur, conf.spec)
-    FittedMLForecast(conf, appended, cur, newFitted, trained, featurized, directTrained)
+    FittedMLForecast(conf, appended, cur, newFitted, trained,
+      () => conf.trainingFrames(cur, dynCols)._1, directTrained)
   }
 
   /** Sliding-window cross validation (reference forecast.py:1859-2077).

@@ -66,6 +66,14 @@ final case class FeatureSpec(
   * group shares one ordinal computation, one collapse aggregation, and one
   * WindowExec pass — the Spark-native equivalent of the reference's shared
   * `_ts_aggs` per-(bucket, timestamp) aggregate cache (pooled.py:183-218).
+  *
+  * This is the window route of featurization. `MLForecast` fit, warmup and
+  * update take the kernel route instead when `LocalLoop.featurizes` admits
+  * the spec; both routes emit the columns in [[outputColumns]] order. The
+  * pooled component sums here are Spark `sum`s, rounded in shuffle arrival
+  * order, so on float targets pooled features can move in the last bits
+  * with `spark.sql.shuffle.partitions`; the kernel route sums exactly and
+  * rounds once.
   */
 object Featurizer {
 
@@ -82,6 +90,22 @@ object Featurizer {
         when(isnan(col(s"`$c`")), lit(null)).otherwise(col(s"`$c`"))
       case _ => col(s"`$c`")
     }
+
+  /** Output column order of both featurize routes: the input's columns,
+    * then each feature the input lacks in featureNames order (the pinned
+    * features_order_).
+    */
+  private[graft] def outputColumns(inputCols: Seq[String], spec: FeatureSpec): Seq[String] =
+    inputCols ++ spec.featureNames.distinct.filterNot(inputCols.toSet)
+
+  /** Frequencies whose pooled calendar scales with the row count: one
+    * ordinal per distinct timestamp below a minute.
+    */
+  private[graft] def rowScaledCalendar(freq: Freq): Boolean = freq match {
+    case _: Freq.MilliFreq            => true
+    case Freq.SecondFreq(s) if s < 60 => true
+    case _                            => false
+  }
 
   def addFeatures(p: PanelFrame, spec: FeatureSpec): DataFrame = {
     // Two DIFFERENT computations colliding on one output name would
@@ -155,8 +179,9 @@ object Featurizer {
     out = DateFeatures.add(out, p.ds,
       spec.dateFeatures.filterNot(existing.contains))
     val customMissing = spec.customDateFeatures.filterNot(f => existing.contains(f._1))
-    if (customMissing.isEmpty) out
-    else out.withColumns(customMissing.map { case (n, f) => n -> f(p.ds) }.toMap)
+    if (customMissing.nonEmpty)
+      out = out.withColumns(customMissing.map { case (n, f) => n -> f(p.ds) }.toMap)
+    out.select(outputColumns(p.df.columns.toSeq, spec).map(c => col(s"`$c`")): _*)
   }
 
   private def applyStages(df: DataFrame, v: Column, ctx: WindowCtx,
@@ -312,11 +337,6 @@ object Featurizer {
     // below are sized for calendars, not corpora. Refuse before launching a
     // doomed plan; partition_by buckets window per-series and stay
     // distributed at any frequency.
-    val rowScaledCalendar = p.freq match {
-      case _: Freq.MilliFreq          => true
-      case Freq.SecondFreq(s) if s < 60 => true // sub-minute: same blow-up
-      case _                          => false
-    }
     // The refusal is keyed on FREQUENCY, not on the calendar's actual row
     // count (counting distinct timestamps would add an eager job to a
     // deliberately lazy declaration). Small sub-minute panels are
@@ -325,7 +345,7 @@ object Featurizer {
     // bounded.
     val allowRowScaled = p.df.sparkSession.conf
       .get("spark.graft.allowRowScaledPooledCalendar", "false").toBoolean
-    if ((pooling.global || pooling.groupby.nonEmpty) && rowScaledCalendar &&
+    if ((pooling.global || pooling.groupby.nonEmpty) && rowScaledCalendar(p.freq) &&
         !allowRowScaled)
       throw new IllegalArgumentException(
         s"pooled transform(s) ${tfms.map { case (l, t) => t.name(l) }.mkString(", ")} " +

@@ -62,6 +62,10 @@ class ActionBudgetSpec extends SparkSpec {
     "automl_best_config" -> 3,
     "automl_halving_best" -> 4)
 
+  // measured: the panel pin, the pooled table's partials job, and the
+  // linear regression's passes over the cached kernel training frame
+  private val PooledFitJobs = 6
+
   private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
@@ -94,7 +98,26 @@ class ActionBudgetSpec extends SparkSpec {
       s"driver-loop action budgets exceeded:\n${over.mkString("\n")}")
   }
 
-  test("a pooled lockstep predict runs one Spark job per step") {
+  /** Spark jobs `body` starts, after one uncounted warm run. */
+  private def jobsOf(body: => Unit): Int = {
+    body // warm
+    org.apache.spark.sql.graft.bridge.waitForListeners(spark)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.graft.bridge.waitForListeners(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  /** 12 integer-day series in 3 groups and a pipeline with a groupby
+    * rolling mean: the lockstep predict and the kernel featurize shape.
+    */
+  private def pooledPipeline() = {
     import graft.core.{Freq, PanelFrame}
     import graft.forecast.{MLForecast, Models, SparkLinearRegression}
     import graft.functions.{Pooling, RollingMean}
@@ -104,27 +127,27 @@ class ActionBudgetSpec extends SparkSpec {
       yield (s"s$s", t.toLong, ((s * 7 + t * 3) % 11).toDouble, (s % 3).toDouble)
     val p = PanelFrame(rows.toDF("unique_id", "ds", "y", "grp"), freq = Freq.IntFreq(1),
       staticCols = Seq("grp"))
-    val fitted = MLForecast(Seq(SparkLinearRegression(), Models.naive), Freq.IntFreq(1),
+    val conf = MLForecast(Seq(SparkLinearRegression(), Models.naive), Freq.IntFreq(1),
       FeatureSpec(lags = Seq(1, 7), lagTransforms =
         Map(1 -> Seq(RollingMean(7, pooling = Pooling(groupby = Seq("grp")))))),
-      staticFeatures = Seq("grp")).fit(p)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    def jobsOf(h: Int): Int = {
-      fitted.predict(h).collect() // warm
-      org.apache.spark.sql.graft.bridge.waitForListeners(spark)
-      jobs.set(0)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        fitted.predict(h).collect()
-        org.apache.spark.sql.graft.bridge.waitForListeners(spark)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
-    }
-    val (j2, j7) = (jobsOf(2), jobsOf(7))
+      staticFeatures = Seq("grp"))
+    (conf, p)
+  }
+
+  test("a pooled lockstep predict runs one Spark job per step") {
+    val (conf, p) = pooledPipeline()
+    val fitted = conf.fit(p)
+    def jobsAt(h: Int): Int = jobsOf(fitted.predict(h).collect())
+    val (j2, j7) = (jobsAt(2), jobsAt(7))
     info(s"pooled predict jobs: h=2 $j2, h=7 $j7")
     assert(j7 - j2 <= 5, s"h=7 ran $j7 jobs, h=2 ran $j2: more than one job per step")
+  }
+
+  test("a pooled fit featurizes in the kernel inside its pinned job count") {
+    val (conf, p) = pooledPipeline()
+    assert(graft.forecast.LocalLoop.featurizes(conf, p, Nil))
+    val jobs = jobsOf(conf.fit(p))
+    info(s"pooled fit jobs: $jobs")
+    assert(jobs == PooledFitJobs, s"a pooled fit ran $jobs jobs, pinned at $PooledFitJobs")
   }
 }

@@ -1,6 +1,6 @@
 package graft.forecast
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test}
@@ -25,61 +25,6 @@ import graft.operators.FeatureSpec
 class LockstepPropertySpec extends SparkSpec {
   import LockstepPropertySpec._
 
-  private val Start = java.time.LocalDate.of(2024, 1, 1)
-
-  /** `nSeries` daily series, series s in bucket s % nBuckets, rows
-    * shuffled over `nParts` partitions. Integer-valued targets draw from
-    * 0..20; float ones add a Gaussian to a per-series level.
-    */
-  private def panel(c: Case): PanelFrame = {
-    val rnd = new scala.util.Random(c.seed)
-    val bucketKeys = rnd.shuffle(if (c.nullKeys) KeyPool else KeyPool.filter(_.isDefined))
-      .take(c.nBuckets)
-    val rows = (0 until c.nSeries).flatMap { s =>
-      val start = rnd.nextInt(6)
-      val len = 10 + rnd.nextInt(16)
-      // the NULL bucket's series carry NULL or NaN: one bucket either way
-      val key: java.lang.Double = bucketKeys(s % c.nBuckets) match {
-        case Some(k) => k
-        case None => if (rnd.nextBoolean()) null else Double.NaN
-      }
-      // a few missing dates: the bucket calendars then have entries that
-      // some of their series lack
-      (start until start + len).filter(t => t == start || rnd.nextDouble() >= 0.06).map { t =>
-        val y: java.lang.Double =
-          if (rnd.nextDouble() < 0.08) null
-          else if (c.integer) rnd.nextInt(21).toDouble
-          else 10.0 + 3.0 * s + 2.0 * math.sin(t * 0.9 + s) + rnd.nextGaussian()
-        Row(s"s$s", java.sql.Date.valueOf(Start.plusDays(t)), y, key)
-      }
-    }
-    val schema = StructType(Seq(StructField("unique_id", StringType),
-      StructField("ds", DateType), StructField("y", DoubleType), StructField("grp", DoubleType)))
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rnd.shuffle(rows), 1), schema)
-      .repartition(c.nParts)
-    PanelFrame(df, freq = Freq.Day, staticCols = Seq("grp"))
-  }
-
-  private def spec(c: Case): FeatureSpec = {
-    val pooled = c.pooled.map { t =>
-      val pl = if (t.global) Pooling(global = true) else Pooling(groupby = Seq("grp"))
-      val inner: LagTransform = t.kind match {
-        case 0 => RollingMean(t.w, t.ms, pl)
-        case 1 => RollingStd(t.w, t.ms, pl)
-        case 2 => RollingMin(t.w, t.ms, pl)
-        case 3 => RollingMax(t.w, t.ms, pl)
-        case 4 => SeasonalRollingMean(t.season, t.w, t.ms, pl)
-        case 5 => SeasonalRollingStd(t.season, t.w, t.ms, pl)
-        case 6 => SeasonalRollingMin(t.season, t.w, t.ms, pl)
-        case _ => SeasonalRollingMax(t.season, t.w, t.ms, pl)
-      }
-      t.lag -> (if (t.offset == 0) inner else Offset(inner, t.offset))
-    }.distinctBy { case (l, t) => t.name(l) }
-    val local = if (c.expanding) Seq(1 -> (ExpandingMean(): LagTransform)) else Nil
-    FeatureSpec(lags = Seq(1, 2),
-      lagTransforms = (pooled ++ local).groupBy(_._1).map { case (l, ts) => l -> ts.map(_._2) })
-  }
-
   /** Forecasts keyed by (id, ds), each model's value as raw bits. */
   private def forecasts(df: DataFrame, names: Seq[String]): Map[(String, String), Seq[Long]] =
     df.collect().map { r =>
@@ -88,20 +33,13 @@ class LockstepPropertySpec extends SparkSpec {
           Option(r.getAs[java.lang.Double](n)).map(_.doubleValue).getOrElse(Double.NaN)))
     }.toMap
 
-  /** `body` with `spark.sql.shuffle.partitions` (the kernel's base task
-    * count) set to `n`.
-    */
-  private def withPartitions[T](n: Int)(body: => T): T = {
-    val conf = spark.conf
-    val old = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally conf.set("spark.sql.shuffle.partitions", old)
-  }
+  private def panel(c: Case): PanelFrame = LockstepPropertySpec.panel(spark, c)
+
+  private def withPartitions[T](n: Int)(body: => T): T =
+    LockstepPropertySpec.withPartitions(spark, n)(body)
 
   private def check(name: String, gen: Gen[Case], cases: Int)(prop: Case => Unit): Unit = {
-    val params = Test.Parameters.default.withMinSuccessfulTests(cases)
-      .withInitialSeed(Seed(20261019L)).withWorkers(1).withMaxDiscardRatio(1)
-    val res = Test.check(params, Prop.forAllNoShrink(gen) { c => prop(c); Prop.passed })
+    val res = LockstepPropertySpec.check(gen, cases)(prop)
     assert(res.passed, s"$name: ${Pretty.pretty(res, Pretty.Params(2))}")
   }
 
@@ -188,6 +126,81 @@ class LockstepPropertySpec extends SparkSpec {
 }
 
 object LockstepPropertySpec {
+  private val Start = java.time.LocalDate.of(2024, 1, 1)
+
+  /** `nSeries` daily series, series s in bucket s % nBuckets, rows
+    * shuffled over `nParts` partitions. Integer-valued targets draw from
+    * 0..20; float ones add a Gaussian to a per-series level.
+    */
+  def panel(spark: SparkSession, c: Case): PanelFrame = {
+    val rnd = new scala.util.Random(c.seed)
+    val bucketKeys = rnd.shuffle(if (c.nullKeys) KeyPool else KeyPool.filter(_.isDefined))
+      .take(c.nBuckets)
+    val rows = (0 until c.nSeries).flatMap { s =>
+      val start = rnd.nextInt(6)
+      val len = 10 + rnd.nextInt(16)
+      // the NULL bucket's series carry NULL or NaN: one bucket either way
+      val key: java.lang.Double = bucketKeys(s % c.nBuckets) match {
+        case Some(k) => k
+        case None => if (rnd.nextBoolean()) null else Double.NaN
+      }
+      // a few missing dates: the bucket calendars then have entries that
+      // some of their series lack
+      (start until start + len).filter(t => t == start || rnd.nextDouble() >= 0.06).map { t =>
+        val y: java.lang.Double =
+          if (rnd.nextDouble() < 0.08) null
+          else if (c.integer) rnd.nextInt(21).toDouble
+          else 10.0 + 3.0 * s + 2.0 * math.sin(t * 0.9 + s) + rnd.nextGaussian()
+        Row(s"s$s", java.sql.Date.valueOf(Start.plusDays(t)), y, key)
+      }
+    }
+    val schema = StructType(Seq(StructField("unique_id", StringType),
+      StructField("ds", DateType), StructField("y", DoubleType), StructField("grp", DoubleType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rnd.shuffle(rows), 1), schema)
+      .repartition(c.nParts)
+    PanelFrame(df, freq = Freq.Day, staticCols = Seq("grp"))
+  }
+
+  /** Lags 1 and 2, the case's pooled transforms and, with `expanding`, a
+    * local expanding mean.
+    */
+  def spec(c: Case): FeatureSpec = {
+    val pooled = c.pooled.map { t =>
+      val pl = if (t.global) Pooling(global = true) else Pooling(groupby = Seq("grp"))
+      val inner: LagTransform = t.kind match {
+        case 0 => RollingMean(t.w, t.ms, pl)
+        case 1 => RollingStd(t.w, t.ms, pl)
+        case 2 => RollingMin(t.w, t.ms, pl)
+        case 3 => RollingMax(t.w, t.ms, pl)
+        case 4 => SeasonalRollingMean(t.season, t.w, t.ms, pl)
+        case 5 => SeasonalRollingStd(t.season, t.w, t.ms, pl)
+        case 6 => SeasonalRollingMin(t.season, t.w, t.ms, pl)
+        case _ => SeasonalRollingMax(t.season, t.w, t.ms, pl)
+      }
+      t.lag -> (if (t.offset == 0) inner else Offset(inner, t.offset))
+    }.distinctBy { case (l, t) => t.name(l) }
+    val local = if (c.expanding) Seq(1 -> (ExpandingMean(): LagTransform)) else Nil
+    FeatureSpec(lags = Seq(1, 2),
+      lagTransforms = (pooled ++ local).groupBy(_._1).map { case (l, ts) => l -> ts.map(_._2) })
+  }
+
+  /** `body` with `spark.sql.shuffle.partitions` (the kernels' base task
+    * count) set to `n`.
+    */
+  def withPartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
+    val conf = spark.conf
+    val old = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body finally conf.set("spark.sql.shuffle.partitions", old)
+  }
+
+  /** `prop` over `cases` draws of `gen` from a fixed seed, no shrinking. */
+  def check[C](gen: Gen[C], cases: Int)(prop: C => Unit): Test.Result = {
+    val params = Test.Parameters.default.withMinSuccessfulTests(cases)
+      .withInitialSeed(Seed(20261019L)).withWorkers(1).withMaxDiscardRatio(1)
+    Test.check(params, Prop.forAllNoShrink(gen) { c => prop(c); Prop.passed })
+  }
+
   /** Bucket keys; None is the NULL/NaN bucket. */
   val KeyPool: Seq[Option[Double]] = Seq(None, Some(0.5), Some(1.25), Some(-2.0))
 

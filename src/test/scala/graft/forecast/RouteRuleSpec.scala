@@ -97,6 +97,41 @@ class RouteRuleSpec extends SparkSpec {
     }
   }
 
+  test("featurize route table: admitted specs featurize in the kernel, the rest in the window") {
+    val p = dailyPanel(4, 40)
+    val part = p.copy(df = p.df.withColumn("part", col("grp") * 2), staticCols = Seq("grp", "part"))
+    val group = Pooling(groupby = Seq("grp"))
+    def one(t: graft.functions.LagTransform) =
+      FeatureSpec(lags = Seq(1), lagTransforms = Map(1 -> Seq(t)))
+    val base = MLForecast(Seq(Models.naive), Freq.Day,
+      FeatureSpec(lags = Seq(1, 7), dateFeatures = Seq("dayofweek")),
+      staticFeatures = Seq("grp", "part"))
+    // (label, conf, featurizes in the kernel)
+    val cases: Seq[(String, MLForecast, Boolean)] = Seq(
+      ("local bounded", base, true),
+      ("groupby rolling mean", base.copy(spec = one(RollingMean(3, pooling = group))), true),
+      ("global rolling max", base.copy(spec = one(graft.functions.RollingMax(3,
+        pooling = Pooling(global = true)))), true),
+      ("partitionBy", base.copy(spec = one(RollingMean(3, pooling = Pooling(
+        groupby = Seq("grp"), partitionBy = Seq("part"))))), false),
+      ("timeAgg", base.copy(spec = one(RollingMean(3, pooling = Pooling(
+        groupby = Seq("grp"), timeAgg = Some("sum"))))), false),
+      ("unbounded local", base.copy(spec = one(graft.functions.ExpandingMean())), false),
+      ("unbounded pooled", base.copy(spec = one(graft.functions.ExpandingMean(pooling = group))),
+        false),
+      ("fusedPredict = false", base.copy(fusedPredict = false), false))
+    for ((label, conf, kernel) <- cases) {
+      assert(LocalLoop.featurizes(conf, part, conf.dynamicExogCols(part)) == kernel, label)
+      val fitted = conf.fit(part)
+      val windowed = fitted.featurized.queryExecution.analyzed.collectFirst {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }.isDefined
+      assert(windowed != kernel, s"$label: featurized plan")
+      assert(fitted.featurized.columns.toSeq ==
+        graft.operators.Featurizer.outputColumns(part.df.columns.toSeq, conf.spec), label)
+      assert(fitted.predict(2).count() == 8, s"$label: forecast rows")
+    }
+  }
+
   test("frozen CV and predictWithIntervals through a twin chain: kernel == driver") {
     val p = dailyPanel(6, 90)
     val spec = FeatureSpec(lags = Seq(1, 7, 14), dateFeatures = Seq("dayofweek"))
