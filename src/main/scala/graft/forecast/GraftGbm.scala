@@ -1006,29 +1006,12 @@ object GraftGbm {
     def dispose(): Unit = rdd.unpersist(false)
   }
 
-  /** Driver-side parallelism for the local fit's per-partition passes.
-    * Defaults to the common ForkJoinPool (sized by availableProcessors);
-    * on a SHARED box availableProcessors over-states the cores this
-    * process should claim — the r9 verdict observed the local fit's CPU
-    * inflating 12.7× under contention — so `-Dgraft.gbm.localThreads=N`
-    * pins a dedicated pool. Pool choice cannot change results: only the
-    * CONTENT of each partial slot matters, and the merge runs in fixed
-    * partition-index order regardless of scheduling.
+  /** The local fit's per-partition passes, on the common ForkJoinPool.
+    * Only the CONTENT of each partial slot matters, and the merge runs in
+    * fixed partition-index order regardless of scheduling.
     */
-  private lazy val localFitPool: Option[java.util.concurrent.ForkJoinPool] = {
-    val n: Int = Integer.getInteger("graft.gbm.localThreads", 0)
-    if (n > 0) Some(new java.util.concurrent.ForkJoinPool(n)) else None
-  }
-
-  private def runLocalParallel(n: Int)(body: Int => Unit): Unit = {
-    def go(): Unit =
-      java.util.stream.IntStream.range(0, n).parallel().forEach(i => body(i))
-    localFitPool match {
-      // IntStream.parallel inside a ForkJoinPool task runs on THAT pool
-      case Some(p) => p.submit(new Runnable { def run(): Unit = go() }).get()
-      case None => go()
-    }
-  }
+  private def runLocalParallel(n: Int)(body: Int => Unit): Unit =
+    java.util.stream.IntStream.range(0, n).parallel().forEach(i => body(i))
 
   /** `parts(p)` holds partition p's blocks in iterator order (possibly
     * empty — empty partitions still occupy their slot so the merge topology

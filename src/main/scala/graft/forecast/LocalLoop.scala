@@ -13,27 +13,29 @@ import graft.core.{Freq, PanelFrame}
 import graft.functions._
 import graft.operators.{FeatureSpec, Featurizer}
 
-/** Fused per-series recursive predict: ALL h steps for ALL models run inside
-  * one `mapPartitions` pass over the (id, ds)-sorted panel — one shuffle,
-  * one job, zero driver round-trips — when every transform is local
-  * (per-series). This is the reference's own distributed stance
-  * (/root/reference/mlforecast/distributed/forecast.py:520-577 runs the
-  * whole recursive loop per partition) re-expressed natively. Pooled
-  * transforms, whose cross-series state forces synchronized steps, run the
-  * step-synchronous variant ([[runLockstep]]) when they are bounded
+/** Fused per-series recursive predict: one predict kernel ([[run]]), a
+  * series state decoded once ([[Series]]) and one scoring step
+  * ([[PredictStep]]), on one of two schedules. A spec whose transforms are
+  * all local (per-series) folds ALL h steps for ALL models inside one
+  * `mapPartitions` pass over the (id, ds)-sorted panel: one shuffle, one
+  * job, zero driver round-trips. This is the reference's own distributed
+  * stance (its `distributed/forecast.py:520-577` runs the whole recursive
+  * loop per partition) re-expressed natively. A spec
+  * with pooled transforms, whose cross-series state forces synchronized
+  * steps, maps the same step once per Spark job when they are bounded
   * component windows over `global`/`groupby` buckets: the series stay in
-  * executor partitions, each step is one job, and the driver only combines
-  * per-(bucket, ds) partials (the reference's `_ts_aggs`, pooled.py) and
-  * broadcasts the next step's pooled features. The driver-orchestrated
-  * lockstep loop in [[FittedMLForecast]] remains for the other pooled
-  * shapes (partitionBy, timeAgg, unbounded or non-decomposable).
+  * executor partitions, and the driver only combines per-(bucket, ds)
+  * partials (the reference's `_ts_aggs`, pooled.py) and broadcasts the next
+  * step's pooled features. The driver-orchestrated lockstep loop in
+  * [[FittedMLForecast]] remains for the other pooled shapes (partitionBy,
+  * timeAgg, unbounded or non-decomposable).
   *
   * Fit featurizes with the same kernels ([[featurize]], chosen by
   * [[featurizes]]): one kernel-partitioned pass builds the training frame,
   * local features from [[FeatureRow]] over each series' history and pooled
   * ones from a broadcast table the driver evaluates over exact
-  * per-(scope, bucket, date) partials. Specs the rule refuses keep the
-  * window Featurizer.
+  * per-(scope, bucket, date) partials ([[PooledCalendars]], shared with the
+  * per-step schedule). Specs the rule refuses keep the window Featurizer.
   *
   * Exactness contract: every kernel below mirrors its window-transform
   * twin in [[graft.functions.LagTransforms]] — same guards, same FP
@@ -41,25 +43,28 @@ import graft.operators.{FeatureSpec, Featurizer}
   * frames in ascending frame index), same interpolation formulas — so fused
   * and driver-loop predictions are bit-identical (asserted in ForecastSpec).
   *
-  * At 100 TB: per-task memory is one series' tail at a time (bounded specs
-  * are trimmed to `updateSamplesBound + 1` rows, like the driver loop);
-  * unbounded specs stream the full series into its task — the same
-  * per-worker assumption the reference's GroupedArray makes.
+  * At 100 TB: per-task memory is one series' tail at a time. A bounded
+  * spec keeps [[HistoryCut]]'s rows, like the driver loop's
+  * [[MLForecast.predictHistory]]: the last `updateSamplesBound + 1` rows of
+  * each series, and with pooled transforms also every row on or after its
+  * bucket scope's cut. Unbounded specs stream the full series into its
+  * task — the same per-worker assumption the reference's GroupedArray
+  * makes.
   */
 private[graft] object LocalLoop {
 
-  /** History view: immutable fitted values + the model's appended
-    * predictions. NaN encodes missing (the window featurizer's cleanNaN
-    * null), so kernels skip NaN exactly where window aggregates skip null.
-    * `lo`/`hiExcl` bound the visible history slice — the CV fast path windows
-    * the same array at several cutoffs without copying.
+  /** History view: immutable fitted values + the model's first `appLen`
+    * appended predictions. NaN encodes missing (the window featurizer's
+    * cleanNaN null), so kernels skip NaN exactly where window aggregates
+    * skip null. `lo`/`hiExcl` bound the visible history slice — the CV fast
+    * path windows the same array at several cutoffs without copying.
     */
   private final class View(hist: Array[Double], lo: Int, hiExcl: Int,
-                           app: ArrayBuffer[Double]) {
-    def this(hist: Array[Double], app: ArrayBuffer[Double]) =
-      this(hist, 0, hist.length, app)
+                           app: Array[Double], appLen: Int) {
+    def this(hist: Array[Double], app: Array[Double]) =
+      this(hist, 0, hist.length, app, app.length)
     private val hLen = hiExcl - lo
-    def len: Int = hLen + app.length
+    def len: Int = hLen + appLen
     def apply(i: Int): Double = if (i < hLen) hist(lo + i) else app(i - hLen)
   }
 
@@ -561,16 +566,18 @@ private[graft] object LocalLoop {
     }
 
   /** Streaming bridge: the [[FeatureRow]] of a spec without statics or exog,
-    * as a function of (history, appended predictions, target date) — the
-    * date is read only when the spec has date features. History uses NaN
-    * for missing. None if any transform lacks a fused kernel.
+    * as a function of (history, appended predictions, how many of them are
+    * set, target date) — the date is read only when the spec has date
+    * features. History uses NaN for missing. None if any transform lacks a
+    * fused kernel.
     */
   private[graft] def streamingFeatures(spec: FeatureSpec, nFeatures: Int)
-      : Option[(Array[Double], ArrayBuffer[Double], java.sql.Date) => Array[Double]] =
+      : Option[(Array[Double], Array[Double], Int, java.sql.Date) => Array[Double]] =
     if (!kernelsCompile(spec)) None
     else {
       val features = new FeatureRow(spec, 0, 0, nFeatures)
-      Some((hist, app, ds) => features(new View(hist, app), ds, Array.emptyDoubleArray, null))
+      Some((hist, app, n, ds) =>
+        features(new View(hist, 0, hist.length, app, n), ds, Array.emptyDoubleArray, null))
     }
 
   // ---- The route rule: fused kernel or driver lockstep loop -------------
@@ -773,25 +780,66 @@ private[graft] object LocalLoop {
     }
   }
 
-  /** Column positions of the CV and rollout kernels' input rows. */
-  private final case class SeriesLayout(iId: Int, iDs: Int, iY: Int,
-                                        iStatics: Array[Int], iDyn: Array[Int])
-
-  /** One series' buffered input rows, decoded once: dates, the target
-    * (NaN = null) and its null mask, statics and per-row exog.
+  /** Column positions of every kernel's input rows: id, date, target,
+    * statics and exog. The predict input also carries the future-row flag
+    * `iFut` (-1 = none), per model its level column `iLevel(mi)` (-1 = a
+    * feature-scored model) and per pooled scope si its bucket key columns
+    * `iKeys(si)`.
     */
-  private final class Series(rows: ArrayBuffer[Row], l: SeriesLayout) {
-    val n: Int = rows.length
-    val id: Any = rows.head.get(l.iId)
-    val ds: Array[Any] = rows.map(_.get(l.iDs)).toArray
-    val yNull: Array[Boolean] = rows.map(_.isNullAt(l.iY)).toArray
-    val hist: Array[Double] = rows.map(doubleAt(_, l.iY)).toArray
-    val statics: Array[Double] = l.iStatics.map(doubleAt(rows.head, _))
-    private val exogRows: Array[Array[Double]] =
-      if (l.iDyn.isEmpty) null else rows.map(r => l.iDyn.map(doubleAt(r, _))).toArray
+  private final case class Layout(iId: Int, iDs: Int, iY: Int, iStatics: Array[Int],
+                                  iDyn: Array[Int], iFut: Int = -1,
+                                  iLevel: Array[Int] = Array.emptyIntArray,
+                                  iKeys: Array[Array[Int]] = Array.empty)
+
+  /** One series, decoded once ([[Series.decode]]): its kept history's dates,
+    * targets (NaN = null), null mask and per-row exog; from its first
+    * history row its statics, per model its level (null = none) and per
+    * pooled scope its bucket key; the exog of its future rows by date. The
+    * predict kernel's state adds, per model, the appended targets (NaN =
+    * missing) and the reported predictions of the steps run so far.
+    */
+  private final case class Series(id: Any, ds: Array[Any], hist: Array[Double],
+                                  yNull: Array[Boolean], statics: Array[Double],
+                                  exogRows: Array[Array[Double]],
+                                  levels: Array[java.lang.Double], keys: Array[Seq[Any]],
+                                  future: Map[Any, Array[Double]], app: Array[Array[Double]],
+                                  preds: Array[Array[java.lang.Double]]) {
+    def n: Int = hist.length
+    def lastDs: Any = ds(n - 1)
     /** Row i's exog values; null (FeatureRow reads none) without exog. */
     def exog(i: Int): Array[Double] = if (exogRows == null) null else exogRows(i)
   }
+
+  private object Series {
+    /** One id's run of input rows (layout `l`) as a [[Series]] whose
+      * history is the rows `keep` keeps; None when the run has no history
+      * rows (exog-only ids emit nothing).
+      */
+    def decode(rows: ArrayBuffer[Row], l: Layout,
+               keep: ArrayBuffer[Row] => ArrayBuffer[Row] = identity): Option[Series] = {
+      val (fut, all) =
+        if (l.iFut < 0) (ArrayBuffer.empty[Row], rows) else rows.partition(_.getBoolean(l.iFut))
+      if (all.isEmpty) return None
+      val first = all.head
+      val kept = keep(all)
+      val nModels = l.iLevel.length
+      Some(Series(first.get(l.iId), kept.map(_.get(l.iDs)).toArray,
+        kept.map(doubleAt(_, l.iY)).toArray, kept.map(_.isNullAt(l.iY)).toArray,
+        l.iStatics.map(doubleAt(first, _)),
+        if (l.iDyn.isEmpty) null else kept.map(r => l.iDyn.map(doubleAt(r, _))).toArray,
+        l.iLevel.map(i =>
+          if (i < 0 || first.isNullAt(i)) null else java.lang.Double.valueOf(first.getDouble(i))),
+        l.iKeys.indices.map(bucketKey(first, l.iKeys, _)).toArray,
+        fut.iterator.map(r => r.get(l.iDs) -> l.iDyn.map(doubleAt(r, _))).toMap,
+        Array.fill(nModels)(Array.emptyDoubleArray),
+        Array.fill(nModels)(Array.empty[java.lang.Double])))
+    }
+  }
+
+  /** A partition of sorted kernel input, series by series. */
+  private def decoded(rows: Iterator[Row], l: Layout,
+                      keep: ArrayBuffer[Row] => ArrayBuffer[Row] = identity): Iterator[Series] =
+    seriesRuns(rows, l.iId).flatMap(Series.decode(_, l, keep))
 
   /** The per-row training-feature loop of fit's kernel ([[featurize]]) and
     * runCV's in-kernel refit: series `s` at positions `from to to`, each
@@ -803,13 +851,12 @@ private[graft] object LocalLoop {
   private def trainingRows(features: FeatureRow, s: Series, from: Int, to: Int,
                            dropNa: Boolean, nulls: Array[Boolean] = null)(at: Int => Unit)(
       emit: (Int, Array[Double]) => Unit): Unit = {
-    val noApp = new ArrayBuffer[Double](0)
     var i = from
     while (i <= to) {
       if (!dropNa || !s.hist(i).isNaN) {
         at(i)
-        val arr = features(new View(s.hist, from, i, noApp), s.ds(i), s.statics, s.exog(i),
-          dropNa, nulls)
+        val arr = features(new View(s.hist, from, i, Array.emptyDoubleArray, 0), s.ds(i),
+          s.statics, s.exog(i), dropNa, nulls)
         if (arr != null) emit(i, arr)
       }
       i += 1
@@ -820,24 +867,16 @@ private[graft] object LocalLoop {
     * statics, exog) in doubles, kernel-partitioned, and its layout.
     */
   private def historyInput(p: PanelFrame, statics: Seq[String],
-                           dynCols: Seq[String]): (DataFrame, SeriesLayout) = {
+                           dynCols: Seq[String]): (DataFrame, Layout) = {
     val sel = Seq(p.id, p.ds, p.y.cast(DoubleType).as("__y")) ++
       (statics ++ dynCols).map(c => col(s"`$c`").cast(DoubleType).as(c))
     val sorted = kernelPartitioned(p.df.select(sel: _*), p)
     val s = sorted.schema
-    (sorted, SeriesLayout(s.fieldIndex(p.idCol), s.fieldIndex(p.timeCol),
+    (sorted, Layout(s.fieldIndex(p.idCol), s.fieldIndex(p.timeCol),
       s.fieldIndex("__y"), statics.map(s.fieldIndex).toArray, dynCols.map(s.fieldIndex).toArray))
   }
 
-  /** Column positions of the predict kernels' input rows; `iLevel(mi)` is
-    * model mi's level column, -1 for a feature-scored model; `iKeys(si)`
-    * the bucket key columns of pooled scope si.
-    */
-  private final case class PredictLayout(iId: Int, iDs: Int, iY: Int, iFut: Int,
-                                         iStatics: Array[Int], iDyn: Array[Int],
-                                         iLevel: Array[Int], iKeys: Array[Array[Int]])
-
-  /** The predict kernels' input stream: `hist` rows + tagged future-exog
+  /** The predict kernel's input stream: `hist` rows + tagged future-exog
     * rows, one shuffle by id, sorted so each series arrives as a contiguous
     * ascending run. Level-backed models contribute one joined constant
     * column per model (left join: a series with no level predicts null,
@@ -847,8 +886,7 @@ private[graft] object LocalLoop {
     */
   private def predictInput(p: PanelFrame, hist: DataFrame, statics: Seq[String],
                            dynCols: Seq[String], levelModels: Seq[Option[(DataFrame, String)]],
-                           xDf: Option[DataFrame],
-                           keys: Seq[Seq[String]] = Nil): (DataFrame, PredictLayout) = {
+                           xDf: Option[DataFrame], keys: Seq[Seq[String]]): (DataFrame, Layout) = {
     import p.{idCol, timeCol}
     val levelCols = levelModels.zipWithIndex.collect {
       case (Some(_), mi) => s"__lvl_$mi"
@@ -878,9 +916,9 @@ private[graft] object LocalLoop {
     }
     val sorted = kernelPartitioned(input, p)
     val sc = sorted.schema
-    (sorted, PredictLayout(sc.fieldIndex(idCol), sc.fieldIndex(timeCol), sc.fieldIndex("__y"),
-      sc.fieldIndex("__fut"), statics.map(sc.fieldIndex).toArray,
-      dynCols.map(sc.fieldIndex).toArray,
+    (sorted, Layout(sc.fieldIndex(idCol), sc.fieldIndex(timeCol), sc.fieldIndex("__y"),
+      statics.map(sc.fieldIndex).toArray, dynCols.map(sc.fieldIndex).toArray,
+      sc.fieldIndex("__fut"),
       levelModels.zipWithIndex.map {
         case (Some(_), mi) => sc.fieldIndex(s"__lvl_$mi")
         case (None, _) => -1
@@ -888,89 +926,102 @@ private[graft] object LocalLoop {
       keyCols.map(_.map(sc.fieldIndex).toArray).toArray))
   }
 
-  /** Run the fused loop. Returns (id, ds, <model preds...>) — identical to
-    * the driver loop's pre-inverse output. A spec with pooled transforms
-    * runs the step-synchronous [[runLockstep]].
+  /** The predict kernel's scoring step, one definition for both schedules
+    * of [[run]]. `scorers(mi)` is null for a level-backed model, which
+    * predicts its per-series constant.
+    */
+  private final class PredictStep(spec: FeatureSpec, nStatic: Int, nDyn: Int, nFeatures: Int,
+                                  scorers: Array[Array[Double] => java.lang.Double],
+                                  after: Double => Double, val advance: (Any, Int) => Any,
+                                  scopeOf: Array[Int]) extends Serializable {
+    /** A task's step: `(s, k)` scores step k of series `s`, which has run
+      * k - 1 steps, for every model, and returns `s` with the step's
+      * predictions appended. The pooled features of (model, scope, bucket
+      * key, step date) are read from `table` (null without pooled
+      * transforms).
+      */
+    def task(table: StepTable): (Series, Int) => Series = {
+      val slots = new PooledSlots(scopeOf)
+      val features = new FeatureRow(spec, nStatic, nDyn, nFeatures, slots.eval)
+      (s, k) => {
+        val stepDs = advance(s.lastDs, k)
+        val exog = s.future.getOrElse(stepDs, null)
+        val app = new Array[Array[Double]](scorers.length)
+        val preds = new Array[Array[java.lang.Double]](scorers.length)
+        var mi = 0
+        while (mi < scorers.length) {
+          var pred: java.lang.Double =
+            if (scorers(mi) == null) s.levels(mi)
+            else {
+              var si = 0
+              while (si < s.keys.length) {
+                slots.fill(si, table.get((mi, si, s.keys(si), stepDs))); si += 1
+              }
+              scorers(mi)(features(new View(s.hist, s.app(mi)), stepDs, s.statics, exog))
+            }
+          // after-predict hook (scalar twin of the driver loop's DataFrame
+          // hook): transforms the value that feeds back AND the value
+          // reported, like the reference's _update_y
+          if (after != null && pred != null)
+            pred = java.lang.Double.valueOf(after(pred.doubleValue))
+          app(mi) = s.app(mi) :+ (if (pred == null) Double.NaN else pred.doubleValue)
+          preds(mi) = s.preds(mi) :+ pred
+          mi += 1
+        }
+        s.copy(app = app, preds = preds)
+      }
+    }
+
+    /** Series `s`'s forecast rows after `h` steps: (id, ds, <model preds...>). */
+    def forecasts(s: Series, h: Int): Iterator[Row] = (1 to h).iterator.map { k =>
+      val vals = new Array[Any](2 + scorers.length)
+      vals(0) = s.id
+      vals(1) = advance(s.lastDs, k)
+      var mi = 0
+      while (mi < scorers.length) { vals(2 + mi) = s.preds(mi)(k - 1); mi += 1 }
+      new org.apache.spark.sql.catalyst.expressions.GenericRow(vals): Row
+    }
+  }
+
+  /** Run the fused predict kernel. Returns (id, ds, <model preds...>) —
+    * identical to the driver loop's pre-inverse output. Every series keeps
+    * [[HistoryCut]]'s rows and folds one [[PredictStep]] per step; whether
+    * the spec has a pooled scope picks the schedule. Without one, all h
+    * steps run inside one lazy `mapPartitions` pass. With one, each step is
+    * one Spark job ([[runLockstep]]).
     */
   def run(p: PanelFrame, conf: MLForecast, trained: Seq[(String, TrainedModel)],
           dynCols: Seq[String], h: Int, xDf: Option[DataFrame],
           after: Option[Double => Double] = None): DataFrame = {
-    if (!conf.spec.allTransforms.forall(_._2.pooling.isLocal))
-      return runLockstep(p, conf, trained, dynCols, h, xDf, after)
     import p.{idCol, timeCol}
     val spec = conf.spec
-    val statics = conf.staticFeatures
     val allFeatures = conf.featureCols ++ dynCols
-    val names = trained.map(_._1)
     // per-series constant-forecast models ride a joined level column
     // instead of a feature scorer (SES/Croston/TSB: one value per series)
-    val levelModels: Seq[Option[(DataFrame, String)]] =
-      trained.map { case (_, tm) => tm.seriesLevels }
+    val levelModels = trained.map { case (_, tm) => tm.seriesLevels }
     val scorers = trained.map { case (_, tm) =>
-      tm.scorer(allFeatures).getOrElse(null) }
-    require(scorers.zip(levelModels).forall { case (s, l) =>
-      s != null || l.isDefined }, "model is neither scorable nor level-backed")
-    val features = new FeatureRow(spec, statics.size, dynCols.size, allFeatures.size)
-    val advance = advancer(conf.freq, p.df.schema(timeCol).dataType).get
-    val trimN = spec.updateSamplesBound.map(_ + 1).getOrElse(Int.MaxValue)
-
-    val (sorted, layout) = predictInput(p, p.df, statics, dynCols, levelModels, xDf)
-    val inSchema = sorted.schema
-    val PredictLayout(iId, iDs, iY, iFut, iStatics, iDyn, iLevel, _) = layout
-
+      if (tm.seriesLevels.isDefined) null else tm.scorer(allFeatures).orNull }.toArray
+    require(scorers.zip(levelModels).forall { case (s, l) => s != null || l.isDefined },
+      "model is neither scorable nor level-backed")
+    val pooled = new Pooled(spec, idCol)
+    val kernel = new PredictStep(spec, conf.staticFeatures.size, dynCols.size, allFeatures.size,
+      scorers, after.orNull, advancer(conf.freq, p.df.schema(timeCol).dataType).get,
+      pooled.scopeOf)
+    val (sorted, layout) =
+      predictInput(p, p.df, conf.staticFeatures, dynCols, levelModels, xDf, pooled.scopes)
     val outSchema = StructType(
-      StructField(idCol, inSchema(iId).dataType, nullable = true) +:
+      StructField(idCol, sorted.schema(layout.iId).dataType, nullable = true) +:
         StructField(timeCol, advancedDsType(p), nullable = true) +:
-        names.map(n => StructField(n, DoubleType, nullable = true)))
-
-    val nModels = scorers.size
-    val afterFn: Double => Double = after.orNull
-    sorted.mapPartitions { iter =>
-      // a series can emit zero rows (exog-only ids)
-      seriesRuns(iter, iId).flatMap { series =>
-        val (futRows, histRows) = series.partition(_.getBoolean(iFut))
-        if (histRows.isEmpty) Iterator.empty
-        else {
-          val first = histRows.head
-          val staticVals = iStatics.map(doubleAt(first, _))
-          // level-backed models: one constant per series (null = no level)
-          val levelVals: Array[java.lang.Double] = iLevel.map { i =>
-            if (i < 0 || first.isNullAt(i)) null
-            else java.lang.Double.valueOf(first.getDouble(i))
-          }
-          val lastDs = histRows.last.get(iDs)
-          val hist = histRows.takeRight(trimN).map(doubleAt(_, iY)).toArray
-          val exogByDs: Map[Any, Array[Double]] =
-            futRows.iterator.map(r => r.get(iDs) -> iDyn.map(doubleAt(r, _))).toMap
-
-          val appended = Array.fill(nModels)(new ArrayBuffer[Double](h))
-          val out = new ArrayBuffer[Row](h)
-          var step = 1
-          while (step <= h) {
-            val stepDs = advance(lastDs, step)
-            val exog = exogByDs.getOrElse(stepDs, null)
-            val vals = new Array[Any](2 + nModels)
-            vals(0) = first.get(iId)
-            vals(1) = stepDs
-            var mi = 0
-            while (mi < nModels) {
-              var pred: java.lang.Double =
-                if (iLevel(mi) >= 0) levelVals(mi) // per-series constant
-                else scorers(mi)(features(new View(hist, appended(mi)), stepDs, staticVals, exog))
-              // after-predict hook (scalar twin of the driver loop's
-              // DataFrame hook): transforms the value that feeds back AND
-              // the value reported, like the reference's _update_y
-              if (afterFn != null && pred != null)
-                pred = java.lang.Double.valueOf(afterFn(pred.doubleValue))
-              vals(2 + mi) = pred
-              appended(mi) += (if (pred == null) Double.NaN else pred.doubleValue)
-              mi += 1
-            }
-            out += new org.apache.spark.sql.catalyst.expressions.GenericRow(vals)
-            step += 1
-          }
-          out.iterator
-        }
+        trained.map(t => StructField(t._1, DoubleType, nullable = true)))
+    val cut = historyCut(sorted, layout, spec.updateSamplesBound)
+    if (pooled.scopes.nonEmpty) runLockstep(sorted, layout, cut, kernel, pooled, h, outSchema)
+    else sorted.mapPartitions { iter =>
+      val step = kernel.task(null)
+      decoded(iter, layout, cut).flatMap { s0 =>
+        var s = s0
+        var k = 1
+        while (k <= h) { s = step(s, k); k += 1 }
+        kernel.forecasts(s, h)
       }
     }(Encoders.row(outSchema))
   }
@@ -1019,16 +1070,82 @@ private[graft] object LocalLoop {
     def sumSq: Double = rounded(ss, ssInf)
   }
 
-  /** One series in the lockstep kernel: its kept history (dates and NaN-
-    * for-missing targets), what its features read, its bucket key per
-    * pooled scope, and per model the appended targets (NaN = missing) and
-    * the reported predictions of the steps run so far.
+  /** A spec's non-local transforms in featureNames order, each with its
+    * scope (the bucket columns of its pooling; Nil = global), indexed in
+    * `scopes` by `scopeOf`.
     */
-  private final case class LockstepSeries(
-      id: Any, lastDs: Any, histDs: Array[Any], hist: Array[Double],
-      statics: Array[Double], levels: Array[java.lang.Double],
-      exogByDs: Map[Any, Array[Double]], keys: Array[Seq[Any]],
-      app: Array[Array[Double]], preds: Array[Array[java.lang.Double]])
+  private final class Pooled(spec: FeatureSpec, idCol: String) {
+    val transforms: Seq[(Int, LagTransform)] = spec.allTransforms.filterNot(_._2.pooling.isLocal)
+    val scopes: Seq[Seq[String]] = transforms.map(_._2.pooling.bucketCols(idCol)).distinct
+    val scopeOf: Array[Int] =
+      transforms.map(t => scopes.indexOf(t._2.pooling.bucketCols(idCol))).toArray
+  }
+
+  /** A task's exact [[Comp]] partials per (scope, bucket key, date). */
+  private final class Partials extends Serializable {
+    val m = scala.collection.mutable.HashMap.empty[(Int, Seq[Any], Any), Comp]
+    def add(si: Int, key: Seq[Any], ds: Any, y: Double): Unit =
+      m.getOrElseUpdate((si, key, ds), new Comp).add(y)
+  }
+
+  /** The pooled calendars of fit's [[pooledTable]] and the per-step
+    * schedule ([[runLockstep]]): per (scope, bucket key), date → the
+    * merged [[Partials]] of its tasks, and the pooled transforms evaluated
+    * over them ([[compilePooled]], the Featurizer's RANGE frame over the
+    * same dense calendar).
+    */
+  private final class PooledCalendars(pooled: Pooled) {
+    private val evals = pooled.transforms.map { case (l, t) => compilePooled(l, t).get }.toArray
+    private val cals =
+      scala.collection.mutable.HashMap.empty[(Int, Seq[Any]), java.util.TreeMap[Any, Comp]]
+    private def calendar(si: Int, key: Seq[Any]) =
+      cals.getOrElseUpdate((si, key), new java.util.TreeMap[Any, Comp](dateOrdering))
+
+    def merge(parts: Partials): Unit =
+      parts.m.foreach { case ((si, key, ds), comp) => mergeAt(calendar(si, key), ds, comp) }
+
+    def entries: Long = cals.valuesIterator.map(_.size.toLong).sum
+    def buckets: Seq[(Int, Seq[Any])] = cals.keys.toSeq
+
+    /** The pooled values at dates `at` of bucket (si, key)'s calendar
+      * (absent ones enter as empty entries), at every date without `at`,
+      * indexed like `pooled.transforms` (other scopes' slots null).
+      */
+    def values(si: Int, key: Seq[Any],
+               at: Option[Set[Any]]): Seq[(Any, Array[java.lang.Double])] = {
+      val cal = calendar(si, key)
+      at.foreach(_.foreach(d => if (!cal.containsKey(d)) cal.put(d, new Comp)))
+      val comps = compsOf(cal)
+      comps.dates.indices.filter(o => at.forall(_.contains(comps.dates(o)))).map { o =>
+        val vals = new Array[java.lang.Double](evals.length)
+        var j = 0
+        while (j < vals.length) {
+          if (pooled.scopeOf(j) == si) vals(j) = evals(j)(comps, o)
+          j += 1
+        }
+        comps.dates(o) -> vals
+      }
+    }
+  }
+
+  /** A task's pooled feature slots, which [[FeatureRow]]'s non-local
+    * transforms read ([[eval]]); [[fill]] loads one scope's values.
+    */
+  private final class PooledSlots(scopeOf: Array[Int]) {
+    private val slot = new Array[java.lang.Double](scopeOf.length)
+    val eval: Int => Eval = j => (_: View) => slot(j)
+    /** Scope si's slots from `vals` (null = no values there). */
+    def fill(si: Int, vals: Array[java.lang.Double]): Unit = {
+      var j = 0
+      while (j < slot.length) {
+        if (scopeOf(j) == si) slot(j) = if (vals == null) null else vals(j)
+        j += 1
+      }
+    }
+  }
+
+  /** A step's pooled features: (model, scope, bucket key, date) → values. */
+  private type StepTable = java.util.HashMap[(Int, Int, Seq[Any], Any), Array[java.lang.Double]]
 
   /** A bucket key as the Featurizer groups it: NaN is null
     * (normalizedKey), -0.0 is 0.0.
@@ -1051,9 +1168,11 @@ private[graft] object LocalLoop {
     * `cuts` keeps every row). Without a bound it keeps everything.
     */
   private final class HistoryCut(bound: Option[Int], cuts: Map[(Int, Seq[Any]), Any],
-                                 iDs: Int, iKeys: Array[Array[Int]]) extends Serializable {
+                                 iDs: Int, iKeys: Array[Array[Int]])
+      extends (ArrayBuffer[Row] => ArrayBuffer[Row]) with Serializable {
     def apply(hist: ArrayBuffer[Row]): ArrayBuffer[Row] = bound match {
       case None => hist
+      case Some(b) if iKeys.isEmpty => hist.takeRight(b + 1)
       case Some(b) =>
         val n = hist.length
         hist.zipWithIndex.collect { case (r, i) if n - i <= b + 1 || onOrAfterCut(r) => r }
@@ -1070,17 +1189,19 @@ private[graft] object LocalLoop {
     }
   }
 
-  /** [[MLForecast.predictHistory]]'s cut on the kernel input `rows`
-    * (sorted, each series a contiguous ascending run): one job returns,
-    * per (scope, bucket key) and task, the earliest series end and the
-    * dates of the series' last `bound + 1` rows; the cut is the date
-    * `bound` entries before the earliest end among them, none when there
-    * are not that many (scopeCutoffs' rule, one key per NaN or null key).
+  /** [[MLForecast.predictHistory]]'s cut on the predict kernel's input
+    * `sorted` (each series a contiguous ascending run). A bounded spec with
+    * pooled scopes runs one job that returns, per (scope, bucket key) and
+    * task, the earliest series end and the dates of the series' last
+    * `bound + 1` rows; the cut is the date `bound` entries before the
+    * earliest end among them, none when there are not that many
+    * (scopeCutoffs' rule, one key per NaN or null key). Any other spec
+    * starts no job.
     */
-  private def historyCut(rows: org.apache.spark.rdd.RDD[Row], l: PredictLayout,
-                         bound: Option[Int]): HistoryCut = {
-    val cuts = bound.fold(Map.empty[(Int, Seq[Any]), Any]) { b =>
+  private def historyCut(sorted: DataFrame, l: Layout, bound: Option[Int]): HistoryCut = {
+    val cuts = bound.filter(_ => l.iKeys.nonEmpty).fold(Map.empty[(Int, Seq[Any]), Any]) { b =>
       type Tails = scala.collection.mutable.HashMap[(Int, Seq[Any]), (Any, Set[Any])]
+      val rows = sorted.rdd
       val parts = rows.sparkContext.runJob(rows, (it: Iterator[Row]) => {
         val tails: Tails = scala.collection.mutable.HashMap.empty
         seriesRuns(it, l.iId).foreach { run =>
@@ -1114,228 +1235,97 @@ private[graft] object LocalLoop {
   private def minDate(a: Any, b: Any): Any =
     if (a == null) b else if (b == null || dateOrdering.lteq(a, b)) a else b
 
-  /** Step-synchronous fused predict for specs with pooled transforms
-    * ([[lockstepPoolable]]), one Spark job per step. The per-series
-    * history stays in executor partitions, local-checkpointed step by step;
-    * the driver holds only per-(model, bucket, date) components.
+  /** The per-step schedule of [[run]], for specs with pooled transforms
+    * ([[lockstepPoolable]]): one Spark job per step. The series stay in
+    * executor partitions, local-checkpointed step by step; the driver
+    * holds only per-model [[PooledCalendars]].
     *
-    *   - A first job over the kernel-partitioned panel finds each scope's
-    *     history cut ([[historyCut]]); the series then keep
-    *     [[MLForecast.predictHistory]]'s rows, without a window plan.
+    *   - When the spec is bounded, a first job over the kernel-partitioned
+    *     panel finds each scope's history cut ([[historyCut]]); the series
+    *     then keep [[MLForecast.predictHistory]]'s rows, without a window
+    *     plan.
     *   - Job 0 materializes the kept history from the same shuffle and
     *     returns its exact per-(bucket, date) partials and each bucket's
     *     series end dates.
     *   - Before step k the driver adds the step's placeholder dates
     *     (`advance(end, k)` per end date) to each bucket's calendar, so
     *     ordinals are the dense rank `Ordinals.withOrdinal` assigns, and
-    *     evaluates every pooled transform at each placeholder
-    *     ([[compilePooled]]): a broadcast (model, bucket, date) → values
-    *     table.
-    *   - Step k's job scores every series, reading local features from its
-    *     history and pooled ones from the table (an [[Eval]] at the
-    *     feature's featureNames position), appends the prediction and
-    *     returns per-(model, bucket, date) partials of the predictions,
-    *     which the driver merges into the calendars.
+    *     evaluates every pooled transform at each placeholder: a broadcast
+    *     [[StepTable]].
+    *   - Step k's job maps the [[PredictStep]] over every series, reading
+    *     pooled features from the table, and returns per-model partials of
+    *     the predictions, which the driver merges into the calendars.
     *
     * Exactness: the calendar, frames and guards are the driver loop's; the
     * component sums are exact and rounded once where the Featurizer's
     * Spark `sum` rounds in arrival order, so forecasts match the driver
     * loop bit for bit whenever those sums are exact (integer-valued
     * history and predictions) and to the last bits otherwise, and never
-    * depend on the kernel's partition count. Output: (id, ds, <model
-    * preds...>), like [[run]].
+    * depend on the kernel's partition count.
     */
-  private def runLockstep(p: PanelFrame, conf: MLForecast, trained: Seq[(String, TrainedModel)],
-                          dynCols: Seq[String], h: Int, xDf: Option[DataFrame],
-                          after: Option[Double => Double]): DataFrame = {
-    import p.{idCol, timeCol}
-    val spark = p.df.sparkSession
-    val sc = spark.sparkContext
-    val spec = conf.spec
-    val statics = conf.staticFeatures
-    val allFeatures = conf.featureCols ++ dynCols
-    val nFeatures = allFeatures.size
-    val names = trained.map(_._1)
-    val nModels = names.size
-    val levelModels = trained.map { case (_, tm) => tm.seriesLevels }
-    val levelBacked = levelModels.map(_.isDefined).toArray
-    val scorers = trained.map { case (_, tm) => tm.scorer(allFeatures).orNull }.toArray
-    require(scorers.zip(levelModels).forall { case (s, l) => s != null || l.isDefined },
-      "model is neither scorable nor level-backed")
-    val advance = advancer(conf.freq, p.df.schema(timeCol).dataType).get
-    val afterFn: Double => Double = after.orNull
-
-    // pooled transforms in featureNames order, each with its scope (bucket
-    // columns; Nil = global) and driver-side evaluator
-    val pooled = spec.allTransforms.filterNot(_._2.pooling.isLocal)
-    val scopes = pooled.map(_._2.pooling.bucketCols(idCol)).distinct
-    val scopeOf = pooled.map(t => scopes.indexOf(t._2.pooling.bucketCols(idCol))).toArray
-    val evals = pooled.map { case (l, t) => compilePooled(l, t).get }.toArray
-    val nPooled = pooled.size
-    val nScopes = scopes.size
-
-    // the whole panel goes in; each series keeps predictHistory's rows,
-    // cut in the kernel ([[historyCut]])
-    val (sorted, layout) = predictInput(p, p.df, statics, dynCols, levelModels, xDf, scopes)
-    val outSchema = StructType(
-      StructField(idCol, sorted.schema(layout.iId).dataType, nullable = true) +:
-        StructField(timeCol, advancedDsType(p), nullable = true) +:
-        names.map(n => StructField(n, DoubleType, nullable = true)))
-    val rows = sorted.rdd
-    val cut = sc.broadcast(historyCut(rows, layout, spec.updateSamplesBound))
-
-    var state: org.apache.spark.rdd.RDD[LockstepSeries] = rows.mapPartitions { iter =>
-      val l = layout
-      val keep = cut.value
-      seriesRuns(iter, l.iId).flatMap { run =>
-        val (futRows, allRows) = run.partition(_.getBoolean(l.iFut))
-        val histRows = keep(allRows)
-        if (histRows.isEmpty) Iterator.empty // exog-only ids emit nothing
-        else {
-          val first = histRows.head
-          Iterator.single(LockstepSeries(
-            id = first.get(l.iId),
-            lastDs = histRows.last.get(l.iDs),
-            histDs = histRows.map(_.get(l.iDs)).toArray,
-            hist = histRows.map(doubleAt(_, l.iY)).toArray,
-            statics = l.iStatics.map(doubleAt(first, _)),
-            levels = l.iLevel.map { i =>
-              if (i < 0 || first.isNullAt(i)) null else java.lang.Double.valueOf(first.getDouble(i))
-            },
-            exogByDs = futRows.iterator.map(r => r.get(l.iDs) -> l.iDyn.map(doubleAt(r, _))).toMap,
-            keys = l.iKeys.indices.map(bucketKey(first, l.iKeys, _)).toArray,
-            app = Array.fill(nModels)(Array.emptyDoubleArray),
-            preds = Array.fill(nModels)(Array.empty[java.lang.Double])))
-        }
-      }
-    }
+  private def runLockstep(sorted: DataFrame, layout: Layout, cut: HistoryCut,
+                          kernel: PredictStep, pooled: Pooled, h: Int,
+                          outSchema: StructType): DataFrame = {
+    val sc = sorted.sparkSession.sparkContext
+    val nModels = layout.iLevel.length
+    val nScopes = pooled.scopes.size
+    val advance = kernel.advance
+    val keep = sc.broadcast(cut)
+    var state: org.apache.spark.rdd.RDD[Series] =
+      sorted.rdd.mapPartitions(iter => decoded(iter, layout, keep.value))
     state.localCheckpoint()
 
     // job 0: history partials and series end dates per bucket
-    val history = sc.runJob(state, (it: Iterator[LockstepSeries]) => {
-      val parts = scala.collection.mutable.HashMap.empty[(Int, Seq[Any], Any), Comp]
+    val history = sc.runJob(state, (it: Iterator[Series]) => {
+      val parts = new Partials
       val ends = scala.collection.mutable.HashMap.empty[(Int, Seq[Any]), Set[Any]]
       it.foreach { s =>
-        var si = 0
-        while (si < nScopes) {
-          val key = s.keys(si)
+        for (si <- 0 until nScopes) {
           var r = 0
-          while (r < s.hist.length) {
-            if (s.histDs(r) != null)
-              parts.getOrElseUpdate((si, key, s.histDs(r)), new Comp).add(s.hist(r))
+          while (r < s.n) {
+            if (s.ds(r) != null) parts.add(si, s.keys(si), s.ds(r), s.hist(r))
             r += 1
           }
-          ends((si, key)) = ends.getOrElse((si, key), Set.empty[Any]) + s.lastDs
-          si += 1
+          ends((si, s.keys(si))) = ends.getOrElse((si, s.keys(si)), Set.empty[Any]) + s.lastDs
         }
       }
       (parts, ends)
     })
-    // per (model, scope, bucket): the calendar, date -> components
-    val calendars = scala.collection.mutable.HashMap.empty[(Int, Int, Seq[Any]),
-      java.util.TreeMap[Any, Comp]]
-    def calendar(mi: Int, si: Int, key: Seq[Any]) =
-      calendars.getOrElseUpdate((mi, si, key), new java.util.TreeMap[Any, Comp](dateOrdering))
+    val calendars = Array.fill(nModels)(new PooledCalendars(pooled))
     val bucketEnds = scala.collection.mutable.HashMap.empty[(Int, Seq[Any]), Set[Any]]
     history.foreach { case (parts, ends) =>
       ends.foreach { case (b, es) => bucketEnds(b) = bucketEnds.getOrElse(b, Set.empty[Any]) ++ es }
-      parts.foreach { case ((si, key, ds), comp) =>
-        (0 until nModels).foreach(mi => mergeAt(calendar(mi, si, key), ds, comp))
-      }
+      calendars.foreach(_.merge(parts))
     }
 
     for (step <- 1 to h) {
-      // the step's pooled features: (model, scope, bucket, date) -> values
-      // indexed like `pooled` (other scopes' slots unused)
-      val table = new java.util.HashMap[(Int, Int, Seq[Any], Any), Array[java.lang.Double]]()
-      for (((si, key), es) <- bucketEnds; mi <- 0 until nModels) {
-        val cal = calendar(mi, si, key)
-        val placeholders = es.map(advance(_, step))
-        placeholders.foreach(d => if (!cal.containsKey(d)) cal.put(d, new Comp))
-        val comps = compsOf(cal)
-        // placeholder positions
-        val at = comps.dates.indices.filter(i => placeholders.contains(comps.dates(i)))
-          .map(i => comps.dates(i) -> i).toMap
-        placeholders.foreach { d =>
-          val o = at(d)
-          val vals = new Array[java.lang.Double](nPooled)
-          var j = 0
-          while (j < nPooled) { if (scopeOf(j) == si) vals(j) = evals(j)(comps, o); j += 1 }
+      val table = new StepTable()
+      for (((si, key), es) <- bucketEnds; mi <- 0 until nModels)
+        calendars(mi).values(si, key, Some(es.map(advance(_, step)))).foreach { case (d, vals) =>
           table.put((mi, si, key, d), vals)
         }
-      }
       val bc = sc.broadcast(table)
       val next = state.mapPartitions({ iter =>
-        val slot = new Array[java.lang.Double](nPooled)
-        val features = new FeatureRow(spec, statics.size, dynCols.size, nFeatures,
-          j => (_: View) => slot(j))
-        val tab = bc.value
-        iter.map { s =>
-          val stepDs = advance(s.lastDs, step)
-          val exog = s.exogByDs.getOrElse(stepDs, null)
-          val app = new Array[Array[Double]](nModels)
-          val preds = new Array[Array[java.lang.Double]](nModels)
-          var mi = 0
-          while (mi < nModels) {
-            var pred: java.lang.Double =
-              if (levelBacked(mi)) s.levels(mi) // per-series constant
-              else {
-                var si = 0
-                while (si < nScopes) {
-                  val vals = tab.get((mi, si, s.keys(si), stepDs))
-                  var j = 0
-                  while (j < nPooled) { if (scopeOf(j) == si) slot(j) = vals(j); j += 1 }
-                  si += 1
-                }
-                scorers(mi)(features(new View(s.hist, ArrayBuffer.from(s.app(mi))), stepDs,
-                  s.statics, exog))
-              }
-            if (afterFn != null && pred != null)
-              pred = java.lang.Double.valueOf(afterFn(pred.doubleValue))
-            app(mi) = s.app(mi) :+ (if (pred == null) Double.NaN else pred.doubleValue)
-            preds(mi) = s.preds(mi) :+ pred
-            mi += 1
-          }
-          s.copy(app = app, preds = preds)
-        }
+        val stepFn = kernel.task(bc.value)
+        iter.map(stepFn(_, step))
       }, preservesPartitioning = true)
       next.localCheckpoint()
       // step job: materialize the step and return its prediction partials
-      val stepParts = sc.runJob(next, (it: Iterator[LockstepSeries]) => {
-        val parts = scala.collection.mutable.HashMap.empty[(Int, Int, Seq[Any], Any), Comp]
+      val stepParts = sc.runJob(next, (it: Iterator[Series]) => {
+        val parts = Array.fill(nModels)(new Partials)
         it.foreach { s =>
           val stepDs = advance(s.lastDs, step)
-          var mi = 0
-          while (mi < nModels) {
-            var si = 0
-            while (si < nScopes) {
-              parts.getOrElseUpdate((mi, si, s.keys(si), stepDs), new Comp).add(s.app(mi)(step - 1))
-              si += 1
-            }
-            mi += 1
-          }
+          for (mi <- 0 until nModels; si <- 0 until nScopes)
+            parts(mi).add(si, s.keys(si), stepDs, s.app(mi)(step - 1))
         }
         parts
       })
-      stepParts.foreach(_.foreach { case ((mi, si, key, ds), comp) =>
-        calendar(mi, si, key).get(ds).merge(comp)
-      })
+      stepParts.foreach(_.zip(calendars).foreach { case (parts, cal) => cal.merge(parts) })
       // the step job checkpointed `next`, so nothing reads `state` again
       state.unpersist(blocking = false)
       state = next
     }
-
-    val out = state.flatMap { s =>
-      (1 to h).iterator.map { step =>
-        val vals = new Array[Any](2 + nModels)
-        vals(0) = s.id
-        vals(1) = advance(s.lastDs, step)
-        var mi = 0
-        while (mi < nModels) { vals(2 + mi) = s.preds(mi)(step - 1); mi += 1 }
-        new org.apache.spark.sql.catalyst.expressions.GenericRow(vals): Row
-      }
-    }
-    spark.createDataFrame(out, outSchema)
+    sorted.sparkSession.createDataFrame(state.flatMap(kernel.forecasts(_, h)), outSchema)
   }
 
   /** Most (scope, bucket, date) entries [[featurize]] gathers on the
@@ -1348,22 +1338,16 @@ private[graft] object LocalLoop {
     */
   private type PooledTable = java.util.HashMap[(Int, Seq[Any], Any), Array[java.lang.Double]]
 
-  /** Every transform of `pooled` (scope index `scopeOf(j)`) at every
-    * (scope, bucket, date) of panel `p`, whose bucket keys per scope sit
-    * at `iKeys`. One job over the panel's internal rows (its scan plan
-    * alone, no deserializer to generate) returns each task's exact
-    * per-(scope, bucket, date) [[Comp]] partials; the driver merges them
-    * into calendars and evaluates each transform at every position with
-    * [[compilePooled]], the Featurizer's RANGE frame over the same dense
-    * calendar. None when a date is null (the Featurizer ranks it as a
-    * calendar entry) or the calendars pass [[MaxPooledEntries]]; a task
-    * stops at that size, so the driver holds at most one capped map per
-    * task and never per-row data.
+  /** Every pooled transform at every (scope, bucket, date) of panel `p`
+    * (layout `l`, over its own columns). One job over the panel's internal
+    * rows (its scan plan alone, no deserializer to generate) returns each
+    * task's [[Partials]]; the driver merges them into [[PooledCalendars]]
+    * and evaluates every transform at every date. None when a date is null
+    * (the Featurizer ranks it as a calendar entry) or the calendars pass
+    * [[MaxPooledEntries]]; a task stops at that size, so the driver holds
+    * at most one capped map per task and never per-row data.
     */
-  private def pooledTable(p: PanelFrame, l: SeriesLayout,
-                          iKeys: Array[Array[Int]], pooled: Seq[(Int, LagTransform)],
-                          scopeOf: Array[Int]): Option[PooledTable] = {
-    val evals = pooled.map { case (lag, t) => compilePooled(lag, t).get }.toArray
+  private def pooledTable(p: PanelFrame, l: Layout, pooled: Pooled): Option[PooledTable] = {
     val cap = MaxPooledEntries
     // the values a Row of the panel holds, read off its internal rows
     val schema = p.df.schema
@@ -1374,7 +1358,7 @@ private[graft] object LocalLoop {
     val rows = p.df.queryExecution.toRdd
     val parts = rows.sparkContext.runJob(rows,
       (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        val m = scala.collection.mutable.HashMap.empty[(Int, Seq[Any], Any), Comp]
+        val acc = new Partials
         var ok = true
         while (ok && it.hasNext) {
           val r = it.next()
@@ -1382,35 +1366,22 @@ private[graft] object LocalLoop {
           ok = ds != null
           val y = at(r, l.iY)
           var si = 0
-          while (ok && si < iKeys.length) {
-            val key = iKeys(si).toSeq.map(i => bucketValue(at(r, i)))
-            m.getOrElseUpdate((si, key, ds), new Comp)
-              .add(if (y == null) Double.NaN else y.asInstanceOf[Number].doubleValue)
+          while (ok && si < l.iKeys.length) {
+            acc.add(si, l.iKeys(si).toSeq.map(i => bucketValue(at(r, i))), ds,
+              if (y == null) Double.NaN else y.asInstanceOf[Number].doubleValue)
             si += 1
           }
-          ok = ok && m.size <= cap
+          ok = ok && acc.m.size <= cap
         }
-        if (ok) m else null
+        if (ok) acc else null
       })
     if (parts.contains(null)) return None
-    val cals = scala.collection.mutable.HashMap.empty[(Int, Seq[Any]), java.util.TreeMap[Any, Comp]]
-    parts.foreach(_.foreach { case ((si, key, ds), comp) =>
-      mergeAt(cals.getOrElseUpdate((si, key), new java.util.TreeMap[Any, Comp](dateOrdering)),
-        ds, comp)
-    })
-    if (cals.valuesIterator.map(_.size.toLong).sum > cap) return None
+    val cals = new PooledCalendars(pooled)
+    parts.foreach(cals.merge)
+    if (cals.entries > cap) return None
     val table = new PooledTable()
-    for (((si, key), cal) <- cals) {
-      val comps = compsOf(cal)
-      var o = 0
-      while (o < comps.dates.length) {
-        val vals = new Array[java.lang.Double](pooled.size)
-        var j = 0
-        while (j < vals.length) { if (scopeOf(j) == si) vals(j) = evals(j)(comps, o); j += 1 }
-        table.put((si, key, comps.dates(o)), vals)
-        o += 1
-      }
-    }
+    for ((si, key) <- cals.buckets; (d, vals) <- cals.values(si, key, None))
+      table.put((si, key, d), vals)
     Some(table)
   }
 
@@ -1431,21 +1402,19 @@ private[graft] object LocalLoop {
   def featurize(p: PanelFrame, spec: FeatureSpec, dynCols: Seq[String])
       : Option[Boolean => DataFrame] = {
     import p.{idCol, timeCol}
-    val pooled = spec.allTransforms.filterNot(_._2.pooling.isLocal)
-    val scopes = pooled.map(_._2.pooling.bucketCols(idCol)).distinct
-    val scopeOf = pooled.map(t => scopes.indexOf(t._2.pooling.bucketCols(idCol))).toArray
-    val nPooled = pooled.size
+    val pooled = new Pooled(spec, idCol)
+    val scopeOf = pooled.scopeOf
     // the panel's own rows: doubleAt reads the target and exog as their
     // casts to double do, bucketValue reads keys as normalizedKey does
     val sc = p.df.schema
     val nIn = sc.size
-    val layout = SeriesLayout(sc.fieldIndex(idCol), sc.fieldIndex(timeCol),
-      sc.fieldIndex(p.targetCol), Array.emptyIntArray, dynCols.map(sc.fieldIndex).toArray)
-    val iKeys = scopes.map(_.map(sc.fieldIndex).toArray).toArray
+    val layout = Layout(sc.fieldIndex(idCol), sc.fieldIndex(timeCol), sc.fieldIndex(p.targetCol),
+      Array.emptyIntArray, dynCols.map(sc.fieldIndex).toArray,
+      iKeys = pooled.scopes.map(_.map(sc.fieldIndex).toArray).toArray)
     // a pooled spec's table: one narrow job over the panel rows
     val bc =
-      if (pooled.isEmpty) null
-      else pooledTable(p, layout, iKeys, pooled, scopeOf) match {
+      if (pooled.scopes.isEmpty) null
+      else pooledTable(p, layout, pooled) match {
         case Some(table) => p.df.sparkSession.sparkContext.broadcast(table)
         case None => return None
       }
@@ -1454,25 +1423,18 @@ private[graft] object LocalLoop {
     val outSchema = StructType(sc.fields ++ names.zipWithIndex.map { case (n, k) =>
       StructField(n, if (k < nWin) DoubleType else IntegerType, nullable = true) })
     val pass = (dropNa: Boolean) => (iter: Iterator[Row]) => {
-      val slot = new Array[java.lang.Double](nPooled)
-      val features = new FeatureRow(spec, 0, dynCols.size, names.size + dynCols.size,
-        j => (_: View) => slot(j))
+      val slots = new PooledSlots(scopeOf)
+      val features = new FeatureRow(spec, 0, dynCols.size, names.size + dynCols.size, slots.eval)
       val nulls = new Array[Boolean](nWin)
       val tab = if (bc == null) null else bc.value
       seriesRuns(iter, layout.iId).flatMap { rows =>
-        val s = new Series(rows, layout)
+        val s = Series.decode(rows, layout).get
         val out = new ArrayBuffer[Row](s.n)
         trainingRows(features, s, 0, s.n - 1, dropNa, nulls) { i =>
           // the row's own bucket per scope, as the Featurizer joins it
           var si = 0
-          while (tab != null && si < iKeys.length) {
-            val key = bucketKey(rows(i), iKeys, si)
-            val vals = tab.get((si, key, s.ds(i)))
-            var j = 0
-            while (j < nPooled) {
-              if (scopeOf(j) == si) slot(j) = if (vals == null) null else vals(j)
-              j += 1
-            }
+          while (si < layout.iKeys.length) {
+            slots.fill(si, tab.get((si, bucketKey(rows(i), layout.iKeys, si), s.ds(i))))
             si += 1
           }
         } { (i, arr) =>
@@ -1575,8 +1537,7 @@ private[graft] object LocalLoop {
     def cmp(a: Any, b: Any): Int = a.asInstanceOf[Comparable[Any]].compareTo(b)
 
     sorted.mapPartitions { iter =>
-      seriesRuns(iter, layout.iId).flatMap { rows =>
-        val s = new Series(rows, layout)
+      decoded(iter, layout).flatMap { s =>
         val idxByDs: Map[Any, Int] = s.ds.zipWithIndex.toMap
         val lastDs = s.ds(s.n - 1)
         // scorers this series is currently predicting with: driver-trained
@@ -1635,7 +1596,7 @@ private[graft] object LocalLoop {
                 val invChain = chain.reverse
                 (cur, Array.fill(nModels)(invChain.map(_.newInverter())))
               }
-            val appended = Array.fill(nModels)(new ArrayBuffer[Double](h))
+            val appended = Array.fill(nModels)(new Array[Double](h))
             var step = 1
             while (step <= h) {
               val stepDs = advance(originDs, step)
@@ -1650,14 +1611,14 @@ private[graft] object LocalLoop {
                 val sc = curScorers(mi)
                 val pred =
                   if (sc == null) null
-                  else sc(features(new View(workHist, lo, hiExcl, appended(mi)), stepDs,
+                  else sc(features(new View(workHist, lo, hiExcl, appended(mi), step - 1), stepDs,
                     s.statics, exog))
                 // the TRANSFORMED prediction feeds the recursion; the
                 // emitted value inverts to original space (the inverse is
                 // stepped EVERY step — its cumsum state advances whether
                 // or not the step emits a row, like the driver's inverse
                 // over the full h-step prediction frame)
-                appended(mi) += (if (pred == null) Double.NaN else pred.doubleValue)
+                appended(mi)(step - 1) = if (pred == null) Double.NaN else pred.doubleValue
                 preds(mi) =
                   if (tfmArr.isEmpty) pred
                   else {
@@ -1728,18 +1689,17 @@ private[graft] object LocalLoop {
     val nModels = scorers.length
 
     sorted.mapPartitions { iter =>
-      seriesRuns(iter, layout.iId).flatMap { rows =>
-        val s = new Series(rows, layout)
-        val noApp = new ArrayBuffer[Double](0)
+      decoded(iter, layout).flatMap { s =>
         val outRows = new ArrayBuffer[Row]()
         var o = 0
         while (o < s.n - h) {
           // one-step dropna survival of the origin's first forecast row:
           // every window feature, every exog value and the label present
           // (MLForecast.dropNa)
-          if (!s.hist(o + 1).isNaN && features(new View(s.hist, 0, o + 1, noApp),
-              s.ds(o + 1), s.statics, s.exog(o + 1), dropNa = true) != null) {
-            val appended = Array.fill(nModels)(new ArrayBuffer[Double](h))
+          if (!s.hist(o + 1).isNaN &&
+              features(new View(s.hist, 0, o + 1, Array.emptyDoubleArray, 0),
+                s.ds(o + 1), s.statics, s.exog(o + 1), dropNa = true) != null) {
+            val appended = Array.fill(nModels)(new Array[Double](h))
             val preds = new Array[java.lang.Double](nModels)
             var step = 1
             while (step <= h) {
@@ -1747,10 +1707,10 @@ private[graft] object LocalLoop {
               val exog = s.exog(stepIdx)
               var mi = 0
               while (mi < nModels) {
-                val pred = scorers(mi)(features(new View(s.hist, 0, o + 1, appended(mi)),
+                val pred = scorers(mi)(features(new View(s.hist, 0, o + 1, appended(mi), step - 1),
                   s.ds(stepIdx), s.statics, exog))
                 preds(mi) = pred
-                appended(mi) += (if (pred == null) Double.NaN else pred.doubleValue)
+                appended(mi)(step - 1) = if (pred == null) Double.NaN else pred.doubleValue
                 mi += 1
               }
               step += 1

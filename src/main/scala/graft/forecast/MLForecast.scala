@@ -1019,17 +1019,23 @@ final case class FittedMLForecast(
         "cannot update target transforms with new series"))
     val enabled = checks.result()
     if (enabled.nonEmpty) {
-      // limit BEFORE the union: the message only needs 3 examples per
-      // check, and a multi-million-row invalid batch must raise the crisp
-      // error, not buffer every violation string into one aggregation group
+      // 3 examples per check, the historical message budget. A row_number
+      // window keyed by the check keeps them, not a limit: Spark names a
+      // codegen'd limit's counter from a JVM-wide sequence, so each update
+      // would compile classes that never hit the codegen cache. The
+      // window's partial group limit keeps 3 rows per check before its
+      // shuffle, so a multi-million-row invalid batch still raises the
+      // crisp error, and the aggregate reuses that shuffle.
       val tagged = enabled.map { case (tag, df, _) =>
-        df.limit(3).select(lit(tag).as("__check"),
+        df.select(lit(tag).as("__check"),
           concat_ws(", ",
             df.columns.map(c => col(s"`$c`").cast("string")): _*).as("__row"))
       }.reduce(_ unionByName _)
-      // 3 examples per check — the historical message budget
-      val bad = tagged.groupBy(col("__check"))
-        .agg(slice(collect_list(col("__row")), 1, 3).as("__rows"))
+      val byCheck = Window.partitionBy(col("__check")).orderBy(col("__row"))
+      val bad = tagged.withColumn("__n", row_number().over(byCheck))
+        .filter(col("__n") <= 3)
+        .groupBy(col("__check"))
+        .agg(collect_list(col("__row")).as("__rows"))
         .collect()
         .map(r => r.getString(0) -> r.getSeq[String](1)).toMap
       enabled.foreach { case (tag, _, msg) =>

@@ -316,7 +316,7 @@ object StreamingForecast {
         val tail = buf.takeRight(bound).toArray
         state.update(SeriesState(last, tail))
 
-        val appended = Array.fill(nModels)(new ArrayBuffer[Double](h))
+        val appended = Array.fill(nModels)(new Array[Double](h))
         (1 to h).iterator.map { s =>
           val stepDs = last + s * step
           val vals = new Array[Any](3 + nModels)
@@ -326,9 +326,9 @@ object StreamingForecast {
           val date = if (hasDates) java.sql.Date.valueOf(toLocalDate(stepDs)) else null
           var mi = 0
           while (mi < nModels) {
-            val pred = scorers(mi)(features(tail, appended(mi), date))
+            val pred = scorers(mi)(features(tail, appended(mi), s - 1, date))
             vals(3 + mi) = pred
-            appended(mi) += (if (pred == null) Double.NaN else pred.doubleValue)
+            appended(mi)(s - 1) = if (pred == null) Double.NaN else pred.doubleValue
             mi += 1
           }
           new org.apache.spark.sql.catalyst.expressions.GenericRow(vals): Row

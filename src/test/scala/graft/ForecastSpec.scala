@@ -942,6 +942,39 @@ class ForecastSpec extends SparkSpec {
     assert(preds.head.getAs[Double]("naive") == 2.0)
   }
 
+  test("update validation reports 3 examples per check through a plan without a limit") {
+    val p = seasonalPanel(14)
+    val fitted = MLForecast(Seq(Models.naive), Freq.IntFreq(1), FeatureSpec(lags = Seq(1)),
+      targetTransforms = Seq(Differences(Seq(1)))).fit(p)
+    val newSeries = (1 to 5).map(i => (s"n$i", 0L, 1.0)).toDF("unique_id", "ds", "y")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "__rows")) plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val err =
+      try intercept[IllegalArgumentException] { fitted.update(newSeries) }
+      finally {
+        org.apache.spark.sql.graft.bridge.waitForListeners(spark)
+        spark.listenerManager.unregister(listener)
+      }
+    assert(err.getMessage.startsWith("cannot update target transforms with new series; e.g. "))
+    val examples = err.getMessage.split("e\\.g\\. ", 2)(1).split("; ").toSeq
+    assert(examples.size == 3 && examples.toSet.subsetOf((1 to 5).map(i => s"n$i").toSet),
+      err.getMessage)
+    assert(plans.size == 1, "one validation action")
+    val limits = new graft.tools.PlanGuard(0L).nodes(plans.peek()).collect {
+      case n: org.apache.spark.sql.execution.LocalLimitExec => n.nodeName
+      case n: org.apache.spark.sql.execution.GlobalLimitExec => n.nodeName
+    }
+    assert(limits.isEmpty, s"validation plan holds ${limits.mkString(", ")}")
+  }
+
   test("save then load then predict equals in-memory predict") {
     // mirrors the reference round-trip (tests/test_core.py:2107)
     val p = seasonalPanel(35)

@@ -17,10 +17,12 @@ import graft.operators.FeatureSpec
   * and groupby buckets with numeric keys (NULL, NaN, fractional floats),
   * rolling and seasonal-rolling mean/std/min/max (some behind [[Offset]]),
   * staggered starts and ends, missing dates, single-series buckets, null
-  * targets inside the history, 1-8 input partitions, h from 1 to 7. A
-  * fixed seed and a bounded case count keep the run inside the Tier-1
-  * budget; shrinking is off, so a failure names the generated case as
-  * drawn.
+  * targets inside the history, 1-8 input partitions, h from 1 to 7. On
+  * gap-free panels whose pooled buckets are the series themselves, the
+  * per-step schedule also matches the one-job schedule of the same spec
+  * with local transforms. A fixed seed and a bounded case count keep the
+  * run inside the Tier-1 budget; shrinking is off, so a failure names the
+  * generated case as drawn.
   */
 class LockstepPropertySpec extends SparkSpec {
   import LockstepPropertySpec._
@@ -64,6 +66,32 @@ class LockstepPropertySpec extends SparkSpec {
       assert(kernel.size == c.nSeries * c.h, c)
       val diff = kernel.keySet.union(driver.keySet).filter(k => kernel.get(k) != driver.get(k))
       assert(diff.isEmpty, s"$c: ${diff.take(3).map(k => (k, kernel.get(k), driver.get(k)))}")
+    }
+  }
+
+  test("per-step schedule == one-job schedule when every pooled bucket is one series") {
+    check("groupby id", genCase(integer = true, gapFree = true), 6) { c =>
+      val p = panel(c)
+      val byId = Pooling(groupby = Seq("unique_id"))
+      val pooledSpec = spec(c, _ => byId)
+      val localSpec = spec(c, _ => Pooling())
+      // the echoes read per-series extremes, which stay integer-valued
+      val echoes = (sp: FeatureSpec) => sp.allTransforms.filter(t => extremum(t._2)).take(2)
+        .zipWithIndex.map { case ((l, t), i) => FeatureEcho(s"echo_$i", sp.nameOf(l, t)) }
+      def run(sp: FeatureSpec) = {
+        val models = Seq(Models.naive, Models.seasonalNaive(2)) ++ echoes(sp)
+        val conf = MLForecast(models, Freq.Day, sp, staticFeatures = Seq("grp"))
+        val fitted = conf.fit(p)
+        assert(LocalLoop.fusesPredict(conf, fitted.transformedPanel, fitted.trained, Nil, None), c)
+        forecasts(fitted.predict(c.h), models.map(_.name))
+      }
+      assert(pooledSpec.allTransforms.exists(!_._2.pooling.isLocal), c)
+      assert(localSpec.allTransforms.forall(_._2.pooling.isLocal), c)
+      val perStep = run(pooledSpec)
+      val oneJob = run(localSpec)
+      assert(perStep.size == c.nSeries * c.h, c)
+      val diff = perStep.keySet.union(oneJob.keySet).filter(k => perStep.get(k) != oneJob.get(k))
+      assert(diff.isEmpty, s"$c: ${diff.take(3).map(k => (k, perStep.get(k), oneJob.get(k)))}")
     }
   }
 
@@ -146,7 +174,8 @@ object LockstepPropertySpec {
       }
       // a few missing dates: the bucket calendars then have entries that
       // some of their series lack
-      (start until start + len).filter(t => t == start || rnd.nextDouble() >= 0.06).map { t =>
+      (start until start + len)
+          .filter(t => c.gapFree || t == start || rnd.nextDouble() >= 0.06).map { t =>
         val y: java.lang.Double =
           if (rnd.nextDouble() < 0.08) null
           else if (c.integer) rnd.nextInt(21).toDouble
@@ -162,11 +191,13 @@ object LockstepPropertySpec {
   }
 
   /** Lags 1 and 2, the case's pooled transforms and, with `expanding`, a
-    * local expanding mean.
+    * local expanding mean. `pooling` gives each pooled transform its
+    * pooling (by default its global or `grp` bucket).
     */
-  def spec(c: Case): FeatureSpec = {
+  def spec(c: Case, pooling: PooledT => Pooling = t =>
+      if (t.global) Pooling(global = true) else Pooling(groupby = Seq("grp"))): FeatureSpec = {
     val pooled = c.pooled.map { t =>
-      val pl = if (t.global) Pooling(global = true) else Pooling(groupby = Seq("grp"))
+      val pl = pooling(t)
       val inner: LagTransform = t.kind match {
         case 0 => RollingMean(t.w, t.ms, pl)
         case 1 => RollingStd(t.w, t.ms, pl)
@@ -211,10 +242,10 @@ object LockstepPropertySpec {
   final case class PooledT(lag: Int, kind: Int, w: Int, ms: Option[Int], global: Boolean,
                            season: Int, offset: Int)
 
-  /** One generated panel and spec. */
+  /** One generated panel and spec; `gapFree` panels miss no dates. */
   final case class Case(seed: Long, integer: Boolean, nullKeys: Boolean, nBuckets: Int,
                         nSeries: Int, nParts: Int, h: Int, pooled: Seq[PooledT],
-                        expanding: Boolean)
+                        expanding: Boolean, gapFree: Boolean = false)
 
   /** A pooled min or max: integer-valued over integer targets. */
   def extremum(t: LagTransform): Boolean = t match {
@@ -236,7 +267,7 @@ object LockstepPropertySpec {
   /** Integer cases carry NULL/NaN keys; linear-regression cases train on
     * the key as a static feature, so theirs are finite.
     */
-  def genCase(integer: Boolean): Gen[Case] = for {
+  def genCase(integer: Boolean, gapFree: Boolean = false): Gen[Case] = for {
     seed <- Gen.choose(0L, 1L << 40)
     nBuckets <- Gen.choose(1, 3)
     nSeries <- Gen.choose(2, 6)
@@ -245,5 +276,6 @@ object LockstepPropertySpec {
     n <- Gen.choose(1, 3)
     pooled <- Gen.listOfN(n, genPooled)
     expanding <- Gen.oneOf(true, false)
-  } yield Case(seed, integer, nullKeys = integer, nBuckets, nSeries, nParts, h, pooled, expanding)
+  } yield Case(seed, integer, nullKeys = integer, nBuckets, nSeries, nParts, h, pooled, expanding,
+    gapFree)
 }
